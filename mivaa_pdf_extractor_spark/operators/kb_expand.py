@@ -170,7 +170,10 @@ def expand_chunk_hits(hits: DataFrame, chunks: DataFrame, *,
         x = track(x)
         # join the KEPT neighbours' texts back by chunk_id (few per
         # hit — their lengths sum to <= char_budget-ish counts, vs the
-        # full neighbour fan-out the old plan shuffled)
+        # full neighbour fan-out the old plan shuffled). Duplicate hit
+        # rows of one chunk_id collect the same kept parts twice;
+        # array_distinct drops the copies (a hit's parts are unique per
+        # (ro, nid)) without the shuffle a distinct() would add
         kept_rows = (x.select(F.col("chunk_id").alias("_kcid"),
                               F.explode("_kept").alias("_k"))
                      .select("_kcid", F.col("_k.ro").alias("_kro"),
@@ -179,10 +182,10 @@ def expand_chunk_hits(hits: DataFrame, chunks: DataFrame, *,
                   .join(corpus.select("_nid", "_ntext"),
                         F.col("_knid") == F.col("_nid"), "inner")
                   .groupBy(F.col("_kcid").alias("chunk_id"))
-                  .agg(F.collect_list(F.struct(
+                  .agg(F.array_distinct(F.collect_list(F.struct(
                       F.col("_kro").alias("ro"),
                       F.col("_knid").alias("nid"),
-                      F.col("_ntext").alias("text")))
+                      F.col("_ntext").alias("text"))))
                       .alias("_kparts")))
         x = x.join(kparts, "chunk_id", "left")
     else:

@@ -21,12 +21,17 @@ At cluster scale this bounds task size by page bucket, not by document: one
 materializes the whole document until the final (columnar, JVM-side)
 concatenation.
 
-The giant subset is deliberately NOT persisted before fan-out: the
-downstream subplans (failure scan, media-dedup window, heading histogram,
-page buckets) re-derive the explode from the columnar source scan, which
-benchmarks ~2x faster end-to-end than an InMemoryRelation at high
-parallelism (cache build + block-manager contention + GC outweigh three
-codegen'd re-scans).
+The giant subset (the DOC rows above the threshold) is persisted through
+``core.cache.track`` before fan-out, so the failure scan, the ``has_sheets``
+probe and the exploded subplans read it from cache instead of re-scanning
+the full corpus; ``run_pipeline`` and the streaming batch release it with
+``cache_scope()``. Measured at local[4] on a 6k-doc normal corpus, the
+median wall was 1.75 s with the persist and 2.05 s without. The *exploded*
+span rows are NOT persisted (see ``_extract_giant``).
+
+The eager ``has_sheets`` probe must stay: always building the sheet-context
+subplan measured 3.92 s against 2.49 s on a resumed 1k-doc pipeline with
+three giants, and 1.72 s against 1.47 s on the 6k-doc normal corpus.
 """
 
 from __future__ import annotations
@@ -35,9 +40,9 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F, types as T
-from pyspark.storagelevel import StorageLevel
 
 from ..core import constants as C
+from ..core.cache import track
 from ..core.kinds import FLOAT_ATTR_PATTERN, INT_ATTR_PATTERN, attr_regex
 from .extract import (OUTPUT_SCHEMA, SPAN_OUT_STRUCT, parse_attrs,
                       process_flat, remap_spreads, run_extract)
@@ -147,7 +152,7 @@ def _extract_giant(giant: DataFrame,
     # persisted: a span-level InMemoryRelation measured 2x slower at 32
     # threads (cache build + block-manager contention + GC) than
     # re-exploding the cached doc rows.
-    giant = giant.persist(StorageLevel.MEMORY_AND_DISK)
+    giant = track(giant)
     giant_ids = giant.select("doc_id")
 
     exploded = (

@@ -24,6 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core import constants as C
+from ..core.cache import cache_scope
 from ..operators.skew import run_extract_skewed
 from ..sources.tables_io import Catalog
 
@@ -69,6 +70,8 @@ def doc_bytes(spans_col: str = "spans") -> F.Column:
                                         F.lit(0)).cast("long"))
 
 
+# operator-internal persists (the giant subset) are released on return
+@cache_scope()
 def run_pipeline(
     spark: SparkSession,
     documents: DataFrame,

@@ -35,20 +35,23 @@ dirs pinned — ``read(name, version=N)`` / ``versions(name)`` give
 Iceberg-style time travel, and expiry past the window is a loud error
 (the ``expire_snapshots`` analogue).
 
-Legacy layouts (the round-2 ``v<N>`` + ``_VERSION`` pointer, and the plain
-root-level append log) are migrated on first write: their rows are folded
-into bucketed v1 and the orphan root/v* files are removed (ADVICE r3: they
-previously leaked forever).
+Writers serialize per table through ``writer_lock``: an exclusive
+``fcntl.flock`` on the table's ``_LOCK`` file, held from the manifest read
+to the manifest swap. The kernel releases a flock when its holder exits
+or dies, so a crashed writer never blocks the next one. flock arbitrates
+between processes on ONE host only; multi-host writers take the Iceberg
+path, whose catalog commit does the arbitration.
 """
 
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import shutil
 import time
-import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -74,6 +77,37 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+@contextlib.contextmanager
+def writer_lock(root: str, timeout: float = 120.0):
+    """Hold the exclusive writer lock of the table stored at ``root``.
+
+    An ``fcntl.flock(LOCK_EX)`` on ``root/_LOCK``, polled with ``LOCK_NB``
+    until ``timeout`` seconds, then ``TimeoutError``. The file is never
+    deleted: closing the descriptor releases the lock, and the kernel
+    closes it when the holder process dies, so a crashed holder frees the
+    table at once. Each acquire opens its own descriptor, so two acquires
+    in one process also exclude each other. The lock covers writers on
+    one host; multi-host writers take the Iceberg path."""
+    os.makedirs(root, exist_ok=True)
+    path = os.path.join(root, "_LOCK")
+    fd = os.open(path, os.O_CREAT | os.O_RDWR)
+    try:
+        deadline = time.monotonic() + timeout
+        while True:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                if time.monotonic() >= deadline:
+                    raise TimeoutError(
+                        f"writer lock {path} not released within "
+                        f"{timeout}s") from None
+                time.sleep(0.05)
+        yield
+    finally:
+        os.close(fd)
+
+
 class Catalog:
     """Warehouse of named tables, Iceberg when available, bucketed parquet
     with an atomic manifest otherwise (see module docstring).
@@ -83,19 +117,18 @@ class Catalog:
     GB and an incremental upsert touches a handful of them.
 
     Concurrency model: readers never lock — the atomic manifest swap
-    means they always see a complete generation. WRITERS serialize per
-    table through an ``O_CREAT|O_EXCL`` lock file (``_LOCK``) held
-    across the read-manifest -> stage -> swap critical section — the
-    local-filesystem equivalent of Iceberg's optimistic catalog commit
-    (HadoopCatalog arbitrates the same way, via atomic rename). Without
-    it, two concurrent writers would each base their new manifest on
-    the same parent and the second ``os.replace`` would silently drop
-    the first writer's bucket additions (and GC its data dirs). A lock
-    older than ``LOCK_STALE_SEC`` is presumed crashed and stolen.
-    Exercised by tests/test_concurrent_writers.py with two separate
-    Spark-driver processes."""
-
-    LOCK_STALE_SEC = 600.0
+    means they always see a complete generation. Parquet WRITERS hold the
+    table's ``writer_lock`` (a kernel ``flock`` on ``_LOCK``) across the
+    read-manifest -> stage -> swap critical section and commit through
+    ``_commit`` — the local-filesystem equivalent of Iceberg's catalog
+    commit. Without it, two concurrent writers would each base their new
+    manifest on the same parent and the second ``os.replace`` would
+    silently drop the first writer's bucket additions (and GC its data
+    dirs). The kernel drops the lock of a holder that dies, so a crashed
+    writer never blocks the next one. The lock covers one host;
+    multi-host writers take the Iceberg path. Exercised by
+    tests/test_concurrent_writers.py with two separate Spark-driver
+    processes and a killed holder."""
 
     def __init__(self, spark: SparkSession, warehouse: str,
                  prefer_iceberg: bool = True, num_buckets: int = 16,
@@ -112,98 +145,8 @@ class Catalog:
     def _path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
 
-    @contextlib.contextmanager
-    def _table_lock(self, name: str, timeout: float = 120.0):
-        """Serialize the read-manifest -> stage -> swap critical section
-        across writer PROCESSES (see class docstring).
-
-        Round 6 (ADVICE r5 #1): the old steal path ``unlink``-ed a lock
-        judged stale, so two waiters could both judge it stale, waiter A
-        unlink+re-acquire, and waiter B's queued unlink then delete A's
-        FRESH lock — two writers in the critical section. And the old
-        release path unlinked unconditionally, so a healthy holder whose
-        stage outlived ``LOCK_STALE_SEC`` (big bucket rewrite) would,
-        after being stolen from, remove the THIEF's lock and cascade.
-        Now: every lock carries a unique ``pid:uuid`` token; stealing
-        atomically RENAMES the lock to a unique grave name (only one
-        waiter's rename can succeed) and verifies the grave still holds
-        the token it observed as stale — a fresh lock renamed by
-        mistake is restored; release unlinks only if the lock still
-        holds our own token. Residual: the restore/release windows are
-        a few syscalls wide and require the lock to be *already past
-        expiry* in that same instant — vs the old guaranteed cascade on
-        any expiry. A holder expecting stages longer than
-        ``LOCK_STALE_SEC`` should touch the lock mtime between stages
-        (none of the in-repo stages approach it)."""
-        if self.use_iceberg:
-            yield
-            return
-        root = self._path(name)
-        os.makedirs(root, exist_ok=True)
-        lock = os.path.join(root, "_LOCK")
-        token = f"{os.getpid()}:{uuid.uuid4().hex}"
-        deadline = time.time() + timeout
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, token.encode())
-                os.close(fd)
-                break
-            except FileExistsError:
-                try:
-                    age = time.time() - os.path.getmtime(lock)
-                    with open(lock) as f:
-                        seen = f.read()
-                except OSError:
-                    continue  # holder released between exists and stat
-                if age > self.LOCK_STALE_SEC:
-                    # presumed-crashed holder: steal by atomic rename —
-                    # exactly one contending waiter's rename succeeds
-                    grave = f"{lock}.steal.{uuid.uuid4().hex[:12]}"
-                    try:
-                        os.rename(lock, grave)
-                    except OSError:
-                        continue  # another waiter stole first
-                    try:
-                        with open(grave) as f:
-                            stolen = f.read()
-                    except OSError:
-                        stolen = None
-                    if stolen != seen:
-                        # the holder released and someone re-acquired
-                        # between our stat and the rename: that lock is
-                        # FRESH — put it back (best effort)
-                        with contextlib.suppress(OSError):
-                            os.rename(grave, lock)
-                        continue
-                    with contextlib.suppress(OSError):
-                        os.unlink(grave)
-                    continue  # re-try the O_EXCL acquire
-                if time.time() > deadline:
-                    raise TimeoutError(
-                        f"writer lock on table {name!r} not released "
-                        f"within {timeout}s ({lock})")
-                time.sleep(0.05)
-        try:
-            yield
-        finally:
-            # release only OUR lock: if it went stale mid-stage and a
-            # thief replaced it, leave the thief's lock alone
-            try:
-                with open(lock) as f:
-                    mine = f.read() == token
-            except OSError:
-                mine = False
-            if mine:
-                with contextlib.suppress(OSError):
-                    os.unlink(lock)
-
     def _manifest(self, name: str) -> dict | None:
-        p = os.path.join(self._path(name), "_MANIFEST")
-        if os.path.isfile(p):
-            with open(p) as f:
-                return json.load(f)
-        return None
+        return self._read_json(os.path.join(self._path(name), "_MANIFEST"))
 
     def _swap_manifest(self, name: str, manifest: dict) -> None:
         """Atomically publish ``manifest``; keep the outgoing one as
@@ -247,13 +190,6 @@ class Catalog:
             full = os.path.join(root, d)
             if d.startswith("b") and os.path.isdir(full) and d not in live:
                 shutil.rmtree(full, ignore_errors=True)
-        # legacy remnants (pre-manifest layouts) are scrubbed only AFTER a
-        # manifest is durably published: a crash anywhere earlier leaves the
-        # legacy table intact and readable, and a crash after the swap
-        # leaves remnants that the NEXT successful swap removes — this also
-        # covers overwrite() straight over a legacy layout
-        if self._legacy_path(name) is not None:
-            self._scrub_legacy(name)
 
     def _snapshot_versions(self, name: str) -> list[int]:
         root = self._path(name)
@@ -275,36 +211,6 @@ class Catalog:
                 return json.load(f)
         return None
 
-    # ------------------------------------------------- legacy-layout shims
-
-    def _legacy_path(self, name: str) -> str | None:
-        """Data path of a pre-manifest table (``v<N>`` pointer layout or a
-        plain root-level append log), or None."""
-        root = self._path(name)
-        ptr = os.path.join(root, "_VERSION")
-        if os.path.isfile(ptr):
-            with open(ptr) as f:
-                return os.path.join(root, f.read().strip())
-        if os.path.isdir(root) and any(
-                f.endswith(".parquet") for f in os.listdir(root)):
-            return root
-        return None
-
-    def _scrub_legacy(self, name: str) -> None:
-        """Remove pre-manifest files after migration — the old pointer, its
-        ``v*`` dirs, and root-level part files (previously orphaned
-        forever, ADVICE r3)."""
-        root = self._path(name)
-        for d in list(os.listdir(root)):
-            full = os.path.join(root, d)
-            if d == "_VERSION" or (d.startswith("v") and os.path.isdir(full)):
-                shutil.rmtree(full, ignore_errors=True) \
-                    if os.path.isdir(full) else os.remove(full)
-            elif os.path.isfile(full) and (
-                    d.endswith(".parquet") or d.endswith(".crc")
-                    or d.startswith("_SUCCESS") or d.startswith("part-")):
-                os.remove(full)
-
     # --------------------------------------------------------- primitives
 
     def _bucket_key(self, df: DataFrame, key: str | None) -> str | None:
@@ -314,8 +220,7 @@ class Catalog:
         so a later keyed merge knows bucket pruning is unsound on it."""
         return key if key is not None and key in df.columns else None
 
-    def _bucket_col(self, df: DataFrame, key: str | None,
-                    num_buckets: int | None = None):
+    def _bucket_col(self, df: DataFrame, key: str | None, num_buckets: int):
         """Bucket id expression. ``num_buckets`` must be the TABLE's
         established bucket count (its manifest value) for any write into
         an existing table — a Catalog instance constructed with a
@@ -323,8 +228,7 @@ class Catalog:
         inconsistently and break pruned merges."""
         cols = [F.col(key)] if key is not None else [
             F.col(c) for c in df.columns]
-        return F.pmod(F.hash(*cols),
-                      F.lit(num_buckets or self.num_buckets))
+        return F.pmod(F.hash(*cols), F.lit(num_buckets))
 
     def _merged_schema(self, old_json: str, df: DataFrame) -> T.StructType:
         old = T.StructType.fromJson(json.loads(old_json))
@@ -336,13 +240,11 @@ class Catalog:
                                      allowMissingColumns=True).schema
 
     def _stage_buckets(self, df: DataFrame, name: str, key: str | None,
-                       gen: int,
-                       num_buckets: int | None = None) -> dict[int, str]:
+                       gen: int, num_buckets: int) -> dict[int, str]:
         """One Spark job: write ``df`` hash-partitioned by bucket into a
         staging dir, then rename each bucket's output into place as
         ``b<i>_g<gen>``. Returns {bucket: dirname}."""
         root = self._path(name)
-        os.makedirs(root, exist_ok=True)
         stage = os.path.join(root, f"_stage_g{gen}")
         (df.withColumn("__bucket", self._bucket_col(df, key, num_buckets))
            .write.mode("overwrite").partitionBy("__bucket").parquet(stage))
@@ -365,31 +267,29 @@ class Catalog:
         shutil.rmtree(stage, ignore_errors=True)
         return out
 
-    def _init_table(self, df: DataFrame, name: str, key: str,
-                    delete_keys: DataFrame | None = None) -> None:
-        """First bucketed write — folds in any legacy-layout rows (minus
-        ``delete_keys``, so a merge-over-legacy keeps merge semantics),
-        then scrubs the legacy files."""
-        legacy = self._legacy_path(name)
-        if legacy is not None:
-            old = self.spark.read.parquet(legacy)
-            if delete_keys is not None:
-                old = old.join(delete_keys, key, "left_anti")
-            df = old.unionByName(df, allowMissingColumns=True)
-        eff_key = self._bucket_key(df, key)
-        staged = self._stage_buckets(df, name, eff_key, gen=1)
-        manifest = {
-            "version": 1, "key": eff_key, "num_buckets": self.num_buckets,
-            "schema": json.dumps(df.schema.jsonValue()),
-            "buckets": {str(b): [d] for b, d in staged.items()},
-        }
-        # _swap_manifest scrubs the legacy files AFTER the manifest is
-        # durably published — scrubbing first would destroy the table's
-        # only copy if the process died between scrub and swap
-        self._swap_manifest(name, manifest)
+    def _commit(self, name: str, m: dict | None, df: DataFrame,
+                key: str | None, schema: T.StructType, num_buckets: int,
+                replace: Iterable[int] = ()) -> None:
+        """The one parquet write path; the caller holds ``writer_lock``
+        and read ``m`` (the current manifest, None for a new table) under
+        it. Stages ``df`` as generation ``m.version + 1``, empties the
+        ``replace`` buckets, appends each staged dir to its bucket's list
+        and swaps in the new manifest."""
+        gen = m["version"] + 1 if m else 1
+        buckets = dict(m["buckets"]) if m else {}
+        for b in replace:
+            buckets[str(b)] = []
+        for b, d in self._stage_buckets(df, name, key, gen,
+                                        num_buckets).items():
+            buckets[str(b)] = buckets.get(str(b), []) + [d]
+        self._swap_manifest(name, {
+            "version": gen, "key": key, "num_buckets": num_buckets,
+            "schema": json.dumps(schema.jsonValue()),
+            "buckets": {b: dl for b, dl in buckets.items() if dl},
+        })
 
     def _touched_buckets(self, keys_df: DataFrame, key: str,
-                         num_buckets: int | None = None) -> list[int]:
+                         num_buckets: int) -> list[int]:
         rows = (keys_df.select(
             self._bucket_col(keys_df, key, num_buckets).alias("b"))
             .distinct().collect())
@@ -412,8 +312,7 @@ class Catalog:
     def exists(self, name: str) -> bool:
         if self.use_iceberg:
             return self.spark.catalog.tableExists(f"local.db.{name}")
-        return (self._manifest(name) is not None
-                or self._legacy_path(name) is not None)
+        return self._manifest(name) is not None
 
     def versions(self, name: str) -> list[int]:
         """Readable snapshot versions, oldest first (time-travel window:
@@ -432,32 +331,22 @@ class Catalog:
                 r = r.option("snapshot-id", version)
             return r.load(f"local.db.{name}")
         m = self._manifest(name)
-        if version is not None:
+        if version is not None and (m is None or version != m["version"]):
             # time travel: an expired snapshot is a loud error listing
             # what IS readable (Iceberg's snapshot-expired semantics)
-            if m is not None and version == m["version"]:
-                pass  # current generation — _MANIFEST is authoritative
-            else:
-                vm = self._read_json(os.path.join(
-                    self._path(name), f"_MANIFEST.v{version}"))
-                if vm is None:
-                    # ADVICE r5 #4: a table that does not exist AT ALL
-                    # is 'table missing' (FileNotFoundError, like the
-                    # unversioned path), not 'snapshot expired'
-                    if (m is None and not self._snapshot_versions(name)
-                            and self._legacy_path(name) is None):
-                        raise FileNotFoundError(
-                            f"table {name} does not exist")
-                    raise ValueError(
-                        f"table {name} has no readable snapshot "
-                        f"v{version}; retained: "
-                        f"{self._snapshot_versions(name)}")
-                m = vm
+            vm = self._read_json(os.path.join(
+                self._path(name), f"_MANIFEST.v{version}"))
+            retained = self._snapshot_versions(name)
+            # ADVICE r5 #4: a table that does not exist AT ALL falls
+            # through to 'table missing' (FileNotFoundError, like the
+            # unversioned path), not 'snapshot expired'
+            if vm is None and (m is not None or retained):
+                raise ValueError(
+                    f"table {name} has no readable snapshot "
+                    f"v{version}; retained: {retained}")
+            m = vm
         if m is None:
-            legacy = self._legacy_path(name)
-            if legacy is None:
-                raise FileNotFoundError(f"table {name} does not exist")
-            return self.spark.read.parquet(legacy)
+            raise FileNotFoundError(f"table {name} does not exist")
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         root = self._path(name)
         dirs = [os.path.join(root, d)
@@ -475,45 +364,29 @@ class Catalog:
         if self.use_iceberg:
             df.writeTo(f"local.db.{name}").append()
             return
-        with self._table_lock(name):
+        with writer_lock(self._path(name)):
             m = self._manifest(name)
             if m is None:
-                self._init_table(df, name, key)
+                self._commit(name, None, df, self._bucket_key(df, key),
+                             df.schema, self.num_buckets)
                 return
             # bucket by the table's established key; if these rows lack
             # it the table degrades to unkeyed (a later keyed merge then
             # rewrites fully rather than pruning buckets unsoundly)
-            eff_key = self._bucket_key(df, m["key"])
-            gen = m["version"] + 1
-            staged = self._stage_buckets(df, name, eff_key, gen,
-                                         m["num_buckets"])
-            buckets = dict(m["buckets"])
-            for b, d in staged.items():
-                buckets[str(b)] = buckets.get(str(b), []) + [d]
-            self._swap_manifest(name, {
-                "version": gen, "key": eff_key,
-                "num_buckets": m["num_buckets"],
-                "schema": json.dumps(
-                    self._merged_schema(m["schema"], df).jsonValue()),
-                "buckets": buckets,
-            })
+            self._commit(name, m, df, self._bucket_key(df, m["key"]),
+                         self._merged_schema(m["schema"], df),
+                         m["num_buckets"])
 
     def overwrite(self, df: DataFrame, name: str,
                   key: str = "doc_id") -> None:
         if self.use_iceberg:
             df.writeTo(f"local.db.{name}").createOrReplace()
             return
-        with self._table_lock(name):
+        with writer_lock(self._path(name)):
             m = self._manifest(name)
-            gen = (m["version"] + 1) if m else 1
-            eff_key = self._bucket_key(df, key)
-            staged = self._stage_buckets(df, name, eff_key, gen)
-            self._swap_manifest(name, {
-                "version": gen, "key": eff_key,
-                "num_buckets": self.num_buckets,
-                "schema": json.dumps(df.schema.jsonValue()),
-                "buckets": {str(b): [d] for b, d in staged.items()},
-            })
+            self._commit(name, m, df, self._bucket_key(df, key), df.schema,
+                         self.num_buckets,
+                         replace=[int(b) for b in m["buckets"]] if m else [])
 
     def upsert(self, df: DataFrame, name: str, key: str = "doc_id") -> None:
         """Row-level upsert keyed on ``key`` — Iceberg MERGE INTO when the
@@ -532,7 +405,7 @@ class Catalog:
             df.createOrReplaceTempView("__updates")
             self.spark.sql(merge_into_sql(table, key))
             return
-        self._merge_buckets(df, name, key, delete_keys=None)
+        self._merge(df, name, key, delete_keys=None)
 
     def replace_namespace(self, df: DataFrame, name: str,
                           key: str = "doc_id",
@@ -561,7 +434,7 @@ class Catalog:
                 f"(SELECT {key} FROM __ns_keys)")
             df.writeTo(table).append()
             return
-        self._merge_buckets(df, name, key, delete_keys=delete_keys)
+        self._merge(df, name, key, delete_keys=delete_keys)
 
     def compact(self, name: str, max_dirs_per_bucket: int = 1) -> int:
         """Rewrite buckets whose dir-list has grown past
@@ -571,7 +444,7 @@ class Catalog:
         many were compacted. No-op on Iceberg (the runtime compacts)."""
         if self.use_iceberg:
             return 0
-        with self._table_lock(name):
+        with writer_lock(self._path(name)):
             m = self._manifest(name)
             if m is None:
                 return 0
@@ -579,99 +452,74 @@ class Catalog:
                    if len(dl) > max_dirs_per_bucket]
             if not fat:
                 return 0
-            old = self._read_buckets(name, m, fat)
-            gen = m["version"] + 1
-            staged = self._stage_buckets(old, name, m["key"], gen,
-                                         m["num_buckets"])
-            buckets = dict(m["buckets"])
-            for b in fat:
-                buckets[str(b)] = []
             # unkeyed tables re-hash rows on the manifest's column order,
             # which can differ from the order at original write time and
-            # move rows to buckets OUTSIDE `fat` — extend those buckets'
-            # dir lists instead of dropping the staged dirs (keyed tables
-            # always stage within `fat`, where this reduces to the plain
-            # [d] replacement)
-            for b, d in staged.items():
-                buckets[str(b)] = buckets.get(str(b), []) + [d]
-            self._swap_manifest(name, {
-                "version": gen, "key": m["key"],
-                "num_buckets": m["num_buckets"], "schema": m["schema"],
-                "buckets": buckets,
-            })
+            # move rows to buckets OUTSIDE `fat` — _commit extends those
+            # buckets' dir lists rather than dropping the staged dirs
+            self._commit(name, m, self._read_buckets(name, m, fat),
+                         m["key"],
+                         T.StructType.fromJson(json.loads(m["schema"])),
+                         m["num_buckets"], replace=fat)
             return len(fat)
 
-    # -------------------------------------------------- merge (parquet)
-
-    def _merge_buckets(self, df: DataFrame, name: str, key: str,
-                       delete_keys: DataFrame | None) -> None:
-        with self._table_lock(name):
-            self._merge_buckets_locked(df, name, key, delete_keys)
-
-    def _merge_buckets_locked(self, df: DataFrame, name: str, key: str,
-                              delete_keys: DataFrame | None) -> None:
-        m = self._manifest(name)
-        if m is None:
+    def _merge(self, df: DataFrame, name: str, key: str,
+               delete_keys: DataFrame | None) -> None:
+        """Parquet ``upsert`` / ``replace_namespace``: rewrite the touched
+        buckets as (old rows minus the deleted keys) + ``df``."""
+        with writer_lock(self._path(name)):
+            m = self._manifest(name)
+            if m is None:
+                self._commit(name, None, df, self._bucket_key(df, key),
+                             df.schema, self.num_buckets)
+                return
+            # the update subtree is evaluated up to three times
+            # (touched-bucket collect, anti-join build, union write) —
+            # persist it so an expensive upstream plan (full extraction)
+            # runs once. Only unpersist what THIS call persisted: a caller
+            # sharing one persisted frame across sinks (the streaming
+            # path) must not lose its cache
+            df_persisted = not df.is_cached
+            if df_persisted:
+                df = df.persist()
             keys = (delete_keys if delete_keys is not None
                     else df.select(key)).select(key).distinct()
-            self._init_table(df, name, key, delete_keys=keys)
-            return
-        # the update subtree is evaluated up to three times (touched-bucket
-        # collect, anti-join build, union write) — persist it so an
-        # expensive upstream plan (full extraction) runs once. Only
-        # unpersist what THIS call persisted: a caller sharing one persisted
-        # frame across sinks (the streaming path) must not lose its cache
-        df_persisted = not df.is_cached
-        if df_persisted:
-            df = df.persist()
-        keys = (delete_keys if delete_keys is not None
-                else df.select(key)).select(key).distinct()
-        keys_persisted = delete_keys is not None and not keys.is_cached
-        if keys_persisted:
-            keys = keys.persist()
-        try:
-            if m["key"] == key:
-                # bucket-pruned path: only buckets holding update keys are
-                # read and rewritten. `touched` must cover BOTH the delete
-                # keys and the incoming rows' keys — with an explicit
-                # delete_keys that misses a df key, staging would otherwise
-                # wholesale-replace an unread bucket's dir list (data loss)
-                touched_set = set(self._touched_buckets(
-                    keys, key, m["num_buckets"]))
-                if delete_keys is not None:
-                    touched_set |= set(self._touched_buckets(
-                        df.select(key).distinct(), key, m["num_buckets"]))
-                touched = sorted(touched_set)
-                if not touched:
-                    return
-                old = self._read_buckets(name, m, touched)
-            else:
-                # table was bucketed by a different (or no) key — pruning
-                # would be unsound; merge re-keys the whole table once
-                touched = sorted(int(b) for b in m["buckets"])
-                old = self._read_buckets(name, m, touched)
-            merged = df
-            if old is not None:
-                kept = old.join(keys, key, "left_anti")
-                merged = kept.unionByName(df, allowMissingColumns=True)
-            gen = m["version"] + 1
-            staged = self._stage_buckets(merged, name, key, gen,
-                                         m["num_buckets"])
-            buckets = dict(m["buckets"])
-            for b in touched:
-                # empty result for a touched bucket = all its rows deleted
-                buckets[str(b)] = []
-            for b, d in staged.items():
-                buckets[str(b)] = [d]
-            self._swap_manifest(name, {
-                "version": gen, "key": key,
-                "num_buckets": m["num_buckets"],
-                "schema": json.dumps(
-                    self._merged_schema(m["schema"], df).jsonValue()),
-                "buckets": buckets,
-            })
-        finally:
-            if df_persisted:
-                df.unpersist()
+            keys_persisted = delete_keys is not None and not keys.is_cached
             if keys_persisted:
-                keys.unpersist()
+                keys = keys.persist()
+            try:
+                if m["key"] == key:
+                    # bucket-pruned path: only buckets holding update keys
+                    # are read and rewritten. `touched` must cover BOTH the
+                    # delete keys and the incoming rows' keys — with an
+                    # explicit delete_keys that misses a df key, the staged
+                    # dir would otherwise replace an unread bucket's dir
+                    # list (data loss)
+                    touched_set = set(self._touched_buckets(
+                        keys, key, m["num_buckets"]))
+                    if delete_keys is not None:
+                        touched_set |= set(self._touched_buckets(
+                            df.select(key).distinct(), key,
+                            m["num_buckets"]))
+                    touched = sorted(touched_set)
+                    if not touched:
+                        return
+                else:
+                    # table was bucketed by a different (or no) key —
+                    # pruning would be unsound; merge re-keys the whole
+                    # table once
+                    touched = sorted(int(b) for b in m["buckets"])
+                merged = df
+                old = self._read_buckets(name, m, touched)
+                if old is not None:
+                    kept = old.join(keys, key, "left_anti")
+                    merged = kept.unionByName(df, allowMissingColumns=True)
+                # a touched bucket with no staged rows had all its rows
+                # deleted: _commit leaves it empty
+                self._commit(name, m, merged, key,
+                             self._merged_schema(m["schema"], df),
+                             m["num_buckets"], replace=touched)
+            finally:
+                if df_persisted:
+                    df.unpersist()
+                if keys_persisted:
+                    keys.unpersist()

@@ -7,8 +7,12 @@ resume + bounded fan-out; the natural Spark expression is a
 
 - new files under the source path are discovered exactly once
   (checkpointLocation tracks consumed files — ingest-level resume),
-- within each micro-batch the pipeline's checkpoint anti-join still applies
-  (doc-level resume, retryable statuses),
+- each micro-batch runs ``run_extract_skewed`` over ALL of its documents
+  and upserts the result into ``extracted`` keyed on doc_id (plus, with
+  ``index_chunks``, the batch's chunk namespaces). Unlike ``run_pipeline``
+  it applies no checkpoint anti-join, no size gate, and writes neither
+  ``lineage`` nor ``checkpoints``: a re-delivered document is re-extracted
+  and replaces its row,
 - watermarks/session windows are deliberately absent: the reference has no
   event-time semantics (SURVEY.md §2.10 X3).
 """
@@ -18,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..core import constants as C
+from ..core.cache import cache_scope, track
 from ..operators.skew import run_extract_skewed
 from ..sources.synthetic import INPUT_SCHEMA
 from ..sources.tables_io import Catalog
@@ -45,6 +50,9 @@ def run_incremental(
         .parquet(source_path)
     )
 
+    # each batch's persists (the giant subset, the shared extraction)
+    # are released when the batch returns
+    @cache_scope()
     def process_batch(batch_df, batch_id: int) -> None:
         from pyspark.sql import functions as F
         extracted = (
@@ -55,25 +63,20 @@ def run_incremental(
         )
         if index_chunks:
             # both sinks consume the extraction output — run it once
-            extracted = extracted.persist()
-        try:
-            # upsert, not append: the batch pipeline keys `extracted` on
-            # doc_id (one row per doc, no read-side compaction) — the
-            # streaming sink must preserve that invariant, and
-            # re-deliveries of a doc replace rather than duplicate
-            catalog.upsert(extracted, EXTRACTED_TABLE, key="doc_id")
-            if index_chunks:
-                from ..plans.chunk_pipeline import CHUNKS_TABLE, build_chunks
-                chunks = build_chunks(extracted,
-                                      max_size=chunk_max_size)
-                # delete-set = the batch's docs, not the produced chunks:
-                # a doc re-delivered as failed/empty must shed stale rows
-                catalog.replace_namespace(
-                    chunks, CHUNKS_TABLE, key="doc_id",
-                    delete_keys=extracted.select("doc_id").distinct())
-        finally:
-            if index_chunks:
-                extracted.unpersist()
+            extracted = track(extracted)
+        # upsert, not append: the batch pipeline keys `extracted` on
+        # doc_id (one row per doc, no read-side compaction) — the
+        # streaming sink must preserve that invariant, and
+        # re-deliveries of a doc replace rather than duplicate
+        catalog.upsert(extracted, EXTRACTED_TABLE, key="doc_id")
+        if index_chunks:
+            from ..plans.chunk_pipeline import CHUNKS_TABLE, build_chunks
+            chunks = build_chunks(extracted, max_size=chunk_max_size)
+            # delete-set = the batch's docs, not the produced chunks:
+            # a doc re-delivered as failed/empty must shed stale rows
+            catalog.replace_namespace(
+                chunks, CHUNKS_TABLE, key="doc_id",
+                delete_keys=extracted.select("doc_id").distinct())
 
     q = (
         stream.writeStream

@@ -35,3 +35,18 @@ def test_nested_scopes(spark):
         assert outer.storageLevel.useMemory
     assert not outer.storageLevel.useMemory
     assert release_cached() == 0  # nothing leaked to the global registry
+
+
+def test_run_pipeline_leaves_no_cached_frames(spark, tmp_path):
+    """run_pipeline releases what its operators persisted (the skew
+    path's giant subset): Spark's CacheManager is empty on return."""
+    from mivaa_pdf_extractor_spark.plans.pipeline import run_pipeline
+    from mivaa_pdf_extractor_spark.sources.synthetic import (
+        corpus_to_spark_df, gen_corpus)
+    from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
+
+    release_cached()
+    spark.catalog.clearCache()
+    docs = corpus_to_spark_df(spark, gen_corpus(20, seed=3, giants=1))
+    run_pipeline(spark, docs, Catalog(spark, str(tmp_path / "wh")))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -118,3 +118,15 @@ def test_budget_sequential_in_reading_order(spark):
                              expand_n=1).collect()[0]
     assert r.neighbors_added == 1
     assert r.expanded_chunk_indexes == "1"
+
+
+def test_duplicate_hit_rows_do_not_double_neighbours(spark):
+    # the same hit delivered twice: each output row carries the kept
+    # neighbour once (the kept-text join-back groups by chunk_id)
+    hit = [_hit(100, 1, 1, 2, "HIT"), _hit(100, 1, 1, 2, "HIT")]
+    corpus = [(2, 1, 1, 3, "after"), (100, 1, 1, 2, "HIT")]
+    rows = ke.expand_chunk_hits(_hits(spark, hit),
+                                _chunks(spark, corpus),
+                                expand_n=1).collect()
+    assert [r.content for r in rows] == ["HIT\n\nafter"] * 2
+    assert all(r.neighbors_added == 1 for r in rows)

@@ -163,27 +163,27 @@ def test_catalog_touched_bucket_rewrite_cost(spark, tmp_path):
 
 
 def test_catalog_legacy_migration_and_schema_evolution(spark, tmp_path):
-    """ADVICE r3: first bucketed write over a plain append-log table folds
-    the old rows in and removes the orphaned root part files; upserting a
-    WIDER schema evolves (old rows surface null for the new column)."""
+    """ADVICE r3: upserting a WIDER schema into a manifest table evolves
+    it — old rows surface null for the new column, and the manifest
+    records the widened schema."""
+    import json
     import os
 
     from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
 
-    wh = str(tmp_path / "legacy")
-    old = spark.createDataFrame([("a", 1), ("b", 1)], "doc_id string, v int")
-    # simulate the pre-manifest append-log layout: root-level part files
-    old.write.mode("append").parquet(os.path.join(wh, "t"))
+    wh = str(tmp_path / "evolve")
     cat = Catalog(spark, wh)
-    assert cat.exists("t")
+    cat.upsert(spark.createDataFrame([("a", 1), ("b", 1)],
+                                     "doc_id string, v int"), "t")
     wider = spark.createDataFrame([("b", 2, "x"), ("c", 2, "y")],
                                   "doc_id string, v int, extra string")
     cat.upsert(wider, "t")
     got = {r["doc_id"]: (r["v"], r["extra"]) for r in cat.read("t").collect()}
     assert got == {"a": (1, None), "b": (2, "x"), "c": (2, "y")}
-    root = os.path.join(wh, "t")
-    assert not any(f.endswith(".parquet") for f in os.listdir(root)
-                   if os.path.isfile(os.path.join(root, f)))
+    with open(os.path.join(wh, "t", "_MANIFEST")) as f:
+        schema = json.loads(json.load(f)["schema"])
+    assert [fld["name"] for fld in schema["fields"]] == ["doc_id", "v",
+                                                         "extra"]
 
 
 def test_replace_namespace_explicit_delete_keys(spark, tmp_path):
@@ -397,17 +397,17 @@ def test_catalog_same_gen_orphan_collision(spark, tmp_path):
 
 def test_catalog_legacy_scrub_only_after_manifest_publish(
         spark, tmp_path, monkeypatch):
-    """Migrating a legacy table must not destroy its only copy: if the
-    manifest publish itself dies, the legacy files are still on disk and
-    readable, and the retry completes the migration."""
+    """A write whose manifest publish dies must not lose the table: the
+    previous generation is still served, and the retry commits."""
+    import json
     import os
 
     from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
 
-    wh = str(tmp_path / "migcrash")
-    old = spark.createDataFrame([("a", 1), ("b", 1)], "doc_id string, v int")
-    old.write.mode("append").parquet(os.path.join(wh, "t"))
+    wh = str(tmp_path / "swapcrash")
     cat = Catalog(spark, wh)
+    cat.upsert(spark.createDataFrame([("a", 1), ("b", 1)],
+                                     "doc_id string, v int"), "t")
 
     import pytest
 
@@ -419,16 +419,15 @@ def test_catalog_legacy_scrub_only_after_manifest_publish(
         cat.upsert(spark.createDataFrame([("c", 2)],
                                          "doc_id string, v int"), "t")
     monkeypatch.undo()
-    # legacy data survived the crash and is still served
+    # the previous generation survived the crash and is still served
     assert {r["doc_id"] for r in cat.read("t").collect()} == {"a", "b"}
-    # retry completes: rows merged, legacy root part files scrubbed
+    # retry commits: rows merged, one generation past the survivor
     cat.upsert(spark.createDataFrame([("c", 2)], "doc_id string, v int"),
                "t")
     got = {r["doc_id"]: r["v"] for r in cat.read("t").collect()}
     assert got == {"a": 1, "b": 1, "c": 2}
-    root = os.path.join(wh, "t")
-    assert not any(f.endswith(".parquet") for f in os.listdir(root)
-                   if os.path.isfile(os.path.join(root, f)))
+    with open(os.path.join(wh, "t", "_MANIFEST")) as f:
+        assert json.load(f)["version"] == 2
 
 
 def test_replace_namespace_delete_keys_missing_df_key(spark, tmp_path):
