@@ -87,7 +87,8 @@ def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Skew-aware span extraction over sf0.001 (native span synthesis ->
-    mapInPandas engine -> per-doc spans/status)."""
+    mapInArrow kernel, salted page buckets for giants -> per-doc
+    spans/status)."""
     docs = _docs(spark, "/root/testdata/sf0.001")
     spans = with_synthetic_giants(docs, every=200, repeat=60)
     out = run_extract_skewed(spans, skew_threshold=2000)

@@ -7,8 +7,9 @@ table detection, media-span emission with stable media_refs, chunking,
 dedup/similarity/text-analysis operators for training-data pipelines, and a
 resumable checkpointed pipeline with per-partition lineage.
 
-Architecture: declarative DataFrame plans + Arrow-vectorized ``mapInPandas``
-stages; no per-row Python UDFs anywhere.
+Architecture: declarative DataFrame plans + an Arrow-vectorized
+``mapInArrow`` extraction kernel (giant documents: salted ``applyInPandas``
+page buckets over the same kernel); no per-row Python UDFs anywhere.
 """
 
 __version__ = "0.1.0"

@@ -142,9 +142,10 @@ TABLE_MIN_COLS = 2
 # per pdf_processor.py:1184-1238)
 MIN_EFFECTIVE_DPI = 100
 
-# skew handling: docs with more input spans than this take the per-page
-# salted path (SURVEY.md §7.2 step 8)
-DEFAULT_SKEW_THRESHOLD = 2000
+# skew handling: the most input spans one task extracts for one document.
+# Docs up to this size run whole in the Arrow kernel; larger ones take the
+# per-page salted path in ceil(n / threshold) buckets (SURVEY.md §7.2 step 8)
+DEFAULT_SKEW_THRESHOLD = 8192
 
 # deterministic media_ref patterns — model the reference filename patterns
 # page_{p}_image_{i}.{ext} (pdf_processor.py:1023), page_{p}_region_{i}.jpg

@@ -19,10 +19,10 @@ scan splits (hash-repartition only when the source is coarser than the
 cluster) — which never runs per-row Python (north rule). The loop-based
 spec this must match lives in oracle/extract_one.py.
 
-``_process_flat`` (table assembly → column split → classify → normalize →
+``process_flat`` (table assembly → column split → classify → normalize →
 sort → media gating → offsets) is shared with the skew path
-(operators/skew.py), which feeds it per-(doc, page) groups with doc-global
-context computed natively.
+(operators/skew.py), which feeds it the page buckets of documents above
+the skew threshold, with doc-global context computed natively.
 """
 
 from __future__ import annotations
@@ -129,20 +129,16 @@ def parse_attrs(flat: pd.DataFrame) -> pd.DataFrame:
     return flat
 
 
-def heading_levels(flat: pd.DataFrame,
-                   valid: np.ndarray | None = None) -> pd.DataFrame:
+def heading_levels(flat: pd.DataFrame, valid: np.ndarray) -> pd.DataFrame:
     """Per (doc_idx, size) heading level for sizes above the doc's body size.
 
     body = most frequent size among text/title spans (ties -> smaller size);
     sizes > body get levels 1.. descending by size, capped at 6 (M1).
-    ``valid`` (optional row mask) lets the caller defer the boilerplate
-    filter so the frame is copied once, not per stage.
+    ``valid`` (row mask) lets the caller defer the boilerplate filter so the
+    frame is copied once, not per stage.
     Returns columns (doc_idx, size, level).
     """
-    mask = flat["base"].isin(("text", "title"))
-    if valid is not None:
-        mask &= valid
-    tt = flat[mask]
+    tt = flat[flat["base"].isin(("text", "title")) & valid]
     if tt.empty:
         return pd.DataFrame({"doc_idx": pd.Series(dtype=np.int64),
                              "size": pd.Series(dtype=np.float64),
@@ -166,14 +162,12 @@ def heading_levels(flat: pd.DataFrame,
     return bigger[["doc_idx", "size", "level"]]
 
 
-def mark_media_dups(flat: pd.DataFrame,
-                    valid: np.ndarray | None = None) -> pd.Series:
-    """Boolean mask: media span is an exact-phash duplicate within its
+def mark_media_dups(flat: pd.DataFrame, valid: np.ndarray) -> pd.Series:
+    """Boolean mask: valid media span is an exact-phash duplicate within its
     (doc, layer) bucket; first occurrence in (page, y, x, pos) order kept
     (I5, per-layer buckets pdf_processor.py:1184-1238)."""
-    is_media = flat["base"].isin(C.MEDIA_KINDS) & (flat["phash"] != "")
-    if valid is not None:
-        is_media &= valid
+    is_media = (flat["base"].isin(C.MEDIA_KINDS) & (flat["phash"] != "")
+                & valid)
     dup = pd.Series(False, index=flat.index)
     if not is_media.any():
         return dup
@@ -187,21 +181,18 @@ _SHEET_CTX_COLS = ["sheet_doc", "is_spread", "first_phys",
                    "sheet_w", "sheet_h"]
 
 
-def _sheet_ctx(flat: pd.DataFrame,
-               valid: np.ndarray | None = None) -> pd.DataFrame | None:
+def _sheet_ctx(flat: pd.DataFrame, valid: np.ndarray) -> pd.DataFrame | None:
     """Per-(doc, sheet) physical-page mapping for sheet-addressed documents
-    (L1 over the fixture encoding): sheet dims = max sw/sh over the sheet's
-    spans; aspect > SPREAD_ASPECT -> spread (2 physical pages); 1-based
-    running first_physical counter in sheet order. Returns None when the
-    batch has no sheet-addressed doc (fast path)."""
+    (L1 over the fixture encoding), over the ``valid`` rows: sheet dims =
+    max sw/sh over the sheet's spans; aspect > SPREAD_ASPECT -> spread (2
+    physical pages); 1-based running first_physical counter in sheet order.
+    Returns None when the batch has no sheet-addressed doc (fast path)."""
     # validity is SHEET-level (a sheet's sw and sh may come from different
     # spans — the dims are per-sheet maxes); this cheap span-level probe is
     # only a necessary condition for the fast path
     if not ((flat["sw"] > 0).any() and (flat["sh"] > 0).any()):
         return None
-    if valid is not None:
-        flat = flat.loc[valid, ["doc_idx", "page", "sw", "sh", "base",
-                                "w", "h"]]
+    flat = flat.loc[valid, ["doc_idx", "page", "sw", "sh", "base", "w", "h"]]
     d = (flat.groupby(["doc_idx", "page"], sort=True)[["sw", "sh"]].max()
          .rename(columns={"sw": "sheet_w", "sh": "sheet_h"}).reset_index())
     valid = (d["sheet_w"] > 0) & (d["sheet_h"] > 0)
@@ -234,8 +225,7 @@ def _sheet_ctx(flat: pd.DataFrame,
 
 
 def remap_spreads(flat: pd.DataFrame,
-                  dims: pd.DataFrame | None = None,
-                  ctx: pd.DataFrame | None = None) -> pd.DataFrame:
+                  dims: pd.DataFrame | None) -> pd.DataFrame:
     """L3 half-page clip + L5 span-in-clip remap (reference
     stage_1_layout_precompute.py:124-141 `_clip_rect_for_position`,
     :198-234 `_pymupdf_spans_in_clip`): in sheet-addressed docs the `page`
@@ -249,29 +239,21 @@ def remap_spreads(flat: pd.DataFrame,
 
     Sheet geometry (dims + the L2 gate) is a property of the SHEET, so it
     is computed PRE-media-dedup (reference: page.rect / page images) —
-    pass `dims` from `_sheet_ctx` on the pre-dedup frame (None -> no
-    sheet-addressed docs, no-op), or `ctx` (the skew path's per-row native
-    context, aligned row-for-row with `flat`)."""
-    if ctx is None:
-        if dims is None:
-            return flat
-        flat = flat.merge(dims, on=["doc_idx", "page"], how="left")
-        # dedup may have removed a sheet's only spans; remaining rows
-        # always match a dims row, but guard dtypes anyway
-        if flat["sheet_doc"].isna().any():  # pragma: no cover
-            flat["sheet_doc"] = flat["sheet_doc"].fillna(False)
-            flat["is_spread"] = flat["is_spread"].fillna(False)
-            flat["first_phys"] = flat["first_phys"].fillna(1)
-            flat["sheet_w"] = flat["sheet_w"].fillna(0.0)
-            flat["sheet_h"] = flat["sheet_h"].fillna(0.0)
-    else:
-        flat = flat.reset_index(drop=True)
-        for c in _SHEET_CTX_COLS:
-            flat[c] = ctx[c].to_numpy()
-        if not flat["sheet_doc"].any():
-            return flat.drop(columns=_SHEET_CTX_COLS)
+    pass `dims` per (doc_idx, page): `_sheet_ctx` on the pre-dedup frame,
+    or the skew path's natively computed context (None -> no
+    sheet-addressed docs, no-op)."""
+    if dims is None:
+        return flat
+    flat = flat.merge(dims, on=["doc_idx", "page"], how="left")
+    # dedup may have removed a sheet's only spans; remaining rows
+    # always match a dims row, but guard dtypes anyway
+    if flat["sheet_doc"].isna().any():  # pragma: no cover
+        flat["sheet_doc"] = flat["sheet_doc"].fillna(False)
+        flat["is_spread"] = flat["is_spread"].fillna(False)
+        flat["first_phys"] = flat["first_phys"].fillna(1)
+        flat["sheet_w"] = flat["sheet_w"].fillna(0.0)
+        flat["sheet_h"] = flat["sheet_h"].fillna(0.0)
 
-    flat = flat.copy()
     flat["pos"] = 2 * flat["pos"]
     sheet = flat["sheet_doc"].to_numpy(dtype=bool)
     spread = sheet & flat["is_spread"].to_numpy(dtype=bool)
@@ -643,29 +625,34 @@ def _reassemble_arrow(flat: pd.DataFrame, docs: pd.DataFrame,
     )
 
 
-# docs per processing chunk: the kernel runs ~60 vectorized ops per chunk,
-# so Spark's default 256-record Arrow batches pay that fixed cost every
-# ~2k spans (measured 2.5x slowdown); accumulate to amortize. Gains plateau
-# by ~2k docs; 4k of even large (skew-threshold-sized) docs stays <~1 GB.
-_CHUNK_DOCS = 4096
+# input spans per processing chunk: the kernel runs ~60 vectorized ops per
+# chunk, so Spark's default 256-record Arrow batches pay that fixed cost
+# every ~2k spans (measured 2.5x slowdown); accumulate to amortize. Kernel
+# memory grows per span, so the budget counts spans, not docs: ~4k average
+# docs per chunk, and one 1024-doc Arrow batch of skew-threshold-sized docs
+# (~8.4M spans) is the largest chunk the kernel ever sees.
+_CHUNK_SPANS = 1 << 15
 
 
 def _coalesce_batches(
         batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    import pyarrow.compute as pc
+
     pending: list[pa.RecordBatch] = []
-    n = 0
+    n_docs = n_spans = 0
     for b in batches:
         if b.num_rows == 0:
             continue
         pending.append(b)
-        n += b.num_rows
-        if n >= _CHUNK_DOCS:
+        n_docs += b.num_rows
+        n_spans += pc.sum(b.column("spans").value_lengths()).as_py() or 0
+        if n_spans >= _CHUNK_SPANS:
             yield pa.Table.from_batches(pending).combine_chunks().to_batches(
-                max_chunksize=n)[0]
-            pending, n = [], 0
+                max_chunksize=n_docs)[0]
+            pending, n_docs, n_spans = [], 0, 0
     if pending:
         yield pa.Table.from_batches(pending).combine_chunks().to_batches(
-            max_chunksize=n)[0]
+            max_chunksize=n_docs)[0]
 
 
 def extract_iter_arrow(
@@ -737,15 +724,13 @@ def auto_partition_target(df: DataFrame) -> int:
     return target if target > src else 0
 
 
-def run_extract(df: DataFrame, num_partitions: int | None = None,
-                auto_repartition: bool = True) -> DataFrame:
-    """The physical extraction plan for non-skewed documents:
-    hash-repartition by doc_id, then one Arrow-vectorized pass.
+def run_extract(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """The physical extraction plan for documents that fit one task: an
+    optional hash-repartition by doc_id, then one Arrow-vectorized pass.
 
-    ``num_partitions`` <= 0 is treated as unset (auto)."""
-    if num_partitions is not None and num_partitions > 0:
-        df = df.repartition(num_partitions, F.col("doc_id"))
-    elif auto_repartition:
+    ``num_partitions``: None probes the source (``auto_partition_target``),
+    >0 pins a repartition, 0 keeps the scan's partitions."""
+    if num_partitions is None:
         # extraction is per-document and every document is ONE row, so no
         # co-location is required — shuffling the full corpus just to
         # rebalance is pure serialize/write/read waste (it was ~20% of job
@@ -758,12 +743,11 @@ def run_extract(df: DataFrame, num_partitions: int | None = None,
         # (96 near-empty Arrow tasks for a 15 KB source measured ~1.3 s).
         # Unknown stats fall back to the 3x fan (Long.Max default ->
         # target caps at 3*par, the prior behavior).
-        target = auto_partition_target(df)
-        if target > 0:
-            # pin the count: a bare repartition(col) is AQE-coalescible
-            # by bytes, and span rows are bytes-small but
-            # Python-compute-heavy
-            df = df.repartition(target, F.col("doc_id"))
+        num_partitions = auto_partition_target(df)
+    if num_partitions > 0:
+        # pin the count: a bare repartition(col) is AQE-coalescible by
+        # bytes, and span rows are bytes-small but Python-compute-heavy
+        df = df.repartition(num_partitions, F.col("doc_id"))
     # mapInArrow, not mapInPandas: the spans column is array<struct>, which
     # pandas conversion would materialize as a dict per span on BOTH
     # boundaries — the flatten/reassemble work on the Arrow buffers directly

@@ -1,23 +1,23 @@
 """Skew-aware extraction: salted per-page processing of giant documents.
 
 The reference has no skew handling (SURVEY.md §4 — one 200-page catalog just
-takes longer); the north rule requires it explicitly. Strategy:
+takes longer); the north rule requires it explicitly. One size,
+``skew_threshold`` (T), bounds the spans a task extracts for one document:
 
-- documents with ``size(spans) <= threshold`` take the normal whole-doc
-  ``mapInPandas`` path (operators/extract.py);
-- giant documents are **salted by page bucket**: ``posexplode`` → the
-  doc-global context (heading histogram M1, per-layer media dedup I5) is
-  computed with *native* window/groupBy expressions → per
-  ``(doc_id, page % ceil(n_spans/spans_per_bucket))`` bucket groups are
-  processed by
-  ``applyInPandas`` reusing the same ``process_flat`` kernel (one kernel
-  invocation covers ~spans_per_bucket spans, so the per-group pandas
-  overhead amortizes) → per-page rows are reassembled **natively** with a window
+- documents with ``size(spans) <= T`` run whole through the normal
+  ``mapInArrow`` kernel (operators/extract.py);
+- a larger document is **salted by page bucket** into ``ceil(n/T) >= 2``
+  buckets: ``posexplode`` → the doc-global context (heading histogram M1,
+  per-layer media dedup I5) is computed with *native* window/groupBy
+  expressions → per ``(doc_id, page % ceil(n/T))`` bucket groups are
+  processed by ``applyInPandas`` reusing the same ``process_flat`` kernel
+  (one kernel invocation covers ~T spans, so the per-group pandas overhead
+  amortizes) → per-page rows are reassembled **natively** with a window
   cumsum for char offsets and ``array_sort``+``flatten`` for ordered span
   concatenation (SURVEY.md §7.2 step 8's "one subtle shuffle").
 
-At cluster scale this bounds task size by page bucket, not by document: one
-10^6-span document spreads across ~n/spans_per_bucket tasks, and no task
+Work is split only when a document is too big for one task: at cluster
+scale one 10^6-span document spreads across ~n/T tasks, and no task
 materializes the whole document until the final (columnar, JVM-side)
 concatenation.
 
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 from ..core import constants as C
 from ..core.cache import track
 from ..core.kinds import FLOAT_ATTR_PATTERN, INT_ATTR_PATTERN, attr_regex
-from .extract import (OUTPUT_SCHEMA, SPAN_OUT_STRUCT, parse_attrs,
+from .extract import (OUTPUT_SCHEMA, auto_partition_target, parse_attrs,
                       process_flat, remap_spreads, run_extract)
 
 _ROW_SCHEMA = T.StructType([
@@ -63,7 +63,9 @@ _ROW_SCHEMA = T.StructType([
 # the low-DPI gate only on the skew path.
 _PAGE_RE = attr_regex("page", INT_ATTR_PATTERN)
 
-DEFAULT_SPANS_PER_BUCKET = 8192
+# salted buckets hold at most skew_threshold spans; perfbench sizes its
+# two-bucket giant against this name
+DEFAULT_SPANS_PER_BUCKET = C.DEFAULT_SKEW_THRESHOLD
 
 
 def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -87,15 +89,21 @@ def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
     })
     flat = parse_attrs(flat)
     # L3/L5 spread remap with the natively-computed doc-global sheet
-    # context (buckets never straddle a sheet, so per-bucket remap is safe)
-    ctx = pd.DataFrame({
-        "sheet_doc": pdf["sheet_doc"].to_numpy(dtype=bool),
-        "is_spread": pdf["is_spread"].to_numpy(dtype=bool),
-        "first_phys": pdf["first_phys"].to_numpy(dtype=np.int64),
-        "sheet_w": pdf["sheet_w"].to_numpy(dtype=np.float64),
-        "sheet_h": pdf["sheet_h"].to_numpy(dtype=np.float64),
-    })
-    flat = remap_spreads(flat, ctx=ctx)
+    # context (buckets never straddle a sheet, so per-bucket remap is safe).
+    # It was joined on (doc_id, page_hint), the same parse as `page`, so
+    # one row per page is the normal path's per-sheet dims frame.
+    dims = None
+    if pdf["sheet_doc"].any():
+        dims = pd.DataFrame({
+            "doc_idx": flat["doc_idx"].to_numpy(),
+            "page": flat["page"].to_numpy(),
+            "sheet_doc": pdf["sheet_doc"].to_numpy(dtype=bool),
+            "is_spread": pdf["is_spread"].to_numpy(dtype=bool),
+            "first_phys": pdf["first_phys"].to_numpy(dtype=np.int64),
+            "sheet_w": pdf["sheet_w"].to_numpy(dtype=np.float64),
+            "sheet_h": pdf["sheet_h"].to_numpy(dtype=np.float64),
+        }).drop_duplicates("page")
+    flat = remap_spreads(flat, dims)
 
     hs = pdf["heading_str"].iloc[0]
     if hs:
@@ -128,10 +136,9 @@ def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
     })
 
 
-def _extract_giant(giant: DataFrame,
-                   spans_per_bucket: int = DEFAULT_SPANS_PER_BUCKET,
-                   ) -> DataFrame:
-    """Per-page-bucket salted extraction of documents above the threshold.
+def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
+    """Per-page-bucket salted extraction of documents above the threshold,
+    ``ceil(n_spans / skew_threshold)`` buckets per document.
 
     Stage-lean plan (each line after the explode is one shuffle at most):
       explode -> [doc-level failure scan (tiny agg)]
@@ -289,14 +296,14 @@ def _extract_giant(giant: DataFrame,
     # ship the kernel only what it consumes: doc-global heading context is a
     # compact string (a per-row list<struct> duplicate is pure Arrow bloat),
     # and base/page_hint are re-derived by the kernel's own attr parse.
-    # Salt count ADAPTS to document size (~spans_per_bucket spans per
+    # Salt count ADAPTS to document size (~skew_threshold spans per
     # bucket): a fixed salt count either shreds medium giants into
     # thousands of tiny applyInPandas groups (per-group pandas overhead
     # dominates) or under-splits the truly huge ones. A 10^6-span document
-    # still spreads across ~n/spans_per_bucket tasks, so task size stays
-    # bounded by bucket, not by document.
-    n_salts_doc = F.greatest(
-        F.ceil(F.col("n_doc_spans") / F.lit(spans_per_bucket)), F.lit(1))
+    # still spreads across ~n/skew_threshold tasks, so task size stays
+    # bounded by bucket, not by document. Every document here has more
+    # than skew_threshold spans, so it gets at least two buckets.
+    n_salts_doc = F.ceil(F.col("n_doc_spans") / F.lit(skew_threshold))
     with_ctx = deduped.join(F.broadcast(headings), "doc_id", "left")
     if has_sheets:
         with_ctx = with_ctx.join(F.broadcast(sheet_dims),
@@ -393,19 +400,21 @@ def run_extract_skewed(
     df: DataFrame,
     skew_threshold: int = C.DEFAULT_SKEW_THRESHOLD,
     num_partitions: int | None = None,
-    spans_per_bucket: int = DEFAULT_SPANS_PER_BUCKET,
 ) -> DataFrame:
-    """Full extraction plan with skew salting: normal docs whole-doc, giant
-    docs per-page-bucket, one unioned output."""
+    """Full extraction plan with skew salting: documents of at most
+    ``skew_threshold`` spans run whole through the Arrow kernel, larger ones
+    per page bucket of about ``skew_threshold`` spans; one unioned output.
+
+    ``num_partitions`` None probes the raw source once; >0 pins a
+    repartition of the normal documents (see ``run_extract``)."""
+    if skew_threshold < 1:
+        raise ValueError(f"skew_threshold must be >= 1, got {skew_threshold}")
     n = F.size("spans")  # -1 for NULL arrays -> normal path handles them
     normal = df.filter((n <= skew_threshold))
     giant = df.filter(n > skew_threshold)
-    if num_partitions is None or num_partitions <= 0:
+    if num_partitions is None:
         # probe the RAW source once (one extra plan compile total) instead
-        # of letting run_extract probe the filtered subplan per call;
-        # bytes-proportional sizing shared with run_extract
-        from .extract import auto_partition_target
-        num_partitions = auto_partition_target(df) or None
-    return run_extract(normal, num_partitions,
-                       auto_repartition=False).unionByName(
-        _extract_giant(giant, spans_per_bucket))
+        # of letting run_extract probe the filtered subplan per call
+        num_partitions = auto_partition_target(df)
+    return run_extract(normal, num_partitions).unionByName(
+        _extract_giant(giant, skew_threshold))

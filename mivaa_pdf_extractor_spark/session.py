@@ -26,13 +26,15 @@ def _available_gb() -> int:
 
 def _default_driver_mem() -> tuple[str, bool]:
     """Heap default derived from available memory (half of MemAvailable,
-    clamped to [4g, 24g]); pre-touching (-Xms=heap) only when there is
-    >=1.5x the heap available so the fixed heap cannot thrash smaller
-    hosts. Override with SPARK_GRAFT_DRIVER_MEM."""
+    clamped to [1g, 24g], so a heap never exceeds what is free: a second
+    or third JVM on the host gets half of what the earlier ones left);
+    pre-touching (-Xms=heap) only when there is >=1.5x the heap
+    available so the fixed heap cannot thrash smaller hosts. Override with
+    SPARK_GRAFT_DRIVER_MEM."""
     avail = _available_gb()
     if avail <= 0:
         return "8g", False
-    heap = max(4, min(24, avail // 2))
+    heap = max(1, min(24, avail // 2))
     return f"{heap}g", avail >= heap * 1.5
 
 
@@ -81,9 +83,10 @@ def build_session(
         # anyway, so this only sets IPC granularity — 256 paid ~16% extra
         # wall in per-batch transfer overhead at 1.92M docs (measured 25.1s
         # vs 21.1s at 1024; 4096 was equal within noise). Normal-path docs
-        # are bounded by the skew threshold, so 1024 docs/batch stays small;
-        # giant docs never cross this boundary (they ride the exploded
-        # applyInPandas path).
+        # are bounded by the skew threshold (8,192 spans), so a batch is at
+        # most ~8.4M spans and the kernel's span budget closes a chunk
+        # after one such batch; larger docs never cross this boundary
+        # (they ride the exploded applyInPandas path).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # compress the JVM<->Python Arrow IPC stream: this workload is
         # memory-bandwidth-bound at high parallelism (span text crosses the

@@ -7,7 +7,7 @@ Cluster usage (the north rule's deployment shape):
         scripts/submit_extract.py \\
         --input  <path or Iceberg table of (doc_id, spans)> \\
         --warehouse <catalog warehouse path> \\
-        [--skew-threshold 2000] [--max-doc-mb 50] [--run-id r1] \\
+        [--skew-threshold 8192] [--max-doc-mb 50] [--run-id r1] \\
         [--no-count-input]
 
 Local smoke:
@@ -32,6 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
+    from mivaa_pdf_extractor_spark.core import constants as C
+
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True,
                     help="parquet path (or Iceberg table name when a "
@@ -39,7 +41,10 @@ def main() -> int:
     ap.add_argument("--warehouse", required=True,
                     help="catalog warehouse dir for extracted/checkpoints/"
                          "lineage tables")
-    ap.add_argument("--skew-threshold", type=int, default=2000)
+    ap.add_argument("--skew-threshold", type=int,
+                    default=C.DEFAULT_SKEW_THRESHOLD,
+                    help="most spans one task extracts for one document; "
+                         "larger documents are salted into page buckets")
     ap.add_argument("--max-doc-mb", type=int, default=50)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--num-partitions", type=int, default=None)

@@ -111,6 +111,7 @@ def test_grammar_edges_normal_path(spark):
 
 
 def test_grammar_edges_skew_path(spark):
-    # threshold=0 forces EVERY doc through the salted per-page-bucket plan
+    # threshold=1 sends every doc of 2+ spans through the salted plan, one
+    # page bucket per span
     _assert_matches_oracle(
-        spark, lambda df: run_extract_skewed(df, skew_threshold=0))
+        spark, lambda df: run_extract_skewed(df, skew_threshold=1))

@@ -103,10 +103,12 @@ def test_fuzzed_span_equality(spark, corpus):
 
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(corpus=_corpus)
-def test_fuzzed_span_equality_skew_path(spark, corpus):
-    """The salted per-page-bucket plan must speak the SAME attr grammar:
-    threshold=0 routes every fuzzed doc through the skew path (round 1's
-    unsigned regexes diverged on negative numerics here)."""
+@given(corpus=_corpus, threshold=st.sampled_from([1, 3]))
+def test_fuzzed_span_equality_skew_path(spark, corpus, threshold):
+    """The salted per-page-bucket plan must speak the SAME attr grammar
+    (round 1's unsigned regexes diverged on negative numerics here): a
+    threshold of 1 or 3 spans routes nearly every fuzzed doc through the
+    skew path, split into ceil(n/threshold) page buckets."""
     _assert_corpus_equal(
-        spark, corpus, lambda df: run_extract_skewed(df, skew_threshold=0))
+        spark, corpus,
+        lambda df: run_extract_skewed(df, skew_threshold=threshold))

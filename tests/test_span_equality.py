@@ -51,12 +51,24 @@ def test_spark_normal_path_equals_oracle(spark):
 
 @pytest.mark.spark
 def test_spark_skew_path_equals_oracle(spark):
+    threshold = 2000
     docs = gen_corpus(40, seed=11, giants=2)
+    # routing boundary: exactly `threshold` spans runs whole in the kernel,
+    # one more is salted into two page buckets
+    giant = max(docs, key=lambda d: len(d["spans"]))
+    docs += [{"doc_id": f"boundary-{n}", "spans": giant["spans"][:n]}
+             for n in (threshold, threshold + 1)]
     df = corpus_to_spark_df(spark, docs)
-    out = run_extract_skewed(df, skew_threshold=2000, num_partitions=4)
+    out = run_extract_skewed(df, skew_threshold=threshold, num_partitions=4)
     rows = {r["doc_id"]: r.asDict() for r in out.collect()}
     assert len(rows) == len(docs)
     assert_equal(docs, rows)
+
+
+def test_skew_threshold_below_one_is_rejected(spark):
+    df = corpus_to_spark_df(spark, gen_corpus(2, seed=1, giants=0))
+    with pytest.raises(ValueError, match="skew_threshold"):
+        run_extract_skewed(df, skew_threshold=0)
 
 
 def test_offsets_are_monotonic_and_cover_text():

@@ -150,5 +150,6 @@ def test_engine_equals_oracle_normal_path(spark):
 
 
 def test_engine_equals_oracle_skew_path(spark):
+    # threshold=1: every multi-span doc is salted, one page bucket per span
     _assert_equal(spark,
-                  lambda df: run_extract_skewed(df, skew_threshold=0))
+                  lambda df: run_extract_skewed(df, skew_threshold=1))
