@@ -1,11 +1,12 @@
 """The resumable extraction pipeline (SURVEY.md §3.1 Spark restatement).
 
     read documents
-      -> anti-join checkpoints on terminally-completed doc_ids   (J1 resume)
+      -> anti-join `extracted` on terminally-completed doc_ids   (J1 resume)
       -> skew-aware extraction (whole-doc / per-page salted)     (UDF pass)
-      -> write `extracted` (+ run_id, partition_id)
-      -> derive `lineage` per partition and `checkpoints` per doc
-         FROM the written table (write once, aggregate from the sink)
+      -> stamp run_id, partition_id, ts and persist the result once
+      -> upsert `extracted` on doc_id: the sink IS the checkpoint
+      -> append `lineage` per partition, aggregated from the persisted
+         frame (no read-back of either table)
       -> circuit-breaker assertion (>=1 failure and 0 successes -> abort),
          modeling stage_1_layout_precompute.py:466-489,650-674
 
@@ -24,12 +25,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core import constants as C
-from ..core.cache import cache_scope
+from ..core.cache import cache_scope, track
+from ..operators.extract import OUTPUT_SCHEMA
 from ..operators.skew import run_extract_skewed
 from ..sources.tables_io import Catalog
 
 EXTRACTED_TABLE = "extracted"
-CHECKPOINTS_TABLE = "checkpoints"
 LINEAGE_TABLE = "lineage"
 
 
@@ -44,19 +45,21 @@ class PipelineResult:
 
 
 class CircuitBreakerTripped(RuntimeError):
-    """>=1 failure and 0 successes in a run — abort instead of checkpointing
-    a fully-failed pass (stage_1_layout_precompute.py:650-674 semantics)."""
+    """>=1 failure and 0 successes in a run — abort the run after its
+    `failed` rows (retryable on resume) are written
+    (stage_1_layout_precompute.py:650-674 semantics)."""
 
 
 def completed_doc_ids(catalog: Catalog) -> DataFrame | None:
-    """doc_ids whose latest checkpoint status is terminal. The checkpoint
-    sink is an upsert keyed on doc_id (one row per doc, last status wins —
-    Iceberg MERGE / versioned parquet), so 'latest' is the table itself:
-    no row_number window over history at read time (round-2 verdict
-    item 4)."""
-    if not catalog.exists(CHECKPOINTS_TABLE):
+    """doc_ids whose latest status in `extracted` is terminal. The sink is
+    an upsert keyed on doc_id (one row per doc, last status wins — Iceberg
+    MERGE / versioned parquet), so 'latest' is the table itself: no
+    row_number window over history at read time (round-2 verdict item 4),
+    and column pruning reads only `doc_id` and `status`. Rows written by
+    any run — batch or stream — count."""
+    if not catalog.exists(EXTRACTED_TABLE):
         return None
-    return (catalog.read(CHECKPOINTS_TABLE)
+    return (catalog.read(EXTRACTED_TABLE)
             .filter(F.col("status").isin(*C.TERMINAL_STATUSES))
             .select("doc_id"))
 
@@ -70,7 +73,16 @@ def doc_bytes(spans_col: str = "spans") -> F.Column:
                                         F.lit(0)).cast("long"))
 
 
-# operator-internal persists (the giant subset) are released on return
+def stamp_run(extracted: DataFrame, run_id: str) -> DataFrame:
+    """Add the resume-state columns every `extracted` row carries: the
+    writing run, the Spark partition that produced it, and a timestamp."""
+    return (extracted
+            .withColumn("run_id", F.lit(run_id))
+            .withColumn("partition_id", F.spark_partition_id())
+            .withColumn("ts", F.current_timestamp()))
+
+
+# persists (the giant subset, the stamped extraction) are released on return
 @cache_scope()
 def run_pipeline(
     spark: SparkSession,
@@ -89,13 +101,13 @@ def run_pipeline(
     # plan it is a full scan, so the safe-at-scale behavior is the DEFAULT
     # (round-2 verdict item 6): docs_in/docs_skipped report -1 unless the
     # caller opts in with count_input=True; lineage always carries exact
-    # processed counts from the sink.
+    # processed counts from the extraction itself.
     docs_in = documents.count() if count_input else -1
 
     done = completed_doc_ids(catalog)
     if done is not None:
-        # the checkpoint side is small relative to the corpus; Catalyst
-        # broadcasts it under AQE — the north rule's resume anti-join
+        # the completed side is one narrow column; Catalyst broadcasts it
+        # under AQE when it is small — the north rule's resume anti-join
         todo = documents.join(done, "doc_id", "left_anti")
     else:
         todo = documents
@@ -106,32 +118,24 @@ def run_pipeline(
     size_ok = F.coalesce(doc_bytes() <= F.lit(max_doc_bytes), F.lit(True))
     oversize = todo.filter(~size_ok).select(
         "doc_id",
-        F.array().cast(
-            "array<struct<kind:string,text:string,media_ref:string,"
-            "offset:int,page:int>>").alias("spans"),
+        F.array().cast(OUTPUT_SCHEMA["spans"].dataType).alias("spans"),
         F.lit(0).alias("n_spans"),
         F.lit(0).cast("long").alias("n_chars"),
         F.lit(C.STATUS_OVERSIZE).alias("status"))
     todo = todo.filter(size_ok)
 
-    extracted = (
+    # persisted once: the sink upsert evaluates it up to three times and
+    # lineage aggregates it again; the scope releases it on return
+    extracted = track(stamp_run(
         run_extract_skewed(todo, skew_threshold, num_partitions)
-        .unionByName(oversize)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("partition_id", F.spark_partition_id())
-        .withColumn("ts", F.current_timestamp())
-    )
+        .unionByName(oversize), run_id))
     # upsert keyed on doc_id: re-extracted docs (retried failures) REPLACE
     # their old rows, so the table is one-row-per-doc and reads need no
     # latest-row compaction window (round-2 verdict item 4). Iceberg MERGE
     # when available; versioned parquet with atomic pointer swap otherwise.
     catalog.upsert(extracted, EXTRACTED_TABLE, key="doc_id")
 
-    # lineage + checkpoints derived from the sink: the expensive UDF pass
-    # runs exactly once; these are cheap column scans of the written table
-    this_run = catalog.read(EXTRACTED_TABLE).filter(F.col("run_id") == run_id)
-
-    lineage = this_run.groupBy("run_id", "partition_id").agg(
+    lineage = extracted.groupBy("run_id", "partition_id").agg(
         F.count("*").alias("docs"),
         F.sum("n_spans").alias("spans"),
         F.sum("n_chars").alias("bytes"),
@@ -140,10 +144,7 @@ def run_pipeline(
     )
     catalog.append(lineage, LINEAGE_TABLE)
 
-    checkpoints = this_run.select("doc_id", "run_id", "status", "ts")
-    catalog.upsert(checkpoints, CHECKPOINTS_TABLE, key="doc_id")
-
-    agg = catalog.read(LINEAGE_TABLE).filter(F.col("run_id") == run_id).agg(
+    agg = lineage.agg(
         F.coalesce(F.sum("docs"), F.lit(0)).alias("docs"),
         F.coalesce(F.sum("failures"), F.lit(0)).alias("failures"),
     ).collect()[0]

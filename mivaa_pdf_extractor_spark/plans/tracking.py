@@ -36,6 +36,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from .pipeline import EXTRACTED_TABLE
+
 JOB_PENDING = "pending"
 JOB_PROCESSING = "processing"
 JOB_COMPLETED = "completed"
@@ -215,7 +217,7 @@ def auto_restart_stuck(store: JobsStore, completed_run_ids: set[str],
     """Flip each stuck job to 'pending' when it has checkpoint evidence to
     resume from (any checkpointed doc for that run), else 'failed'
     (checkpoint_recovery_service.py:371-412). ``completed_run_ids`` is the
-    distinct run_id set from the checkpoints table — collect it once for
+    distinct run_id set from the `extracted` sink — collect it once for
     all jobs (it is bounded by the number of runs, not docs). Returns
     {job_id: new_status}."""
     now = time.time() if now is None else now
@@ -236,14 +238,13 @@ def auto_restart_stuck(store: JobsStore, completed_run_ids: set[str],
     return out
 
 
-def checkpoint_run_ids(catalog, checkpoints_table: str = "checkpoints"
-                       ) -> set[str]:
-    """Distinct run_ids present in the checkpoints table — the 'can this
-    job resume' evidence for ``auto_restart_stuck``. One distinct over a
+def checkpoint_run_ids(catalog) -> set[str]:
+    """Distinct run_ids present in the `extracted` sink — the 'can this job
+    resume' evidence for ``auto_restart_stuck``. One distinct over a
     single small column; rows are one-per-doc so the distinct is bounded
     by runs."""
-    if not catalog.exists(checkpoints_table):
+    if not catalog.exists(EXTRACTED_TABLE):
         return set()
     return {r["run_id"] for r in
-            catalog.read(checkpoints_table).select("run_id")
+            catalog.read(EXTRACTED_TABLE).select("run_id")
             .distinct().collect()}

@@ -1,8 +1,8 @@
 """Table catalog for the engine's persistent tables.
 
-The design targets Iceberg (`documents` source, `extracted` sink,
-`checkpoints`/`lineage` bookkeeping — SURVEY.md §1.2); this sandbox has no
-Iceberg runtime jar, so the catalog transparently falls back to a
+The design targets Iceberg (`documents` source, `extracted` sink that is
+also the resume checkpoint, `lineage` log — SURVEY.md §1.2). Without an
+Iceberg runtime jar the catalog transparently falls back to a
 bucket-partitioned parquet warehouse that models Iceberg's metadata layer
 honestly:
 
@@ -55,6 +55,8 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from ..core.cache import cache_scope, track
 
 
 def merge_into_sql(table: str, key: str) -> str:
@@ -475,18 +477,15 @@ class Catalog:
             # the update subtree is evaluated up to three times
             # (touched-bucket collect, anti-join build, union write) —
             # persist it so an expensive upstream plan (full extraction)
-            # runs once. Only unpersist what THIS call persisted: a caller
-            # sharing one persisted frame across sinks (the streaming
-            # path) must not lose its cache
-            df_persisted = not df.is_cached
-            if df_persisted:
-                df = df.persist()
-            keys = (delete_keys if delete_keys is not None
-                    else df.select(key)).select(key).distinct()
-            keys_persisted = delete_keys is not None and not keys.is_cached
-            if keys_persisted:
-                keys = keys.persist()
-            try:
+            # runs once. The scope releases only what THIS call persisted:
+            # a caller's cached frame keeps its cache
+            with cache_scope():
+                if not df.is_cached:
+                    df = track(df)
+                keys = (delete_keys if delete_keys is not None
+                        else df.select(key)).select(key).distinct()
+                if delete_keys is not None and not keys.is_cached:
+                    keys = track(keys)
                 if m["key"] == key:
                     # bucket-pruned path: only buckets holding update keys
                     # are read and rewritten. `touched` must cover BOTH the
@@ -518,8 +517,3 @@ class Catalog:
                 self._commit(name, m, merged, key,
                              self._merged_schema(m["schema"], df),
                              m["num_buckets"], replace=touched)
-            finally:
-                if df_persisted:
-                    df.unpersist()
-                if keys_persisted:
-                    keys.unpersist()

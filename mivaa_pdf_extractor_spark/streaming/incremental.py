@@ -7,12 +7,14 @@ resume + bounded fan-out; the natural Spark expression is a
 
 - new files under the source path are discovered exactly once
   (checkpointLocation tracks consumed files — ingest-level resume),
-- each micro-batch runs ``run_extract_skewed`` over ALL of its documents
-  and upserts the result into ``extracted`` keyed on doc_id (plus, with
-  ``index_chunks``, the batch's chunk namespaces). Unlike ``run_pipeline``
-  it applies no checkpoint anti-join, no size gate, and writes neither
-  ``lineage`` nor ``checkpoints``: a re-delivered document is re-extracted
-  and replaces its row,
+- each micro-batch runs ``run_extract_skewed`` over ALL of its documents,
+  stamps the rows with ``stamp_run`` and upserts them into ``extracted``
+  keyed on doc_id (plus, with ``index_chunks``, the batch's chunk
+  namespaces). Because ``extracted`` is the resume state, stream-written
+  rows with a terminal status count as completed for a later
+  ``run_pipeline``. The stream itself applies no anti-join, no size gate
+  and writes no ``lineage``: a re-delivered document is re-extracted and
+  replaces its row,
 - watermarks/session windows are deliberately absent: the reference has no
   event-time semantics (SURVEY.md §2.10 X3).
 """
@@ -26,7 +28,7 @@ from ..core.cache import cache_scope, track
 from ..operators.skew import run_extract_skewed
 from ..sources.synthetic import INPUT_SCHEMA
 from ..sources.tables_io import Catalog
-from ..plans.pipeline import EXTRACTED_TABLE
+from ..plans.pipeline import EXTRACTED_TABLE, stamp_run
 
 
 def run_incremental(
@@ -54,13 +56,8 @@ def run_incremental(
     # are released when the batch returns
     @cache_scope()
     def process_batch(batch_df, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-        extracted = (
-            run_extract_skewed(batch_df, skew_threshold)
-            .withColumn("run_id", F.lit(f"stream-{batch_id}"))
-            .withColumn("partition_id", F.spark_partition_id())
-            .withColumn("ts", F.current_timestamp())
-        )
+        extracted = stamp_run(run_extract_skewed(batch_df, skew_threshold),
+                              f"stream-{batch_id}")
         if index_chunks:
             # both sinks consume the extraction output — run it once
             extracted = track(extracted)

@@ -18,7 +18,7 @@ Local smoke:
 The session factory only sets master/memory defaults when none are
 provided, so spark-submit's --master/--conf take precedence on a real
 cluster. Resume is automatic: a rerun with the same warehouse anti-joins
-terminally-completed doc_ids from the checkpoints table.
+terminally-completed doc_ids from the `extracted` table.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ def main() -> int:
                     help="parquet path (or Iceberg table name when a "
                          "catalog is configured) of (doc_id, spans) docs")
     ap.add_argument("--warehouse", required=True,
-                    help="catalog warehouse dir for extracted/checkpoints/"
+                    help="catalog warehouse dir for the extracted and "
                          "lineage tables")
     ap.add_argument("--skew-threshold", type=int,
                     default=C.DEFAULT_SKEW_THRESHOLD,

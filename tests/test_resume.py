@@ -33,17 +33,31 @@ def test_partial_then_resume_equals_single_run(spark, tmp_path, corpus):
         for r in read_extracted_latest(cat_once).collect()
     }
 
+    class ReadLog(Catalog):
+        reads: list[str] = []
+
+        def read(self, name, version=None):
+            self.reads.append(name)
+            return super().read(name, version)
+
     # partial run (first 30 docs) then resume over the full input
-    cat = Catalog(spark, str(tmp_path / "resumed"))
+    cat = ReadLog(spark, str(tmp_path / "resumed"))
     part_ids = {d["doc_id"] for d in corpus[:30]}
     part = full.filter(F.col("doc_id").isin(*part_ids))
     r1 = run_pipeline(spark, part, cat, run_id="r1")
     assert r1.docs_processed == 30
 
     # count_input is opt-in (full-scan metric; safe-at-scale default is off)
+    cat.reads.clear()
     r2 = run_pipeline(spark, full, cat, run_id="r2", count_input=True)
     assert r2.docs_skipped == 30          # anti-join skipped completed docs
     assert r2.docs_processed == len(corpus) - 30
+    # the sink is the checkpoint: the resume reads `extracted` once (the
+    # anti-join side), reads nothing back after writing, and the warehouse
+    # holds only the sink and the lineage log
+    assert cat.reads == ["extracted"]
+    assert sorted(p.name for p in (tmp_path / "resumed").iterdir()) == [
+        "extracted", "lineage"]
 
     got = {
         r["doc_id"]: (spans_tuples(r["spans"]), r["status"])

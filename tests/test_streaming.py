@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from mivaa_pdf_extractor_spark.operators.extract import run_extract
+from mivaa_pdf_extractor_spark.plans.pipeline import run_pipeline
 from mivaa_pdf_extractor_spark.sources.synthetic import (corpus_to_spark_df,
                                                          gen_corpus)
 from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
@@ -61,6 +62,12 @@ def test_available_now_matches_batch_and_resumes(spark, dirs):
     # idempotence: nothing new -> nothing appended
     run_incremental(spark, dirs["src"], catalog, dirs["stream_cp"])
     assert catalog.read("extracted").count() == len(docs1) + len(docs2)
+
+    # stream-written rows are resume state: a batch run over the same
+    # documents finds every one terminally completed
+    res = run_pipeline(spark, corpus_to_spark_df(spark, docs1 + docs2),
+                       catalog)
+    assert res.docs_processed == 0
 
 
 EVENTS_SCHEMA = ("event_id long, user_id long, ts timestamp, "

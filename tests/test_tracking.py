@@ -99,8 +99,7 @@ def test_auto_restart_resumable_vs_checkpointless(spark, tmp_path):
     resume anti-join; a run with no checkpoints is failed."""
     from pyspark.sql import functions as F
 
-    from mivaa_pdf_extractor_spark.plans.pipeline import (
-        CHECKPOINTS_TABLE, run_pipeline)
+    from mivaa_pdf_extractor_spark.plans.pipeline import run_pipeline
     from mivaa_pdf_extractor_spark.sources.synthetic import (
         corpus_to_spark_df, gen_corpus)
     from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
@@ -119,7 +118,7 @@ def test_auto_restart_resumable_vs_checkpointless(spark, tmp_path):
     store.write("runB", status=JOB_PROCESSING, last_heartbeat=now - 9000)
 
     flips = auto_restart_stuck(
-        store, checkpoint_run_ids(cat, CHECKPOINTS_TABLE), now=now,
+        store, checkpoint_run_ids(cat), now=now,
         timeout_seconds=1800)
     assert flips == {"runA": JOB_PENDING, "runB": JOB_FAILED}
     assert (store.get("runA")["metadata"]["restart_reason"]
