@@ -177,8 +177,8 @@ def mark_media_dups(flat: pd.DataFrame, valid: np.ndarray) -> pd.Series:
     return dup
 
 
-_SHEET_CTX_COLS = ["sheet_doc", "is_spread", "first_phys",
-                   "sheet_w", "sheet_h"]
+SHEET_CTX_COLS = ["sheet_doc", "is_spread", "first_phys",
+                  "sheet_w", "sheet_h"]
 
 
 def _sheet_ctx(flat: pd.DataFrame, valid: np.ndarray) -> pd.DataFrame | None:
@@ -221,7 +221,7 @@ def _sheet_ctx(flat: pd.DataFrame, valid: np.ndarray) -> pd.DataFrame | None:
     n_phys = np.where(d["is_spread"], 2, 1)
     d["first_phys"] = (pd.Series(n_phys).groupby(d["doc_idx"]).cumsum()
                        - n_phys + 1)
-    return d[["doc_idx", "page"] + _SHEET_CTX_COLS]
+    return d[["doc_idx", "page"] + SHEET_CTX_COLS]
 
 
 def remap_spreads(flat: pd.DataFrame,
@@ -244,15 +244,9 @@ def remap_spreads(flat: pd.DataFrame,
     sheet-addressed docs, no-op)."""
     if dims is None:
         return flat
+    # dims cover every remaining row: both callers build them from the
+    # pre-dedup rows this frame is a subset of
     flat = flat.merge(dims, on=["doc_idx", "page"], how="left")
-    # dedup may have removed a sheet's only spans; remaining rows
-    # always match a dims row, but guard dtypes anyway
-    if flat["sheet_doc"].isna().any():  # pragma: no cover
-        flat["sheet_doc"] = flat["sheet_doc"].fillna(False)
-        flat["is_spread"] = flat["is_spread"].fillna(False)
-        flat["first_phys"] = flat["first_phys"].fillna(1)
-        flat["sheet_w"] = flat["sheet_w"].fillna(0.0)
-        flat["sheet_h"] = flat["sheet_h"].fillna(0.0)
 
     flat["pos"] = 2 * flat["pos"]
     sheet = flat["sheet_doc"].to_numpy(dtype=bool)
@@ -277,7 +271,7 @@ def remap_spreads(flat: pd.DataFrame,
     right["x"] = x[in_right] - mid[in_right]
     right["pos"] = right["pos"].to_numpy() + 1
     out = pd.concat([left_part, right], ignore_index=True)
-    return out.drop(columns=_SHEET_CTX_COLS)
+    return out.drop(columns=SHEET_CTX_COLS)
 
 
 def _assemble_tables(flat: pd.DataFrame) -> pd.DataFrame:
@@ -598,15 +592,15 @@ def _reassemble_arrow(flat: pd.DataFrame, docs: pd.DataFrame,
     spans = pa.ListArray.from_arrays(pa.array(offsets), struct)
 
     n_chars = np.zeros(n_docs, dtype=np.int64)
-    has_text = np.zeros(n_docs, dtype=bool)
     if len(flat):
-        per_doc = flat.groupby("doc_idx")["tlen"].agg(["sum", "max"])
-        n_chars[per_doc.index.to_numpy()] = per_doc["sum"].to_numpy()
-        has_text[per_doc.index.to_numpy()] = per_doc["max"].to_numpy() > 0
+        per_doc = flat.groupby("doc_idx")["tlen"].sum()
+        n_chars[per_doc.index.to_numpy()] = per_doc.to_numpy()
 
+    # tlen is the UTF-8 character count, so n_chars > 0 is the oracle's
+    # "any span has text"
     status = np.where(
         docs["n_input"].to_numpy() == 0, C.STATUS_EMPTY,
-        np.where(has_text, C.STATUS_COMPLETED,
+        np.where(n_chars > 0, C.STATUS_COMPLETED,
                  np.where(counts > 0, C.STATUS_NO_TEXT,
                           C.STATUS_COMPLETED_EMPTY)),
     ).astype(object)

@@ -4,15 +4,18 @@ The reference has no skew handling (SURVEY.md §4 — one 200-page catalog just
 takes longer); the north rule requires it explicitly. One size,
 ``skew_threshold`` (T), bounds the spans a task extracts for one document:
 
-- documents with ``size(spans) <= T`` run whole through the normal
-  ``mapInArrow`` kernel (operators/extract.py);
-- a larger document is **salted by page bucket** into ``ceil(n/T) >= 2``
-  buckets: ``posexplode`` → the doc-global context (heading histogram M1,
-  per-layer media dedup I5) is computed with *native* window/groupBy
-  expressions → per ``(doc_id, page % ceil(n/T))`` bucket groups are
+- documents with ``size(spans) <= T``, and failed documents (any NULL kind)
+  of any size, run whole through the normal ``mapInArrow`` kernel
+  (operators/extract.py);
+- a larger healthy document is **salted by page bucket** into
+  ``ceil(n/T) >= 2`` buckets. The salted path keeps only the doc-global
+  work a page bucket cannot do alone, computed with *native* expressions
+  after a ``posexplode``: media dedup (I5) as a window, the heading sizes
+  (M1) as one aggregation, and the sheet context (L1–L3) as one aggregation
+  plus a running window. Each ``(doc_id, page % ceil(n/T))`` bucket is then
   processed by ``applyInPandas`` reusing the same ``process_flat`` kernel
   (one kernel invocation covers ~T spans, so the per-group pandas overhead
-  amortizes) → per-page rows are reassembled **natively** with a window
+  amortizes), and per-page rows are reassembled **natively** with a window
   cumsum for char offsets and ``array_sort``+``flatten`` for ordered span
   concatenation (SURVEY.md §7.2 step 8's "one subtle shuffle").
 
@@ -21,17 +24,19 @@ scale one 10^6-span document spreads across ~n/T tasks, and no task
 materializes the whole document until the final (columnar, JVM-side)
 concatenation.
 
-The giant subset (the DOC rows above the threshold) is persisted through
-``core.cache.track`` before fan-out, so the failure scan, the ``has_sheets``
-probe and the exploded subplans read it from cache instead of re-scanning
-the full corpus; ``run_pipeline`` and the streaming batch release it with
+The giant subset (the DOC rows routed here) is persisted through
+``core.cache.track`` before fan-out, so the ``has_sheets`` probe and the
+exploded subplans read it from cache instead of re-scanning the full
+corpus; ``run_pipeline`` and the streaming batch release it with
 ``cache_scope()``. Measured at local[4] on a 6k-doc normal corpus, the
 median wall was 1.75 s with the persist and 2.05 s without. The *exploded*
 span rows are NOT persisted (see ``_extract_giant``).
 
 The eager ``has_sheets`` probe must stay: always building the sheet-context
 subplan measured 3.92 s against 2.49 s on a resumed 1k-doc pipeline with
-three giants, and 1.72 s against 1.47 s on the 6k-doc normal corpus.
+three giants, and 1.72 s against 1.47 s on the 6k-doc normal corpus; with
+the folded sheet aggregation it still added six pipeline jobs, and a
+one-job aggregate probe in place of ``.take(1)`` added one salted-path job.
 """
 
 from __future__ import annotations
@@ -44,8 +49,8 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 from ..core import constants as C
 from ..core.cache import track
 from ..core.kinds import FLOAT_ATTR_PATTERN, INT_ATTR_PATTERN, attr_regex
-from .extract import (OUTPUT_SCHEMA, auto_partition_target, parse_attrs,
-                      process_flat, remap_spreads, run_extract)
+from .extract import (OUTPUT_SCHEMA, SHEET_CTX_COLS, auto_partition_target,
+                      parse_attrs, process_flat, remap_spreads, run_extract)
 
 _ROW_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -71,12 +76,14 @@ DEFAULT_SPANS_PER_BUCKET = C.DEFAULT_SKEW_THRESHOLD
 def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
     """applyInPandas kernel: one (doc_id, page-bucket) group of a giant doc.
 
-    Receives the doc-global heading context as a joined ``heading_entries``
-    column (list of {size, level}); media duplicates were already removed
-    upstream. Reuses the classify/assemble kernel of the normal path over
-    *all pages in the bucket at once* and returns FLAT span rows (one row
-    per output span, columnar through Arrow — no per-span Python objects);
-    per-doc offsets and span-array assembly happen natively downstream."""
+    Receives the doc-global heading context as a joined ``heading_sizes``
+    column (the sizes above the body, descending: level = index + 1) and,
+    when the corpus has sheet-addressed giants, the per-page sheet context
+    columns; media duplicates were already removed upstream. Reuses the
+    classify/assemble kernel of the normal path over *all pages in the
+    bucket at once* and returns FLAT span rows (one row per output span,
+    columnar through Arrow — no per-span Python objects); per-doc offsets
+    and span-array assembly happen natively downstream."""
     doc_id = pdf["doc_id"].iloc[0]
 
     flat = pd.DataFrame({
@@ -93,30 +100,20 @@ def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
     # It was joined on (doc_id, page_hint), the same parse as `page`, so
     # one row per page is the normal path's per-sheet dims frame.
     dims = None
-    if pdf["sheet_doc"].any():
-        dims = pd.DataFrame({
-            "doc_idx": flat["doc_idx"].to_numpy(),
-            "page": flat["page"].to_numpy(),
-            "sheet_doc": pdf["sheet_doc"].to_numpy(dtype=bool),
-            "is_spread": pdf["is_spread"].to_numpy(dtype=bool),
-            "first_phys": pdf["first_phys"].to_numpy(dtype=np.int64),
-            "sheet_w": pdf["sheet_w"].to_numpy(dtype=np.float64),
-            "sheet_h": pdf["sheet_h"].to_numpy(dtype=np.float64),
-        }).drop_duplicates("page")
+    if "sheet_doc" in pdf and pdf["sheet_doc"].any():
+        dims = (pdf[SHEET_CTX_COLS]
+                .assign(doc_idx=0, page=flat["page"].to_numpy())
+                .drop_duplicates("page"))
     flat = remap_spreads(flat, dims)
 
-    hs = pdf["heading_str"].iloc[0]
-    if hs:
-        pairs = [e.split(":") for e in hs.split(",")]
-        headings = pd.DataFrame({
-            "doc_idx": np.zeros(len(pairs), dtype=np.int64),
-            "size": [float(p[0]) for p in pairs],
-            "level": [int(p[1]) for p in pairs],
-        })
-    else:
-        headings = pd.DataFrame({"doc_idx": pd.Series(dtype=np.int64),
-                                 "size": pd.Series(dtype=np.float64),
-                                 "level": pd.Series(dtype=np.int64)})
+    sizes = pdf["heading_sizes"].iloc[0]
+    sizes = np.array([] if sizes is None else sizes, dtype=np.float64)
+    headings = pd.DataFrame({
+        "doc_idx": np.zeros(len(sizes), dtype=np.int64),
+        "size": sizes,
+        "level": np.minimum(np.arange(1, len(sizes) + 1, dtype=np.int64),
+                            C.MAX_HEADING_LEVEL),
+    })
 
     out = process_flat(flat, headings)
     if not len(out):
@@ -137,22 +134,26 @@ def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
-    """Per-page-bucket salted extraction of documents above the threshold,
-    ``ceil(n_spans / skew_threshold)`` buckets per document.
+    """Per-page-bucket salted extraction of healthy documents above the
+    threshold, ``ceil(n_spans / skew_threshold)`` buckets per document.
 
-    Stage-lean plan (each line after the explode is one shuffle at most):
-      explode -> [doc-level failure scan (tiny agg)]
-              -> media dedup as a window *filter* on media rows only,
-                 unioned back with the narrow non-media rows
-              -> heading histogram (two tiny aggs) broadcast-joined
+    Only three kinds of work happen here. Each line after the explode is
+    one shuffle at most:
+      explode -> doc-global context a page bucket cannot compute alone:
+                 - media dedup as a window *filter* on media rows only,
+                   unioned back with the narrow non-media rows
+                 - heading sizes: one per-doc aggregation, broadcast-joined
+                 - sheet context (only when the probe finds sheets): one
+                   per-(doc, sheet) aggregation plus a running window,
+                   broadcast-joined
               -> one full shuffle into (doc_id, page-bucket) groups
               -> applyInPandas kernel
               -> window cumsum + groupBy reassembly (same key: one shuffle)
-              -> final broadcast left-join against the giant id list to
-                 restore all-stripped and failed documents
+              -> final left-join against the giant id list to restore
+                 documents whose spans were all stripped
     """
     # persist ONLY the giant subset: the size filter is not pushable
-    # (computed column), so without this the 4 downstream subplans would
+    # (computed column), so without this the downstream subplans would
     # each re-scan the FULL corpus — harmless on a 65 MB bench corpus,
     # disqualifying at 100 TB. The subset is the skew tail (p99 docs), so
     # the cache is small by construction. The *exploded* form is NOT
@@ -160,9 +161,8 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
     # threads (cache build + block-manager contention + GC) than
     # re-exploding the cached doc rows.
     giant = track(giant)
-    giant_ids = giant.select("doc_id")
 
-    exploded = (
+    ok = (
         giant.select("doc_id", F.size("spans").alias("n_doc_spans"),
                      F.posexplode("spans").alias("pos", "span"))
         .select(
@@ -175,27 +175,16 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
         .withColumn("page_hint", F.coalesce(
             F.nullif(F.regexp_extract("kind", _PAGE_RE, 1), F.lit("")),
             F.lit("1")).cast("long"))
+        .filter(~F.col("base").isin(*C.BOILERPLATE_KINDS))
     )
-    # doc-level failure: any NULL kind (same semantics as the normal
-    # path). Round 6: probed with an array-level exists() on the
-    # persisted DOC rows — the explode + distinct shuffle the round-5
-    # shape paid for this tiny flag is gone (one cheap cached scan,
-    # zero exchanges; giants' spans arrays are non-null by the router's
-    # size() > threshold gate).
-    failed = (giant.filter(F.exists("spans",
-                                    lambda s: s["kind"].isNull()))
-              .select("doc_id").withColumn("is_failed", F.lit(True)))
 
-    ok = exploded.filter(F.col("kind").isNotNull()) \
-                 .filter(~F.col("base").isin(*C.BOILERPLATE_KINDS))
+    def num(key, default="0"):
+        return F.coalesce(
+            F.nullif(F.regexp_extract("kind", attr_regex(key, FLOAT_ATTR_PATTERN), 1),
+                     F.lit("")), F.lit(default)).cast("double")
 
     # media dedup (I5) as a window filter over the (small) media subset:
     # keep the first (page, y, x, pos) occurrence per (doc, layer, phash)
-    def num(key):
-        return F.coalesce(
-            F.nullif(F.regexp_extract("kind", attr_regex(key, FLOAT_ATTR_PATTERN), 1),
-                     F.lit("")), F.lit("0")).cast("double")
-
     is_media = F.col("base").isin(*C.MEDIA_KINDS)
     phash = F.regexp_extract("kind", r"(?:^|;)phash=([^;]*)", 1)
     media = (ok.filter(is_media & (phash != ""))
@@ -206,53 +195,35 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
     rest = ok.filter(~(is_media & (phash != "")))
     deduped = rest.unionByName(media)
 
-    # doc-global heading histogram (M1): two tiny aggregations
-    size_col = F.coalesce(
-        F.nullif(F.regexp_extract("kind", attr_regex("size", FLOAT_ATTR_PATTERN), 1),
-                 F.lit("")),
-        F.lit("10")).cast("double")
-    # Round 6: the body-size window + tt-vs-body join + second groupBy
-    # of the round-5 shape (3 exchanges + a join over the histogram)
-    # collapse into ONE per-doc aggregation followed by array ops —
-    # the per-doc histogram is bounded by DISTINCT font sizes, so the
-    # collected array is tiny at any document size. Equivalences:
-    # body = first of sort by (count desc, size asc); dense_rank over
-    # distinct sizes desc == index+1 in the sorted-desc array.
-    tt = (ok.filter(F.col("base").isin("text", "title"))
-          .withColumn("size", size_col)
-          .groupBy("doc_id", "size").count())
-    per_doc = tt.groupBy("doc_id").agg(
-        F.collect_list(F.struct("size", "count")).alias("hl"))
-    body_size = F.element_at(
-        F.array_sort(F.transform(
-            F.col("hl"),
-            lambda s: F.struct((-s["count"]).alias("nc"),
-                               s["size"].alias("size")))), 1)["size"]
-    heads_neg = F.array_sort(F.transform(
-        F.filter(F.col("hl"), lambda s: s["size"] > F.col("body_size")),
-        lambda s: -s["size"]))
+    # doc-global heading context (M1) in one aggregation: the body is the
+    # most frequent text/title size (deterministic mode breaks ties toward
+    # the smaller size, as the kernel does), and every distinct size above
+    # it is a heading, level = rank by size descending. The set of distinct
+    # font sizes is tiny at any document size.
     headings = (
-        per_doc.withColumn("body_size", body_size)
-        .select("doc_id", F.concat_ws(",", F.transform(
-            heads_neg,
-            lambda ns, i: F.concat_ws(
-                ":", (-ns).cast("string"),
-                F.least(i + 1, F.lit(C.MAX_HEADING_LEVEL))
-                .cast("string")))).alias("heading_str"))
-    )
+        ok.filter(F.col("base").isin("text", "title"))
+        .withColumn("size", num("size", "10"))
+        .groupBy("doc_id")
+        .agg(F.mode("size", deterministic=True).alias("body"),
+             F.collect_set("size").alias("sizes"))
+        .select("doc_id", F.sort_array(
+            F.filter("sizes", lambda s: s > F.col("body")), asc=False)
+            .alias("heading_sizes")))
 
-    # doc-global sheet context (L3/L5 spread remap + the L2 full-spread
-    # gate): per-sheet dims from tiny aggs over the PRE-dedup rows — sheet
+    with_ctx = deduped.join(F.broadcast(headings), "doc_id", "left")
+    ctx_cols = ["heading_sizes"]
+
+    # doc-global sheet context (L1–L3: per-sheet dims, the L2 full-spread
+    # gate, the physical-page counter) from the PRE-dedup rows — sheet
     # geometry is a property of the sheet (reference: page.rect / page
     # images), and sourcing from `ok` keeps the expensive dedup-window
-    # subplan computed exactly once. Physical-page counter as a window
-    # cumsum, broadcast back per (doc, sheet). Docs without sw/sh attrs
-    # flow through with sheet_doc=false -> the kernel's remap fast-path.
+    # subplan computed exactly once. Every (doc, sheet) of `deduped` has a
+    # row here, since both come from `ok`.
     #
     # The whole subplan is gated on a one-boolean probe of the (persisted)
     # giant subset: without any ';sw=' attr the remap is a provable no-op,
     # so corpora with no sheet-addressed docs — the common case — pay one
-    # cached early-exit scan instead of two extra aggregate subplans.
+    # cached early-exit scan instead of an extra aggregate subplan.
     has_sheets = bool(giant.filter(F.exists(
         "spans",
         lambda s: F.coalesce(s["kind"].contains(";sw="), F.lit(False))
@@ -261,41 +232,28 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
         wdoc = Window.partitionBy("doc_id")
         wsheet = (Window.partitionBy("doc_id").orderBy("page_hint")
                   .rowsBetween(Window.unboundedPreceding, -1))
-        sheet_sizes = (ok.groupBy("doc_id", "page_hint")
-                       .agg(F.max(num("sw")).alias("sheet_w"),
-                            F.max(num("sh")).alias("sheet_h")))
-        full_flag = (
-            ok.filter(F.col("base").isin(*C.MEDIA_KINDS))
-            .select("doc_id", "page_hint", num("w").alias("iw"),
-                    num("h").alias("ih"))
-            .join(sheet_sizes, ["doc_id", "page_hint"])
-            .groupBy("doc_id", "page_hint")
-            .agg(F.max((F.col("iw") >= C.FULL_SPREAD_WIDTH_FRAC
-                        * F.col("sheet_w"))
-                       & (F.col("ih") >= C.FULL_SPREAD_HEIGHT_FRAC
-                          * F.col("sheet_h"))).alias("full_img")))
+        sw, sh = F.col("sheet_w"), F.col("sheet_h")
+        full_img = F.exists("media", lambda m: (
+            (m["w"] >= C.FULL_SPREAD_WIDTH_FRAC * sw)
+            & (m["h"] >= C.FULL_SPREAD_HEIGHT_FRAC * sh)))
         sheet_dims = (
-            sheet_sizes
-            .join(full_flag, ["doc_id", "page_hint"], "left")
-            .withColumn("valid",
-                        (F.col("sheet_w") > 0) & (F.col("sheet_h") > 0))
-            .withColumn("sheet_doc", F.max("valid").over(wdoc))
-            .withColumn("is_spread",
-                        (F.col("sheet_h") > 0)
-                        & (F.col("sheet_w") / F.col("sheet_h")
-                           > C.SPREAD_ASPECT)
-                        & ~F.coalesce(F.col("full_img"), F.lit(False)))
-            .withColumn("n_phys",
-                        F.when(F.col("is_spread"), 2).otherwise(1))
-            .withColumn("first_phys",
-                        (F.coalesce(F.sum("n_phys").over(wsheet), F.lit(0))
-                         + 1).cast("long"))
-            .select("doc_id", "page_hint", "sheet_doc", "is_spread",
-                    "first_phys", "sheet_w", "sheet_h"))
+            ok.groupBy("doc_id", "page_hint")
+            .agg(F.max(num("sw")).alias("sheet_w"),
+                 F.max(num("sh")).alias("sheet_h"),
+                 F.collect_list(F.when(is_media, F.struct(
+                     num("w").alias("w"), num("h").alias("h"))))
+                 .alias("media"))
+            .withColumn("sheet_doc", F.max((sw > 0) & (sh > 0)).over(wdoc))
+            .withColumn("is_spread", (sh > 0)
+                        & (sw / sh > C.SPREAD_ASPECT) & ~full_img)
+            .withColumn("first_phys", (F.coalesce(
+                F.sum(F.when(F.col("is_spread"), 2).otherwise(1))
+                .over(wsheet), F.lit(0)) + 1).cast("long"))
+            .select("doc_id", "page_hint", *SHEET_CTX_COLS))
+        with_ctx = with_ctx.join(F.broadcast(sheet_dims),
+                                 ["doc_id", "page_hint"], "left")
+        ctx_cols += SHEET_CTX_COLS
 
-    # ship the kernel only what it consumes: doc-global heading context is a
-    # compact string (a per-row list<struct> duplicate is pure Arrow bloat),
-    # and base/page_hint are re-derived by the kernel's own attr parse.
     # Salt count ADAPTS to document size (~skew_threshold spans per
     # bucket): a fixed salt count either shreds medium giants into
     # thousands of tiny applyInPandas groups (per-group pandas overhead
@@ -304,31 +262,12 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
     # bounded by bucket, not by document. Every document here has more
     # than skew_threshold spans, so it gets at least two buckets.
     n_salts_doc = F.ceil(F.col("n_doc_spans") / F.lit(skew_threshold))
-    with_ctx = deduped.join(F.broadcast(headings), "doc_id", "left")
-    if has_sheets:
-        with_ctx = with_ctx.join(F.broadcast(sheet_dims),
-                                 ["doc_id", "page_hint"], "left")
-    else:
-        with_ctx = (with_ctx
-                    .withColumn("sheet_doc", F.lit(False))
-                    .withColumn("is_spread", F.lit(False))
-                    .withColumn("first_phys", F.lit(1).cast("long"))
-                    .withColumn("sheet_w", F.lit(0.0))
-                    .withColumn("sheet_h", F.lit(0.0)))
-    pages_in = (with_ctx
-                .withColumn("bucket", F.pmod(F.col("page_hint"),
-                                             n_salts_doc))
-                .select("doc_id", "pos", "kind", "text", "ref", "bucket",
-                        F.coalesce("heading_str", F.lit(""))
-                        .alias("heading_str"),
-                        F.coalesce("sheet_doc", F.lit(False))
-                        .alias("sheet_doc"),
-                        F.coalesce("is_spread", F.lit(False))
-                        .alias("is_spread"),
-                        F.coalesce("first_phys", F.lit(1))
-                        .alias("first_phys"),
-                        F.coalesce("sheet_w", F.lit(0.0)).alias("sheet_w"),
-                        F.coalesce("sheet_h", F.lit(0.0)).alias("sheet_h")))
+
+    # ship the kernel only what it consumes: base/page_hint are re-derived
+    # by the kernel's own attr parse
+    pages_in = with_ctx.select(
+        "doc_id", "pos", "kind", "text", "ref",
+        F.pmod(F.col("page_hint"), n_salts_doc).alias("bucket"), *ctx_cols)
 
     # explicit repartition on the exact grouping keys: the groupBy reuses
     # this hash partitioning, and the fixed partition count keeps AQE from
@@ -366,34 +305,24 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
                     x["page"].cast("int").alias("page"))).alias("spans"),
             F.count(F.lit(1)).cast("int").alias("n_spans"),
             F.sum("tlen").alias("n_chars"),
-            F.max(F.col("tlen") > 0).alias("has_text"),
         )
     )
 
     # one final join restores documents that produced no page rows at all
-    # (failed, or everything stripped as boilerplate)
+    # (everything stripped as boilerplate); status follows the kernel's
+    # rule: completed iff any text (n_chars > 0)
     empty_spans = F.array().cast(OUTPUT_SCHEMA["spans"].dataType)
-    out = (giant_ids
-           .join(F.broadcast(failed), "doc_id", "left")
-           .join(docs, "doc_id", "left")
-           .select(
-               "doc_id",
-               F.when(F.col("is_failed"), empty_spans)
-               .otherwise(F.coalesce(F.col("spans"), empty_spans))
-               .alias("spans"),
-               F.when(F.col("is_failed"), F.lit(0))
-               .otherwise(F.coalesce(F.col("n_spans"), F.lit(0)))
-               .alias("n_spans"),
-               F.when(F.col("is_failed"), F.lit(0).cast("long"))
-               .otherwise(F.coalesce(F.col("n_chars"), F.lit(0).cast("long")))
-               .alias("n_chars"),
-               F.when(F.col("is_failed"), C.STATUS_FAILED)
-               .when(F.col("has_text"), C.STATUS_COMPLETED)
-               .when(F.coalesce(F.col("n_spans"), F.lit(0)) > 0,
-                     C.STATUS_NO_TEXT)
-               .otherwise(C.STATUS_COMPLETED_EMPTY).alias("status"),
-           ))
-    return out
+    return (giant.select("doc_id")
+            .join(docs, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.coalesce("spans", empty_spans).alias("spans"),
+                F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
+                F.coalesce("n_chars", F.lit(0).cast("long")).alias("n_chars"),
+                F.when(F.col("n_chars") > 0, C.STATUS_COMPLETED)
+                .when(F.col("n_spans") > 0, C.STATUS_NO_TEXT)
+                .otherwise(C.STATUS_COMPLETED_EMPTY).alias("status"),
+            ))
 
 
 def run_extract_skewed(
@@ -405,16 +334,22 @@ def run_extract_skewed(
     ``skew_threshold`` spans run whole through the Arrow kernel, larger ones
     per page bucket of about ``skew_threshold`` spans; one unioned output.
 
+    A failed document (any NULL kind) of any size also runs in the kernel,
+    which marks it ``failed`` and drops its rows right after flatten, so it
+    is never parsed: a failed giant costs one flatten in one task. The
+    NULL-kind check only runs for documents above the threshold.
+
     ``num_partitions`` None probes the raw source once; >0 pins a
     repartition of the normal documents (see ``run_extract``)."""
     if skew_threshold < 1:
         raise ValueError(f"skew_threshold must be >= 1, got {skew_threshold}")
-    n = F.size("spans")  # -1 for NULL arrays -> normal path handles them
-    normal = df.filter((n <= skew_threshold))
-    giant = df.filter(n > skew_threshold)
+    # size() is -1 for NULL arrays, so they stay on the normal path; And
+    # short-circuits, so the forall scan only sees documents above T
+    salted = ((F.size("spans") > skew_threshold)
+              & F.forall("spans", lambda s: s["kind"].isNotNull()))
     if num_partitions is None:
         # probe the RAW source once (one extra plan compile total) instead
         # of letting run_extract probe the filtered subplan per call
         num_partitions = auto_partition_target(df)
-    return run_extract(normal, num_partitions).unionByName(
-        _extract_giant(giant, skew_threshold))
+    return run_extract(df.filter(~salted), num_partitions).unionByName(
+        _extract_giant(df.filter(salted), skew_threshold))

@@ -61,12 +61,15 @@ spark.stop()
 def test_two_process_disjoint_upserts(tmp_path, spark):
     warehouse = str(tmp_path / "wh")
     script = WRITER.format(repo=str(REPO))
+    # the writers start together, so an unpinned heap would size both from
+    # the same free memory before either pre-touches it
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
     procs = [
         subprocess.Popen(
             [sys.executable, "-c", script, str(lo), str(hi), "5",
              warehouse],
             stdout=subprocess.PIPE, stderr=subprocess.PIPE,
-            cwd=str(REPO))
+            cwd=str(REPO), env=env)
         for lo, hi in ((0, 200), (200, 400))
     ]
     outs = []

@@ -5,11 +5,14 @@ full deterministic fixture corpus (north rule / BASELINE.json:15)."""
 import pyarrow as pa
 import pytest
 
+from mivaa_pdf_extractor_spark.core import constants as C
+from mivaa_pdf_extractor_spark.core.kinds import make_kind
 from mivaa_pdf_extractor_spark.operators.extract import (extract_iter_arrow,
                                                          run_extract)
 from mivaa_pdf_extractor_spark.operators.skew import run_extract_skewed
 from mivaa_pdf_extractor_spark.oracle import extract_document
-from mivaa_pdf_extractor_spark.sources.synthetic import (corpus_to_spark_df,
+from mivaa_pdf_extractor_spark.sources.synthetic import (_span,
+                                                          corpus_to_spark_df,
                                                           gen_corpus)
 
 from .conftest import spans_tuples
@@ -58,11 +61,30 @@ def test_spark_skew_path_equals_oracle(spark):
     giant = max(docs, key=lambda d: len(d["spans"]))
     docs += [{"doc_id": f"boundary-{n}", "spans": giant["spans"][:n]}
              for n in (threshold, threshold + 1)]
+    # edge documents above the threshold: a failed giant (one NULL kind),
+    # a boilerplate-only giant, and a giant whose two text sizes tie in
+    # count (the smaller is the body, the larger a heading)
+    docs += [
+        {"doc_id": "edge-failed",
+         "spans": giant["spans"][:threshold + 5]
+         + [_span(None, "lost")]},
+        {"doc_id": "edge-boilerplate",
+         "spans": [_span(make_kind("header", page=1 + i // 50, y=5, x=50),
+                         "GIANT") for i in range(threshold + 3)]},
+        {"doc_id": "edge-size-tie",
+         "spans": [_span(make_kind("text", page=1 + i // 40, y=40 + i % 40,
+                                   x=50, size=(10, 14)[i % 2]), f"w{i}")
+                   for i in range(threshold + 2)]},
+    ]
     df = corpus_to_spark_df(spark, docs)
     out = run_extract_skewed(df, skew_threshold=threshold, num_partitions=4)
     rows = {r["doc_id"]: r.asDict() for r in out.collect()}
     assert len(rows) == len(docs)
     assert_equal(docs, rows)
+    assert rows["edge-failed"]["status"] == C.STATUS_FAILED
+    assert rows["edge-boilerplate"]["status"] == C.STATUS_COMPLETED_EMPTY
+    tie = [s["text"] for s in rows["edge-size-tie"]["spans"]]
+    assert tie[:2] == ["w0", "# w1"]
 
 
 def test_skew_threshold_below_one_is_rejected(spark):
