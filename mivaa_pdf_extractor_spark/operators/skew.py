@@ -25,18 +25,22 @@ materializes the whole document until the final (columnar, JVM-side)
 concatenation.
 
 The giant subset (the DOC rows routed here) is persisted through
-``core.cache.track`` before fan-out, so the ``has_sheets`` probe and the
-exploded subplans read it from cache instead of re-scanning the full
-corpus; ``run_pipeline`` and the streaming batch release it with
-``cache_scope()``. Measured at local[4] on a 6k-doc normal corpus, the
-median wall was 1.75 s with the persist and 2.05 s without. The *exploded*
-span rows are NOT persisted (see ``_extract_giant``).
+``core.cache.track`` and probed once, eagerly, before any salted
+expression is built; ``run_pipeline`` and the streaming batch release the
+persist with ``cache_scope()``. Measured at local[4] on a 6k-doc normal
+corpus, the median wall was 1.75 s with the persist and 2.05 s without.
+The *exploded* span rows are NOT persisted (see ``_extract_giant``).
 
-The eager ``has_sheets`` probe must stay: always building the sheet-context
-subplan measured 3.92 s against 2.49 s on a resumed 1k-doc pipeline with
-three giants, and 1.72 s against 1.47 s on the 6k-doc normal corpus; with
-the folded sheet aggregation it still added six pipeline jobs, and a
-one-job aggregate probe in place of ``.take(1)`` added one salted-path job.
+One probe answers both routing questions: whether any document is a giant
+at all, and whether any giant carries a ``;sw=`` sheet attr. A batch with
+no giant runs the kernel plan alone, with no filter, no union and no
+salted subplan: at local[4] on the 6k-doc normal corpus (no giant) the
+plan build went from 1.04 s and two eager jobs to 0.32 s and one job,
+and the median of ten runs went from 2,563 to 3,434 docs/s. Without
+``;sw=`` the sheet remap is a provable no-op, so the sheet-context
+subplan is built only on a ``True`` answer: always building it measured
+3.92 s against 2.49 s on a resumed 1k-doc pipeline with three giants,
+and with the folded sheet aggregation it still added six pipeline jobs.
 """
 
 from __future__ import annotations
@@ -133,9 +137,14 @@ def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
     })
 
 
-def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
+def _extract_giant(giant: DataFrame, skew_threshold: int,
+                   has_sheets: bool) -> DataFrame:
     """Per-page-bucket salted extraction of healthy documents above the
     threshold, ``ceil(n_spans / skew_threshold)`` buckets per document.
+
+    ``giant`` is the non-empty, already-persisted giant subset and
+    ``has_sheets`` the probe's answer to "does any giant carry ``;sw=``"
+    (see ``run_extract_skewed``).
 
     Only three kinds of work happen here. Each line after the explode is
     one shuffle at most:
@@ -152,16 +161,9 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
               -> final left-join against the giant id list to restore
                  documents whose spans were all stripped
     """
-    # persist ONLY the giant subset: the size filter is not pushable
-    # (computed column), so without this the downstream subplans would
-    # each re-scan the FULL corpus — harmless on a 65 MB bench corpus,
-    # disqualifying at 100 TB. The subset is the skew tail (p99 docs), so
-    # the cache is small by construction. The *exploded* form is NOT
-    # persisted: a span-level InMemoryRelation measured 2x slower at 32
-    # threads (cache build + block-manager contention + GC) than
-    # re-exploding the cached doc rows.
-    giant = track(giant)
-
+    # the *exploded* form is NOT persisted: a span-level InMemoryRelation
+    # measured 2x slower at 32 threads (cache build + block-manager
+    # contention + GC) than re-exploding the cached doc rows
     ok = (
         giant.select("doc_id", F.size("spans").alias("n_doc_spans"),
                      F.posexplode("spans").alias("pos", "span"))
@@ -219,15 +221,7 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
     # images), and sourcing from `ok` keeps the expensive dedup-window
     # subplan computed exactly once. Every (doc, sheet) of `deduped` has a
     # row here, since both come from `ok`.
-    #
-    # The whole subplan is gated on a one-boolean probe of the (persisted)
-    # giant subset: without any ';sw=' attr the remap is a provable no-op,
-    # so corpora with no sheet-addressed docs — the common case — pay one
-    # cached early-exit scan instead of an extra aggregate subplan.
-    has_sheets = bool(giant.filter(F.exists(
-        "spans",
-        lambda s: F.coalesce(s["kind"].contains(";sw="), F.lit(False))
-    )).take(1))
+    # Built only when the probe found a ';sw=' attr (see the module doc).
     if has_sheets:
         wdoc = Window.partitionBy("doc_id")
         wsheet = (Window.partitionBy("doc_id").orderBy("page_hint")
@@ -339,6 +333,12 @@ def run_extract_skewed(
     is never parsed: a failed giant costs one flatten in one task. The
     NULL-kind check only runs for documents above the threshold.
 
+    The giant subset is persisted and probed with one eager job before any
+    salted expression is built. When it is empty, the whole input runs the
+    kernel plan alone: no filter, no union, no salted subplan. Dropping the
+    filter is safe, since every document then fits the kernel, and a giant
+    that appears in the source after the probe still gets its row.
+
     ``num_partitions`` None probes the raw source once; >0 pins a
     repartition of the normal documents (see ``run_extract``)."""
     if skew_threshold < 1:
@@ -351,5 +351,19 @@ def run_extract_skewed(
         # probe the RAW source once (one extra plan compile total) instead
         # of letting run_extract probe the filtered subplan per call
         num_partitions = auto_partition_target(df)
+    # persist ONLY the giant subset: the size filter is not pushable
+    # (computed column), so without this the salted subplans would each
+    # re-scan the FULL corpus. The subset is the skew tail, so the cache
+    # is small by construction. One job fills it and answers both routing
+    # questions: no row means no giant, and the sorted-first row's boolean
+    # says whether any giant is sheet-addressed.
+    giant = track(df.filter(salted))
+    probe = (giant.select(F.exists(
+        "spans",
+        lambda s: F.coalesce(s["kind"].contains(";sw="), F.lit(False))
+    ).alias("sheets")).orderBy(F.desc("sheets")).take(1))
+    if not probe:
+        giant.unpersist()
+        return run_extract(df, num_partitions)
     return run_extract(df.filter(~salted), num_partitions).unionByName(
-        _extract_giant(df.filter(salted), skew_threshold))
+        _extract_giant(giant, skew_threshold, probe[0]["sheets"]))

@@ -6,7 +6,8 @@
       -> stamp run_id, partition_id, ts and persist the result once
       -> upsert `extracted` on doc_id: the sink IS the checkpoint
       -> append `lineage` per partition, aggregated from the persisted
-         frame (no read-back of either table)
+         frame (no read-back of either table); the breaker totals are an
+         Observation on that same write
       -> circuit-breaker assertion (>=1 failure and 0 successes -> abort),
          modeling stage_1_layout_precompute.py:466-489,650-674
 
@@ -22,11 +23,11 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..core import constants as C
 from ..core.cache import cache_scope, track
-from ..operators.extract import OUTPUT_SCHEMA
+from ..operators.extract import OUTPUT_SCHEMA, auto_partition_target
 from ..operators.skew import run_extract_skewed
 from ..sources.tables_io import Catalog
 
@@ -123,6 +124,11 @@ def run_pipeline(
         F.lit(0).cast("long").alias("n_chars"),
         F.lit(C.STATUS_OVERSIZE).alias("status"))
     todo = todo.filter(size_ok)
+    if num_partitions is None:
+        # size the kernel spread from the source: a broadcast anti-join
+        # keeps the stream side's scan partitions, and probing `todo`
+        # would execute the anti-join's broadcast once more at plan time
+        num_partitions = auto_partition_target(documents)
 
     # persisted once: the sink upsert evaluates it up to three times and
     # lineage aggregates it again; the scope releases it on return
@@ -135,20 +141,21 @@ def run_pipeline(
     # when available; versioned parquet with atomic pointer swap otherwise.
     catalog.upsert(extracted, EXTRACTED_TABLE, key="doc_id")
 
+    # the breaker totals ride the lineage write as an Observation; an
+    # empty run sums to NULL, hence the coalesce
+    totals = Observation("totals")
     lineage = extracted.groupBy("run_id", "partition_id").agg(
         F.count("*").alias("docs"),
         F.sum("n_spans").alias("spans"),
         F.sum("n_chars").alias("bytes"),
         F.sum((F.col("status") == C.STATUS_FAILED).cast("long")).alias("failures"),
         F.lit(int((time.time() - t0) * 1000)).alias("wall_ms"),
-    )
+    ).observe(totals,
+              F.coalesce(F.sum("docs"), F.lit(0)).alias("docs"),
+              F.coalesce(F.sum("failures"), F.lit(0)).alias("failures"))
     catalog.append(lineage, LINEAGE_TABLE)
-
-    agg = lineage.agg(
-        F.coalesce(F.sum("docs"), F.lit(0)).alias("docs"),
-        F.coalesce(F.sum("failures"), F.lit(0)).alias("failures"),
-    ).collect()[0]
-    processed, failures = int(agg["docs"]), int(agg["failures"])
+    got = totals.get
+    processed, failures = int(got["docs"]), int(got["failures"])
 
     if failures > 0 and failures == processed:
         raise CircuitBreakerTripped(
