@@ -8,8 +8,9 @@ dedup/similarity/text-analysis operators for training-data pipelines, and a
 resumable checkpointed pipeline with per-partition lineage.
 
 Architecture: declarative DataFrame plans + an Arrow-vectorized
-``mapInArrow`` extraction kernel (giant documents: salted ``applyInPandas``
-page buckets over the same kernel); no per-row Python UDFs anywhere.
+``mapInArrow`` extraction kernel (giant documents: salted page buckets
+run through the same kernel's Arrow stages by ``applyInArrow``); no per-row
+Python UDFs anywhere.
 """
 
 __version__ = "0.1.0"

@@ -8,16 +8,18 @@ takes longer); the north rule requires it explicitly. One size,
   of any size, run whole through the normal ``mapInArrow`` kernel
   (operators/extract.py);
 - a larger healthy document is **salted by page bucket** into
-  ``ceil(n/T) >= 2`` buckets. The salted path keeps only the doc-global
-  work a page bucket cannot do alone, computed with *native* expressions
-  after a ``posexplode``: media dedup (I5) as a window, the heading sizes
-  (M1) as one aggregation, and the sheet context (L1–L3) as one aggregation
-  plus a running window. Each ``(doc_id, page % ceil(n/T))`` bucket is then
-  processed by ``applyInPandas`` reusing the same ``process_flat`` kernel
-  (one kernel invocation covers ~T spans, so the per-group pandas overhead
-  amortizes), and per-page rows are reassembled **natively** with a window
-  cumsum for char offsets and ``array_sort``+``flatten`` for ordered span
-  concatenation (SURVEY.md §7.2 step 8's "one subtle shuffle").
+  ``ceil(n/T) >= 2`` contiguous page ranges. The salted path keeps only the
+  doc-global work a page bucket cannot do alone, computed with *native*
+  expressions after a ``posexplode``: media dedup (I5) as a window, the
+  heading sizes (M1) and the page range as one aggregation, and the sheet
+  context (L1–L3) as one aggregation plus a running window. Each
+  ``(doc_id, bucket)`` group is then a one-document batch for the kernel's
+  own Arrow stages (``applyInArrow``: flatten, attr parse, boilerplate
+  filter, spread remap, ``process_flat``, reassembly), which return one
+  finished row with bucket-local offsets. The ~n/T bucket rows are joined
+  **natively**: a window sum of the earlier buckets' characters shifts the
+  offsets, and one ``groupBy`` concatenates the span arrays in bucket order
+  (SURVEY.md §7.2 step 8's "one subtle shuffle").
 
 Work is split only when a document is too big for one task: at cluster
 scale one 10^6-span document spreads across ~n/T tasks, and no task
@@ -47,24 +49,19 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..core import constants as C
 from ..core.cache import track
 from ..core.kinds import FLOAT_ATTR_PATTERN, INT_ATTR_PATTERN, attr_regex
-from .extract import (OUTPUT_SCHEMA, SHEET_CTX_COLS, auto_partition_target,
-                      parse_attrs, process_flat, remap_spreads, run_extract)
+from .extract import (OUTPUT_SCHEMA, SHEET_CTX_COLS, _flatten_arrow,
+                      _reassemble_arrow, auto_partition_target, parse_attrs,
+                      process_flat, remap_spreads, run_extract)
 
-_ROW_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("page", T.LongType()),
-    T.StructField("seq", T.LongType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("tlen", T.LongType()),
-])
+_BUCKET_SCHEMA = T.StructType(
+    OUTPUT_SCHEMA.fields + [T.StructField("bucket", T.LongType())])
 
 # shared attr grammar (core/kinds.py): signed, anchored to the full ;-segment
 # so the skew path parses EXACTLY like the normal kernel and the oracle —
@@ -72,46 +69,47 @@ _ROW_SCHEMA = T.StructType([
 # the low-DPI gate only on the skew path.
 _PAGE_RE = attr_regex("page", INT_ATTR_PATTERN)
 
-# salted buckets hold at most skew_threshold spans; perfbench sizes its
-# two-bucket giant against this name
+# salted buckets hold about skew_threshold spans (whole pages, so more or
+# less when page densities differ); perfbench sizes its two-bucket giant
+# against this name
 DEFAULT_SPANS_PER_BUCKET = C.DEFAULT_SKEW_THRESHOLD
 
 
-def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel: one (doc_id, page-bucket) group of a giant doc.
+def _extract_bucket(table: pa.Table) -> pa.Table:
+    """applyInArrow kernel: one (doc_id, bucket) group of a giant document,
+    run as a one-document batch through the normal kernel's own stages.
 
-    Receives the doc-global heading context as a joined ``heading_sizes``
-    column (the sizes above the body, descending: level = index + 1) and,
-    when the corpus has sheet-addressed giants, the per-page sheet context
-    columns; media duplicates were already removed upstream. Reuses the
-    classify/assemble kernel of the normal path over *all pages in the
-    bucket at once* and returns FLAT span rows (one row per output span,
-    columnar through Arrow — no per-span Python objects); per-doc offsets
-    and span-array assembly happen natively downstream."""
-    doc_id = pdf["doc_id"].iloc[0]
+    The rows carry the doc-global heading context as ``heading_sizes`` (the
+    sizes above the body, descending: level = index + 1) and, when any giant
+    is sheet-addressed, the per-page sheet context columns; media duplicates
+    were already removed upstream. Returns one finished output row (offsets
+    local to the bucket) plus its bucket id."""
+    batch = table.sort_by("pos").combine_chunks().to_batches()[0]
+    spans = pa.StructArray.from_arrays(
+        [batch.column("kind"), batch.column("text"), batch.column("ref")],
+        names=["kind", "text", "media_ref"])
+    flat, docs = _flatten_arrow(pa.RecordBatch.from_arrays(
+        [batch.column("doc_id").slice(0, 1),
+         pa.ListArray.from_arrays(pa.array([0, len(spans)], pa.int32()),
+                                  spans)],
+        names=["doc_id", "spans"]))
 
-    flat = pd.DataFrame({
-        "doc_idx": np.zeros(len(pdf), dtype=np.int64),
-        "doc_id": pdf["doc_id"].to_numpy(),
-        "pos": pdf["pos"].to_numpy(),
-        "kind": pdf["kind"].astype("object"),
-        "text": pdf["text"].astype("object"),
-        "ref": pdf["ref"].astype("object"),
-    })
     flat = parse_attrs(flat)
+    ok = ~flat["base"].isin(C.BOILERPLATE_KINDS).to_numpy()
+    flat = flat[ok]
     # L3/L5 spread remap with the natively-computed doc-global sheet
-    # context (buckets never straddle a sheet, so per-bucket remap is safe).
-    # It was joined on (doc_id, page_hint), the same parse as `page`, so
-    # one row per page is the normal path's per-sheet dims frame.
+    # context (a bucket is a range of whole sheets, so per-bucket remap is
+    # safe). It was joined on (doc_id, page_hint), the same parse as
+    # `page`, so one row per page is the normal path's per-sheet dims frame.
     dims = None
-    if "sheet_doc" in pdf and pdf["sheet_doc"].any():
-        dims = (pdf[SHEET_CTX_COLS]
+    if "sheet_doc" in batch.schema.names:
+        dims = (batch.select(SHEET_CTX_COLS).filter(pa.array(ok)).to_pandas()
                 .assign(doc_idx=0, page=flat["page"].to_numpy())
                 .drop_duplicates("page"))
     flat = remap_spreads(flat, dims)
 
-    sizes = pdf["heading_sizes"].iloc[0]
-    sizes = np.array([] if sizes is None else sizes, dtype=np.float64)
+    sizes = np.array(batch.column("heading_sizes")[0].as_py() or [],
+                     dtype=np.float64)
     headings = pd.DataFrame({
         "doc_idx": np.zeros(len(sizes), dtype=np.int64),
         "size": sizes,
@@ -119,52 +117,19 @@ def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
                             C.MAX_HEADING_LEVEL),
     })
 
-    out = process_flat(flat, headings)
-    if not len(out):
-        return pd.DataFrame(columns=[f.name for f in _ROW_SCHEMA.fields])
-
-    # out is sorted in reading order (pages ascending; doc constant). `seq`
-    # preserves that order through the unordered native collect_list: the
-    # downstream array_sort key is (page, seq).
-    return pd.DataFrame({
-        "doc_id": np.full(len(out), doc_id, dtype=object),
-        "page": out["page"].to_numpy(dtype=np.int64),
-        "seq": np.arange(len(out), dtype=np.int64),
-        "kind": out["out_kind"].to_numpy(dtype=object),
-        "text": out["out_text"].to_numpy(dtype=object),
-        "media_ref": out["out_ref"].to_numpy(dtype=object),
-        "tlen": out["tlen"].to_numpy(dtype=np.int64),
-    })
+    out = _reassemble_arrow(process_flat(flat, headings), docs, set())
+    return pa.Table.from_batches([out.append_column(
+        "bucket", batch.column("bucket").slice(0, 1))])
 
 
-def _extract_giant(giant: DataFrame, skew_threshold: int,
-                   has_sheets: bool) -> DataFrame:
-    """Per-page-bucket salted extraction of healthy documents above the
-    threshold, ``ceil(n_spans / skew_threshold)`` buckets per document.
-
-    ``giant`` is the non-empty, already-persisted giant subset and
-    ``has_sheets`` the probe's answer to "does any giant carry ``;sw=``"
-    (see ``run_extract_skewed``).
-
-    Only three kinds of work happen here. Each line after the explode is
-    one shuffle at most:
-      explode -> doc-global context a page bucket cannot compute alone:
-                 - media dedup as a window *filter* on media rows only,
-                   unioned back with the narrow non-media rows
-                 - heading sizes: one per-doc aggregation, broadcast-joined
-                 - sheet context (only when the probe finds sheets): one
-                   per-(doc, sheet) aggregation plus a running window,
-                   broadcast-joined
-              -> one full shuffle into (doc_id, page-bucket) groups
-              -> applyInPandas kernel
-              -> window cumsum + groupBy reassembly (same key: one shuffle)
-              -> final left-join against the giant id list to restore
-                 documents whose spans were all stripped
-    """
+def _salted_spans(giant: DataFrame, skew_threshold: int,
+                  has_sheets: bool) -> DataFrame:
+    """The giant's span rows with their doc-global context and page
+    bucket: the input of the per-bucket kernel (see ``_extract_giant``)."""
     # the *exploded* form is NOT persisted: a span-level InMemoryRelation
     # measured 2x slower at 32 threads (cache build + block-manager
     # contention + GC) than re-exploding the cached doc rows
-    ok = (
+    rows = (
         giant.select("doc_id", F.size("spans").alias("n_doc_spans"),
                      F.posexplode("spans").alias("pos", "span"))
         .select(
@@ -177,7 +142,6 @@ def _extract_giant(giant: DataFrame, skew_threshold: int,
         .withColumn("page_hint", F.coalesce(
             F.nullif(F.regexp_extract("kind", _PAGE_RE, 1), F.lit("")),
             F.lit("1")).cast("long"))
-        .filter(~F.col("base").isin(*C.BOILERPLATE_KINDS))
     )
 
     def num(key, default="0"):
@@ -189,38 +153,39 @@ def _extract_giant(giant: DataFrame, skew_threshold: int,
     # keep the first (page, y, x, pos) occurrence per (doc, layer, phash)
     is_media = F.col("base").isin(*C.MEDIA_KINDS)
     phash = F.regexp_extract("kind", r"(?:^|;)phash=([^;]*)", 1)
-    media = (ok.filter(is_media & (phash != ""))
+    media = (rows.filter(is_media & (phash != ""))
              .withColumn("rn", F.row_number().over(
                  Window.partitionBy("doc_id", "base", phash)
                  .orderBy("page_hint", num("y"), num("x"), "pos")))
              .filter(F.col("rn") == 1).drop("rn"))
-    rest = ok.filter(~(is_media & (phash != "")))
+    rest = rows.filter(~(is_media & (phash != "")))
     deduped = rest.unionByName(media)
 
-    # doc-global heading context (M1) in one aggregation: the body is the
-    # most frequent text/title size (deterministic mode breaks ties toward
-    # the smaller size, as the kernel does), and every distinct size above
-    # it is a heading, level = rank by size descending. The set of distinct
-    # font sizes is tiny at any document size.
-    headings = (
-        ok.filter(F.col("base").isin("text", "title"))
-        .withColumn("size", num("size", "10"))
-        .groupBy("doc_id")
-        .agg(F.mode("size", deterministic=True).alias("body"),
-             F.collect_set("size").alias("sizes"))
-        .select("doc_id", F.sort_array(
+    # doc-global context in one aggregation. Heading context (M1): the body
+    # is the most frequent text/title size (deterministic mode breaks ties
+    # toward the smaller size, as the kernel does), and every distinct size
+    # above it is a heading, level = rank by size descending; the set of
+    # distinct font sizes is tiny at any document size. Page range: the
+    # bucket bounds below.
+    tt_size = F.when(F.col("base").isin("text", "title"), num("size", "10"))
+    doc_ctx = (
+        rows.groupBy("doc_id")
+        .agg(F.mode(tt_size, deterministic=True).alias("body"),
+             F.collect_set(tt_size).alias("sizes"),
+             F.min("page_hint").alias("p0"), F.max("page_hint").alias("p1"))
+        .select("doc_id", "p0", "p1", F.sort_array(
             F.filter("sizes", lambda s: s > F.col("body")), asc=False)
             .alias("heading_sizes")))
 
-    with_ctx = deduped.join(F.broadcast(headings), "doc_id", "left")
+    with_ctx = deduped.join(F.broadcast(doc_ctx), "doc_id")
     ctx_cols = ["heading_sizes"]
 
     # doc-global sheet context (L1–L3: per-sheet dims, the L2 full-spread
-    # gate, the physical-page counter) from the PRE-dedup rows — sheet
-    # geometry is a property of the sheet (reference: page.rect / page
-    # images), and sourcing from `ok` keeps the expensive dedup-window
-    # subplan computed exactly once. Every (doc, sheet) of `deduped` has a
-    # row here, since both come from `ok`.
+    # gate, the physical-page counter) from the PRE-dedup, non-boilerplate
+    # rows — sheet geometry is a property of the sheet (reference:
+    # page.rect / page images), and sourcing from `rows` keeps the
+    # expensive dedup-window subplan computed exactly once. Every (doc,
+    # sheet) with a non-boilerplate row of `deduped` has a row here.
     # Built only when the probe found a ';sw=' attr (see the module doc).
     if has_sheets:
         wdoc = Window.partitionBy("doc_id")
@@ -231,7 +196,8 @@ def _extract_giant(giant: DataFrame, skew_threshold: int,
             (m["w"] >= C.FULL_SPREAD_WIDTH_FRAC * sw)
             & (m["h"] >= C.FULL_SPREAD_HEIGHT_FRAC * sh)))
         sheet_dims = (
-            ok.groupBy("doc_id", "page_hint")
+            rows.filter(~F.col("base").isin(*C.BOILERPLATE_KINDS))
+            .groupBy("doc_id", "page_hint")
             .agg(F.max(num("sw")).alias("sheet_w"),
                  F.max(num("sh")).alias("sheet_h"),
                  F.collect_list(F.when(is_media, F.struct(
@@ -250,73 +216,88 @@ def _extract_giant(giant: DataFrame, skew_threshold: int,
 
     # Salt count ADAPTS to document size (~skew_threshold spans per
     # bucket): a fixed salt count either shreds medium giants into
-    # thousands of tiny applyInPandas groups (per-group pandas overhead
-    # dominates) or under-splits the truly huge ones. A 10^6-span document
-    # still spreads across ~n/skew_threshold tasks, so task size stays
-    # bounded by bucket, not by document. Every document here has more
-    # than skew_threshold spans, so it gets at least two buckets.
-    n_salts_doc = F.ceil(F.col("n_doc_spans") / F.lit(skew_threshold))
+    # thousands of tiny groups (per-group Python overhead dominates) or
+    # under-splits the truly huge ones. A 10^6-span document still spreads
+    # across ~n/skew_threshold tasks, so task size stays bounded by bucket,
+    # not by document. Every document here has more than skew_threshold
+    # spans, so it gets at least two buckets. Buckets are contiguous page
+    # ranges of [p0, p1] (monotone in the page), so bucket order is reading
+    # order and the bucket outputs concatenate.
+    n_buckets = F.ceil(F.col("n_doc_spans") / F.lit(skew_threshold))
+    bucket = F.floor((F.col("page_hint") - F.col("p0")) * n_buckets
+                     / (F.col("p1") - F.col("p0") + 1))
 
     # ship the kernel only what it consumes: base/page_hint are re-derived
     # by the kernel's own attr parse
-    pages_in = with_ctx.select(
-        "doc_id", "pos", "kind", "text", "ref",
-        F.pmod(F.col("page_hint"), n_salts_doc).alias("bucket"), *ctx_cols)
+    return with_ctx.select("doc_id", "pos", "kind", "text", "ref",
+                           bucket.alias("bucket"), *ctx_cols)
 
+
+def _extract_giant(giant: DataFrame, skew_threshold: int,
+                   has_sheets: bool) -> DataFrame:
+    """Per-page-bucket salted extraction of healthy documents above the
+    threshold, ``ceil(n_spans / skew_threshold)`` buckets per document.
+
+    ``giant`` is the non-empty, already-persisted giant subset and
+    ``has_sheets`` the probe's answer to "does any giant carry ``;sw=``"
+    (see ``run_extract_skewed``).
+
+    Only three kinds of work happen here. Each line after the explode is
+    one shuffle at most:
+      explode -> doc-global context a page bucket cannot compute alone:
+                 - media dedup as a window *filter* on media rows only,
+                   unioned back with the narrow non-media rows
+                 - heading sizes and page range: one per-doc aggregation,
+                   broadcast-joined
+                 - sheet context (only when the probe finds sheets): one
+                   per-(doc, sheet) aggregation plus a running window,
+                   broadcast-joined
+              -> one full shuffle into (doc_id, page-range bucket) groups
+              -> applyInArrow kernel: one finished row per bucket
+              -> window offset shift + groupBy concatenation (same key: one
+                 shuffle) over the bucket rows
+    The kernel drops boilerplate itself, so every giant keeps at least one
+    bucket row and therefore its output row.
+    """
+    spark = giant.sparkSession
     # explicit repartition on the exact grouping keys: the groupBy reuses
     # this hash partitioning, and the fixed partition count keeps AQE from
-    # byte-coalescing the compute-heavy Python stage down to a few tasks
-    spark = giant.sparkSession
+    # byte-coalescing the compute-heavy Python stage down to a few tasks.
     # 3x task slots: page buckets are uneven (giants differ in page count),
     # and a single wave of slot-sized tasks lets one straggler extend the
     # whole stage
     n_parts = 3 * spark.sparkContext.defaultParallelism
-    pages_in = pages_in.repartition(n_parts, "doc_id", "bucket")
-
-    span_rows = (
-        pages_in.groupBy("doc_id", "bucket")
-        .applyInPandas(_extract_page_bucket, schema=_ROW_SCHEMA)
+    buckets = (
+        _salted_spans(giant, skew_threshold, has_sheets)
+        .repartition(n_parts, "doc_id", "bucket")
+        .groupBy("doc_id", "bucket")
+        .applyInArrow(_extract_bucket, schema=_BUCKET_SCHEMA)
     )
 
-    # ordered reassembly, fully native: one global char-offset cumsum over
-    # the doc's reading order (page asc, then within-bucket seq — pages never
-    # straddle buckets, so (page, seq) totally orders the doc), then span
-    # arrays rebuilt with array_sort over the same key. The groupBy reuses
-    # the window's hash partitioning on doc_id (no extra shuffle).
-    w = (Window.partitionBy("doc_id").orderBy("page", "seq")
+    # ordered concatenation, fully native: each bucket's offsets shift by
+    # the characters of the doc's earlier buckets, then the span arrays are
+    # flattened in bucket order. The groupBy reuses the window's hash
+    # partitioning on doc_id (no extra shuffle).
+    w = (Window.partitionBy("doc_id").orderBy("bucket")
          .rowsBetween(Window.unboundedPreceding, -1))
-    with_off = span_rows.withColumn(
-        "offset", F.coalesce(F.sum("tlen").over(w), F.lit(0)).cast("int"))
+    shifted = F.transform("spans", lambda s: s.withField(
+        "offset", (s["offset"] + F.col("shift")).cast("int")))
     docs = (
-        with_off.groupBy("doc_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(
-                    "page", "seq", "kind", "text", "media_ref", "offset"))),
-                lambda x: F.struct(
-                    x["kind"].alias("kind"), x["text"].alias("text"),
-                    x["media_ref"].alias("media_ref"),
-                    x["offset"].alias("offset"),
-                    x["page"].cast("int").alias("page"))).alias("spans"),
-            F.count(F.lit(1)).cast("int").alias("n_spans"),
-            F.sum("tlen").alias("n_chars"),
+        buckets.withColumn("shift", F.coalesce(F.sum("n_chars").over(w),
+                                               F.lit(0)))
+        .groupBy("doc_id").agg(
+            F.flatten(F.array_sort(F.collect_list(F.struct(
+                "bucket", shifted.alias("spans"))))["spans"]).alias("spans"),
+            F.sum("n_spans").cast("int").alias("n_spans"),
+            F.sum("n_chars").alias("n_chars"),
         )
     )
-
-    # one final join restores documents that produced no page rows at all
-    # (everything stripped as boilerplate); status follows the kernel's
-    # rule: completed iff any text (n_chars > 0)
-    empty_spans = F.array().cast(OUTPUT_SCHEMA["spans"].dataType)
-    return (giant.select("doc_id")
-            .join(docs, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("spans", empty_spans).alias("spans"),
-                F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
-                F.coalesce("n_chars", F.lit(0).cast("long")).alias("n_chars"),
-                F.when(F.col("n_chars") > 0, C.STATUS_COMPLETED)
-                .when(F.col("n_spans") > 0, C.STATUS_NO_TEXT)
-                .otherwise(C.STATUS_COMPLETED_EMPTY).alias("status"),
-            ))
+    # status follows the kernel's rule: completed iff any text
+    # (n_chars > 0)
+    return docs.withColumn(
+        "status", F.when(F.col("n_chars") > 0, C.STATUS_COMPLETED)
+        .when(F.col("n_spans") > 0, C.STATUS_NO_TEXT)
+        .otherwise(C.STATUS_COMPLETED_EMPTY))
 
 
 def run_extract_skewed(

@@ -84,9 +84,10 @@ def build_session(
         # wall in per-batch transfer overhead at 1.92M docs (measured 25.1s
         # vs 21.1s at 1024; 4096 was equal within noise). Normal-path docs
         # are bounded by the skew threshold (8,192 spans), so a batch is at
-        # most ~8.4M spans and the kernel's span budget closes a chunk
-        # after one such batch; larger docs never cross this boundary
-        # (they ride the exploded applyInPandas path).
+        # most ~8.4M spans, and the kernel cuts such a batch at doc
+        # boundaries into span-budget chunks; larger healthy docs never
+        # cross this boundary whole (their salted page buckets do, through
+        # applyInArrow).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # compress the JVM<->Python Arrow IPC stream: this workload is
         # memory-bandwidth-bound at high parallelism (span text crosses the

@@ -28,7 +28,7 @@ def _build_in_group(spark, df, group):
 
 
 def _plan_nodes(df):
-    return set(re.findall(r"\b(FlatMapGroupsInPandas|Union)\b",
+    return set(re.findall(r"\b(FlatMapGroupsInArrow|Union)\b",
                           df._jdf.queryExecution().optimizedPlan().toString()))
 
 
@@ -54,4 +54,4 @@ def test_no_giant_batch_runs_kernel_plan_alone(spark, tmp_path):
     src2 = str(tmp_path / "docs_giant")
     corpus_to_spark_df(spark, docs + [giant]).write.parquet(src2)
     out = _build_in_group(spark, spark.read.parquet(src2), "one-giant")
-    assert "FlatMapGroupsInPandas" in _plan_nodes(out)
+    assert "FlatMapGroupsInArrow" in _plan_nodes(out)

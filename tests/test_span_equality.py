@@ -2,6 +2,8 @@
 order) between the vectorized engine and the pure-Python oracle, over the
 full deterministic fixture corpus (north rule / BASELINE.json:15)."""
 
+import random
+
 import pyarrow as pa
 import pytest
 
@@ -75,6 +77,21 @@ def test_spark_skew_path_equals_oracle(spark):
          "spans": [_span(make_kind("text", page=1 + i // 40, y=40 + i % 40,
                                    x=50, size=(10, 14)[i % 2]), f"w{i}")
                    for i in range(threshold + 2)]},
+    ]
+    # bucket edges: spans in shuffled page order, sparse page numbers with
+    # one negative page, and a single-page giant (one bucket)
+    shuffled = list(giant["spans"])
+    random.Random(3).shuffle(shuffled)
+    docs += [
+        {"doc_id": "edge-shuffled", "spans": shuffled},
+        {"doc_id": "edge-sparse-pages",
+         "spans": [_span(make_kind("text", page=-3, y=40, x=50), "minus")]
+         + [_span(make_kind("text", page=(1, 2, 900)[i % 3],
+                            y=40 + i // 3, x=50), f"s{i}")
+            for i in range(threshold + 100)]},
+        {"doc_id": "edge-one-page",
+         "spans": [_span(make_kind("text", page=1, y=40 + i, x=50), f"p{i}")
+                   for i in range(threshold + 5)]},
     ]
     df = corpus_to_spark_df(spark, docs)
     out = run_extract_skewed(df, skew_threshold=threshold, num_partitions=4)
