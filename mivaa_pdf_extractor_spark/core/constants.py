@@ -63,9 +63,6 @@ BOILERPLATE_KINDS = frozenset({"header", "footer", "page_number"})
 TEXT_LIKE_KINDS = frozenset({"text", "title", "list", "code", "caption"})
 MEDIA_KINDS = frozenset({"image", "figure"})
 TABLE_CELL_KIND = "table_cell"
-ALL_INPUT_KINDS = (
-    TEXT_LIKE_KINDS | MEDIA_KINDS | BOILERPLATE_KINDS | {TABLE_CELL_KIND}
-)
 
 # media extraction layers (I1/I4; pdf_processor.py:1032-1045 "embedded",
 # region_crop_extractor.py:189-209 "region_crop")
@@ -86,7 +83,6 @@ TERMINAL_STATUSES = frozenset(
     {STATUS_COMPLETED, STATUS_NO_TEXT, STATUS_EMPTY, STATUS_COMPLETED_EMPTY,
      STATUS_OVERSIZE}
 )
-RETRYABLE_STATUSES = frozenset({STATUS_FAILED})
 
 # ---------------------------------------------------------------------------
 # Layout / structure thresholds

@@ -15,6 +15,8 @@ implemented twice).
 
 from __future__ import annotations
 
+from . import constants as C
+
 
 def normalize_grid(grid: list[list[str]]) -> list[list[str]] | None:
     """Drop blank rows, pad ragged rows, enforce minimum size.
@@ -28,7 +30,7 @@ def normalize_grid(grid: list[list[str]]) -> list[list[str]] | None:
         return None
     width = max(len(r) for r in rows)
     rows = [r + [""] * (width - len(r)) for r in rows]
-    if len(rows) < 2 or width < 2:
+    if len(rows) < C.TABLE_MIN_ROWS or width < C.TABLE_MIN_COLS:
         return None
     return rows
 

@@ -6,7 +6,8 @@ doc, ``spans`` as a list of structs) entirely with numpy/Arrow column
 kernels:
 
 - flatten the batch to one flat span table (doc_idx, pos, kind, text, ...),
-- parse the kind grammar with vectorized ``str.extract``,
+- parse the kind grammar in one pass: split on ``;`` once, segment 0 is
+  the base, pick attributes by key from one table,
 - doc-global heading histogram + media dedup with groupby,
 - per-page column-split and table assembly (loops only over the rare
   candidate groups),
@@ -34,24 +35,33 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..core import constants as C
-from ..core.kinds import FLOAT_ATTR_PATTERN, INT_ATTR_PATTERN, attr_regex
+from ..core.kinds import ANY_ATTR_PATTERN, FLOAT_ATTR_PATTERN, INT_ATTR_PATTERN
 from ..core.normalize import normalize_series
 from ..core.tables import grid_to_pipe_table, normalize_grid
 
-SPAN_OUT_STRUCT = T.StructType([
+SPAN_STRUCT = T.StructType([
     T.StructField("kind", T.StringType()),
     T.StructField("text", T.StringType()),
     T.StructField("media_ref", T.StringType()),
     T.StructField("offset", T.IntegerType()),
-    # physical page of the span (the reference's chunks carry page_number,
-    # unified_chunking_service.py:51-61 — stamping it on the span lets the
-    # chunker derive positional metadata without re-parsing geometry)
-    T.StructField("page", T.IntegerType()),
 ])
+
+INPUT_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType(), nullable=False),
+    T.StructField("spans", T.ArrayType(SPAN_STRUCT)),
+])
+
+# an output span is an input span plus its physical page (the reference's
+# chunks carry page_number, unified_chunking_service.py:51-61 — stamping it
+# on the span lets the chunker derive positional metadata without
+# re-parsing geometry)
+SPAN_OUT_STRUCT = T.StructType(
+    SPAN_STRUCT.fields + [T.StructField("page", T.IntegerType())])
 
 OUTPUT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -65,69 +75,62 @@ _HASH_PREFIX = np.array(["", "# ", "## ", "### ", "#### ", "##### ", "###### "],
                         dtype=object)
 
 
-def _num_attr_arrow(arr: "pa.Array", key: str, fill: float,
-                    pattern: str = FLOAT_ATTR_PATTERN) -> np.ndarray:
-    """Numeric attr: RE2 extract with the shared anchored grammar (every
-    match is guaranteed castable, so no-match -> null -> default, never an
-    ArrowInvalid), cast + fill in Arrow — C-level end to end (pandas
-    to_numeric on 1M-row object arrays profiled at ~2s/corpus)."""
-    import pyarrow.compute as pc
-
-    st = pc.extract_regex(arr, attr_regex(key, pattern, named=True))
-    v = pc.cast(pc.struct_field(st, "v"), pa.float64())
-    return pc.fill_null(v, fill).to_numpy(zero_copy_only=False)
-
-
-def _attrs_arrow(k: pd.Series, keys: list[str]) -> dict[str, pd.Series]:
-    """All attr extractions in one Arrow pass per key: pyarrow's RE2-based
-    ``extract_regex`` runs ~20x faster than pandas' per-row ``re.search``
-    (.str.extract), which profiled as 2/3 of the giant-path kernel."""
-    import pyarrow.compute as pc
-
-    arr = pa.array(k, type=pa.string())
-    out: dict[str, pd.Series] = {
-        "__base__": pc.struct_field(
-            pc.extract_regex(arr, r"^(?P<v>[^;]*)"), "v").to_pandas()
-    }
-    for key in keys:
-        st = pc.extract_regex(arr, rf"(?:^|;){key}=(?P<v>[^;]*)")
-        out[key] = pc.struct_field(st, "v").to_pandas()
-    return out
+# The engine's attribute table, one row per parsed column: (column, key,
+# default, value pattern from core/kinds.py). Both routes read it: the
+# kernel's parse_attrs below and the salted path's native regexp_extract
+# (operators/skew.py). The oracle's parse_kind keeps its own defaults
+# (core/kinds.py SpanAttrs) as the independent reference. An int default
+# makes an int64 column, a float default a float64 one.
+ATTRS = (
+    # span and sheet dims feed only the L3/L5 spread remap
+    ("w", "w", 0.0, FLOAT_ATTR_PATTERN),
+    ("h", "h", 0.0, FLOAT_ATTR_PATTERN),
+    ("sw", "sw", 0.0, FLOAT_ATTR_PATTERN),
+    ("sh", "sh", 0.0, FLOAT_ATTR_PATTERN),
+    ("page", "page", 1, INT_ATTR_PATTERN),
+    ("y", "y", 0.0, FLOAT_ATTR_PATTERN),
+    ("x", "x", 0.0, FLOAT_ATTR_PATTERN),
+    ("size", "size", 10.0, FLOAT_ATTR_PATTERN),
+    ("mono", "mono", 0, INT_ATTR_PATTERN),
+    ("colattr", "col", 0, INT_ATTR_PATTERN),
+    ("edpi", "edpi", 0, INT_ATTR_PATTERN),
+    ("phash", "phash", "", ANY_ATTR_PATTERN),
+)
 
 
 def parse_attrs(flat: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized kind-grammar parse (the tokenizer of this domain)."""
-    import pyarrow.compute as pc
-
-    k = flat["kind"].astype("object").fillna("")
-    arr = pa.array(k, type=pa.string())
-    a = _attrs_arrow(k, ["phash"])
-    flat["base"] = a["__base__"].astype(object)
-    # span w/h + sheet dims feed ONLY the L3/L5 spread remap, so the four
-    # extra regex passes are gated on a cheap substring probe for ';sw='
-    # (sheet-addressed docs always carry it on at least one span per sheet)
-    if len(k) and pc.any(pc.match_substring(arr, ";sw=")).as_py():
-        flat["w"] = _num_attr_arrow(arr, "w", 0.0)
-        flat["h"] = _num_attr_arrow(arr, "h", 0.0)
-        flat["sw"] = _num_attr_arrow(arr, "sw", 0.0)
-        flat["sh"] = _num_attr_arrow(arr, "sh", 0.0)
-    else:
-        flat["w"] = 0.0
-        flat["h"] = 0.0
-        flat["sw"] = 0.0
-        flat["sh"] = 0.0
-    flat["page"] = _num_attr_arrow(
-        arr, "page", 1.0, INT_ATTR_PATTERN).astype(np.int64)
-    flat["y"] = _num_attr_arrow(arr, "y", 0.0)
-    flat["x"] = _num_attr_arrow(arr, "x", 0.0)
-    flat["size"] = _num_attr_arrow(arr, "size", 10.0)
-    flat["mono"] = _num_attr_arrow(
-        arr, "mono", 0.0, INT_ATTR_PATTERN).astype(np.int64)
-    flat["colattr"] = _num_attr_arrow(
-        arr, "col", 0.0, INT_ATTR_PATTERN).astype(np.int64)
-    flat["edpi"] = _num_attr_arrow(
-        arr, "edpi", 0.0, INT_ATTR_PATTERN).astype(np.int64)
-    flat["phash"] = a["phash"].fillna("").astype(object)
+    """Vectorized kind-grammar parse (the tokenizer of this domain), in the
+    shape of the oracle's ``parse_kind`` and in one pass: split each kind on
+    ``;`` once, segment 0 is the base, every later segment splits at its
+    first ``=``. Per table key, the first segment whose value fully matches
+    the key's pattern wins; a key without one keeps its default."""
+    segs = pc.split_pattern(
+        pa.array(flat["kind"].astype("object").fillna(""), pa.string()), ";")
+    # numpy, not Series: flat's index has gaps where failed docs were
+    # dropped, and a Series would be aligned on it
+    flat["base"] = pc.list_element(segs, 0).to_numpy(zero_copy_only=False)
+    attrs = pc.list_slice(segs, 1)
+    kv = pc.split_pattern(pc.list_flatten(attrs), "=", max_splits=1)
+    has_value = pc.equal(pc.list_value_length(kv), 2)
+    kv = kv.filter(has_value)
+    row = pc.list_parent_indices(attrs).filter(has_value).to_numpy()
+    keys, values = pc.list_element(kv, 0), pc.list_element(kv, 1)
+    for col, key, default, pattern in ATTRS:
+        hit = pc.equal(keys, key)
+        v = values.filter(hit)
+        ok = pc.match_substring_regex(v, f"^(?:{pattern})$")
+        # segments are in (row, position) order: np.unique's first index
+        # per row is the row's first valid occurrence
+        rows, first = np.unique(row[hit.to_numpy(zero_copy_only=False)]
+                                [ok.to_numpy(zero_copy_only=False)],
+                                return_index=True)
+        v = v.filter(ok).take(first)
+        text = isinstance(default, str)
+        out = np.full(len(flat), default,
+                      dtype=object if text else type(default))
+        out[rows] = (v if text else pc.cast(v, pa.float64())).to_numpy(
+            zero_copy_only=False)
+        flat[col] = out
     return flat
 
 
@@ -420,7 +423,6 @@ def process_flat(flat: pd.DataFrame, headings: pd.DataFrame) -> pd.DataFrame:
     is_media = base.isin(C.MEDIA_KINDS)
     is_table = base == "__table__"
     is_code = (base == "code") | ((flat["mono"] == 1) & ~is_media & ~is_table)
-    import pyarrow.compute as pc
     list_marker = pd.Series(
         pc.match_substring_regex(
             pa.array(raw_text, type=pa.string()),

@@ -55,19 +55,29 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..core import constants as C
 from ..core.cache import track
-from ..core.kinds import FLOAT_ATTR_PATTERN, INT_ATTR_PATTERN, attr_regex
-from .extract import (OUTPUT_SCHEMA, SHEET_CTX_COLS, _flatten_arrow,
+from ..core.kinds import attr_regex
+from .extract import (ATTRS, OUTPUT_SCHEMA, SHEET_CTX_COLS, _flatten_arrow,
                       _reassemble_arrow, auto_partition_target, parse_attrs,
                       process_flat, remap_spreads, run_extract)
 
 _BUCKET_SCHEMA = T.StructType(
     OUTPUT_SCHEMA.fields + [T.StructField("bucket", T.LongType())])
 
-# shared attr grammar (core/kinds.py): signed, anchored to the full ;-segment
-# so the skew path parses EXACTLY like the normal kernel and the oracle —
-# round 1 had unsigned `[0-9.]+` here, which read `edpi=-1` as 1 and flipped
-# the low-DPI gate only on the skew path.
-_PAGE_RE = attr_regex("page", INT_ATTR_PATTERN)
+# the kernel's attribute table by key: the salted path reads the same
+# defaults and patterns, so it parses EXACTLY like the kernel and the oracle
+_ATTRS = {key: (default, pattern) for _col, key, default, pattern in ATTRS}
+
+
+def _attr(key: str):
+    """Native parse of one attr of ``kind``: the first value that fully
+    matches the key's pattern in a segment after the base, else the table
+    default, typed like the kernel's column."""
+    default, pattern = _ATTRS[key]
+    v = F.regexp_extract("kind", attr_regex(key, pattern), 1)
+    v = F.coalesce(F.nullif(v, F.lit("")), F.lit(str(default)))
+    if isinstance(default, str):
+        return v
+    return v.cast("long" if isinstance(default, int) else "double")
 
 # salted buckets hold about skew_threshold spans (whole pages, so more or
 # less when page densities differ); perfbench sizes its two-bucket giant
@@ -139,24 +149,17 @@ def _salted_spans(giant: DataFrame, skew_threshold: int,
             F.col("span.media_ref").alias("ref"),
         )
         .withColumn("base", F.split(F.col("kind"), ";").getItem(0))
-        .withColumn("page_hint", F.coalesce(
-            F.nullif(F.regexp_extract("kind", _PAGE_RE, 1), F.lit("")),
-            F.lit("1")).cast("long"))
+        .withColumn("page_hint", _attr("page"))
     )
-
-    def num(key, default="0"):
-        return F.coalesce(
-            F.nullif(F.regexp_extract("kind", attr_regex(key, FLOAT_ATTR_PATTERN), 1),
-                     F.lit("")), F.lit(default)).cast("double")
 
     # media dedup (I5) as a window filter over the (small) media subset:
     # keep the first (page, y, x, pos) occurrence per (doc, layer, phash)
     is_media = F.col("base").isin(*C.MEDIA_KINDS)
-    phash = F.regexp_extract("kind", r"(?:^|;)phash=([^;]*)", 1)
+    phash = _attr("phash")
     media = (rows.filter(is_media & (phash != ""))
              .withColumn("rn", F.row_number().over(
                  Window.partitionBy("doc_id", "base", phash)
-                 .orderBy("page_hint", num("y"), num("x"), "pos")))
+                 .orderBy("page_hint", _attr("y"), _attr("x"), "pos")))
              .filter(F.col("rn") == 1).drop("rn"))
     rest = rows.filter(~(is_media & (phash != "")))
     deduped = rest.unionByName(media)
@@ -167,7 +170,7 @@ def _salted_spans(giant: DataFrame, skew_threshold: int,
     # above it is a heading, level = rank by size descending; the set of
     # distinct font sizes is tiny at any document size. Page range: the
     # bucket bounds below.
-    tt_size = F.when(F.col("base").isin("text", "title"), num("size", "10"))
+    tt_size = F.when(F.col("base").isin("text", "title"), _attr("size"))
     doc_ctx = (
         rows.groupBy("doc_id")
         .agg(F.mode(tt_size, deterministic=True).alias("body"),
@@ -198,10 +201,10 @@ def _salted_spans(giant: DataFrame, skew_threshold: int,
         sheet_dims = (
             rows.filter(~F.col("base").isin(*C.BOILERPLATE_KINDS))
             .groupBy("doc_id", "page_hint")
-            .agg(F.max(num("sw")).alias("sheet_w"),
-                 F.max(num("sh")).alias("sheet_h"),
+            .agg(F.max(_attr("sw")).alias("sheet_w"),
+                 F.max(_attr("sh")).alias("sheet_h"),
                  F.collect_list(F.when(is_media, F.struct(
-                     num("w").alias("w"), num("h").alias("h"))))
+                     _attr("w").alias("w"), _attr("h").alias("h"))))
                  .alias("media"))
             .withColumn("sheet_doc", F.max((sw > 0) & (sh > 0)).over(wdoc))
             .withColumn("is_spread", (sh > 0)

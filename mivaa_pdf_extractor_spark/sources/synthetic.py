@@ -12,22 +12,9 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import types as T
-
 from ..core.constants import GLYPH_REPLACEMENTS
 from ..core.kinds import make_kind
-
-SPAN_STRUCT = T.StructType([
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("offset", T.IntegerType()),
-])
-
-INPUT_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), nullable=False),
-    T.StructField("spans", T.ArrayType(SPAN_STRUCT)),
-])
+from ..operators.extract import INPUT_SCHEMA, SPAN_STRUCT  # noqa: F401
 
 _WORDS = (
     "layout page span reading order block heading table figure caption "

@@ -492,14 +492,11 @@ class Catalog:
                     # delete keys and the incoming rows' keys — with an
                     # explicit delete_keys that misses a df key, the staged
                     # dir would otherwise replace an unread bucket's dir
-                    # list (data loss)
-                    touched_set = set(self._touched_buckets(
-                        keys, key, m["num_buckets"]))
-                    if delete_keys is not None:
-                        touched_set |= set(self._touched_buckets(
-                            df.select(key).distinct(), key,
-                            m["num_buckets"]))
-                    touched = sorted(touched_set)
+                    # list (data loss); one pass over the union finds both
+                    touched = self._touched_buckets(
+                        keys if delete_keys is None
+                        else keys.unionByName(df.select(key)),
+                        key, m["num_buckets"])
                     if not touched:
                         return
                 else:

@@ -25,8 +25,8 @@ from pyspark.sql import SparkSession
 
 from ..core import constants as C
 from ..core.cache import cache_scope, track
+from ..operators.extract import INPUT_SCHEMA
 from ..operators.skew import run_extract_skewed
-from ..sources.synthetic import INPUT_SCHEMA
 from ..sources.tables_io import Catalog
 from ..plans.pipeline import EXTRACTED_TABLE, stamp_run
 

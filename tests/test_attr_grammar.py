@@ -41,6 +41,9 @@ from mivaa_pdf_extractor_spark.sources.synthetic import corpus_to_spark_df
     ("text;y=-12.5", "y", -12.5),
     ("text;y=1;y=2", "y", 1.0),          # first valid occurrence wins
     ("text;y=bad;y=2", "y", 2.0),        # invalid first -> later valid wins
+    ("page=2", "page", 1),               # segment 0 is the base, never an attr
+    (";page=3", "page", 3),              # empty base, attr after it
+    ("text;page=3\n", "page", 1),        # a trailing newline is no digit
 ])
 def test_parse_kind_numeric_grammar(kind, attr, expected):
     assert getattr(parse_kind(kind), attr) == expected
@@ -81,6 +84,30 @@ _EDGE_DOCS = [
     [{"kind": "text;y=1;size=-4", "text": "neg", "media_ref": "", "offset": 0},
      {"kind": "text;y=2;size=-4", "text": "neg2", "media_ref": "", "offset": 0},
      {"kind": "text;y=3;size=10", "text": "big", "media_ref": "", "offset": 0}],
+    # bases that look like attributes: segment 0 is always the base, so
+    # "page=2", "y=5" and "size=18" stay on page 1 at y 0 with the default
+    # size; an empty base still carries its attrs, and a phash value may
+    # contain '='
+    [{"kind": "text;y=30", "text": "alpha", "media_ref": "", "offset": 0},
+     {"kind": "page=2", "text": "beta", "media_ref": "", "offset": 0},
+     {"kind": "text;y=20", "text": "gamma", "media_ref": "", "offset": 0},
+     {"kind": "y=5", "text": "delta", "media_ref": "", "offset": 0},
+     {"kind": "size=18", "text": "epsilon", "media_ref": "", "offset": 0},
+     {"kind": "text;y=40;size=18", "text": "big", "media_ref": "",
+      "offset": 0},
+     {"kind": ";page=3", "text": "zeta", "media_ref": "", "offset": 0},
+     {"kind": "image;y=50;phash=a=b", "text": "", "media_ref": "",
+      "offset": 0},
+     {"kind": "image;y=60;phash=a=b", "text": "", "media_ref": "",
+      "offset": 0},
+     {"kind": "image;y=70;phash=a", "text": "", "media_ref": "",
+      "offset": 0}],
+    # a value with a trailing newline keeps the default on every path,
+    # though Java's `$` (the salted path's regex dialect) also matches
+    # before a final newline
+    [{"kind": "text;page=2", "text": "a", "media_ref": "", "offset": 0},
+     {"kind": "text;page=3\n", "text": "b", "media_ref": "", "offset": 0},
+     {"kind": "text", "text": "c", "media_ref": "", "offset": 0}],
     # list-marker whitespace class: \x1f is whitespace to Python re's \s
     # but not to RE2 — the explicit class in LIST_MARKER_REGEX must make
     # both classify "*\x1f" as TEXT (fuzz-found divergence, round 2)

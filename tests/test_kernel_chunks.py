@@ -1,6 +1,7 @@
 """The Arrow kernel's chunking (no Spark session): an incoming batch above
 the span budget is cut at document boundaries, a single larger document
-stays whole, and smaller batches coalesce up to the budget."""
+stays whole, smaller batches coalesce up to the budget, and a failed
+document inside a chunk leaves the other documents' parse on their rows."""
 
 import numpy as np
 import pyarrow as pa
@@ -65,4 +66,26 @@ def test_split_batch_matches_oracle():
     rows = {r["doc_id"]: r for b in extract_iter_arrow(iter([batch]))
             for r in b.to_pylist()}
     assert len(rows) == len(docs)
+    assert_equal(docs, rows)
+
+
+def test_failed_doc_mid_chunk_keeps_later_docs_aligned():
+    # the failed doc's rows leave a gap in the span frame's index; the
+    # parsed attrs of the docs after it must still land on their own rows
+    docs = [
+        {"doc_id": "a", "spans": [
+            {"kind": "text", "text": "A1", "media_ref": "", "offset": 0}]},
+        {"doc_id": "bad", "spans": [
+            {"kind": None, "text": "x", "media_ref": "", "offset": 0},
+            {"kind": "text", "text": "x2", "media_ref": "", "offset": 0}]},
+        {"doc_id": "c", "spans": [
+            {"kind": "text;y=1", "text": "C1", "media_ref": "", "offset": 0},
+            {"kind": "title;y=0", "text": "C0", "media_ref": "",
+             "offset": 0}]},
+    ]
+    batch = pa.RecordBatch.from_pydict({
+        "doc_id": [d["doc_id"] for d in docs],
+        "spans": [d["spans"] for d in docs]})
+    rows = {r["doc_id"]: r for b in extract_iter_arrow(iter([batch]))
+            for r in b.to_pylist()}
     assert_equal(docs, rows)

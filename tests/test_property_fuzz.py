@@ -27,7 +27,7 @@ from mivaa_pdf_extractor_spark.sources.synthetic import corpus_to_spark_df
 
 _BASES = ["text", "title", "caption", "image", "figure", "table_cell",
           "code", "list", "header", "footer", "page_number", "weird",
-          ""]
+          "", "page=2", "size=18"]
 
 _ATTR_KEYS = ["page", "y", "x", "size", "mono", "col", "edpi", "phash",
               "w", "h", "sw", "sh"]
@@ -37,7 +37,7 @@ _ATTR_KEYS = ["page", "y", "x", "size", "mono", "col", "edpi", "phash",
 # Python-float-lenient-but-not-grammar forms, sign/underscore/overflow
 _NASTY_NUMERICS = ["1.0", "2.7", "250.0", "1e3", "1E-2", "1.2.3", ".", "1.",
                    ".5", "+1", "-0", "007", "inf", "nan", "1_0", "", " 1",
-                   "9999999999", "1e999"]
+                   "9999999999", "1e999", "7\n"]
 
 
 @st.composite
