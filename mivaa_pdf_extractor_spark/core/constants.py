@@ -139,8 +139,8 @@ TABLE_MIN_COLS = 2
 MIN_EFFECTIVE_DPI = 100
 
 # skew handling: the most input spans one task extracts for one document.
-# Docs up to this size run whole in the Arrow kernel; larger ones take the
-# per-page salted path in ceil(n / threshold) buckets (SURVEY.md §7.2 step 8)
+# Larger docs take the per-page salted path, in buckets of at most this many
+# spans unless one page is larger (SURVEY.md §7.2 step 8)
 DEFAULT_SKEW_THRESHOLD = 8192
 
 # deterministic media_ref patterns — model the reference filename patterns

@@ -25,7 +25,7 @@ sort → media gating → offsets) and the flatten / attr parse / spread remap /
 reassembly stages around it are shared with the skew path
 (operators/skew.py), which runs each page bucket of a document above the
 skew threshold through them as a one-document batch, with doc-global
-context computed natively.
+context computed outside the bucket.
 """
 
 from __future__ import annotations
@@ -135,30 +135,25 @@ def parse_attrs(flat: pd.DataFrame) -> pd.DataFrame:
 
 
 def heading_levels(flat: pd.DataFrame, valid: np.ndarray) -> pd.DataFrame:
-    """Per (doc_idx, size) heading level for sizes above the doc's body size.
-
-    body = most frequent size among text/title spans (ties -> smaller size);
-    sizes > body get levels 1.. descending by size, capped at 6 (M1).
-    ``valid`` (row mask) lets the caller defer the boilerplate filter so the
-    frame is copied once, not per stage.
-    Returns columns (doc_idx, size, level).
-    """
+    """Per (doc_idx, size) heading level: ``levels_from_counts`` over the
+    ``valid`` text/title spans. ``valid`` (row mask) lets the caller defer
+    the boilerplate filter so the frame is copied once, not per stage."""
     tt = flat[flat["base"].isin(("text", "title")) & valid]
-    if tt.empty:
-        return pd.DataFrame({"doc_idx": pd.Series(dtype=np.int64),
-                             "size": pd.Series(dtype=np.float64),
-                             "level": pd.Series(dtype=np.int64)})
-    counts = tt.groupby(["doc_idx", "size"]).size().rename("cnt").reset_index()
+    return levels_from_counts(
+        tt.groupby(["doc_idx", "size"]).size().rename("cnt").reset_index())
+
+
+def levels_from_counts(counts: pd.DataFrame) -> pd.DataFrame:
+    """The engine's heading rule (M1) over (doc_idx, size, cnt) text/title
+    span counts: body = the most frequent size (ties -> smaller size); sizes
+    > body get levels 1.. descending by size, capped at 6. Both routes call
+    it. Returns columns (doc_idx, size, level)."""
     counts = counts.sort_values(["doc_idx", "cnt", "size"],
                                 ascending=[True, False, True])
     body = counts.drop_duplicates("doc_idx")[["doc_idx", "size"]].rename(
         columns={"size": "body"})
     sizes = counts[["doc_idx", "size"]].merge(body, on="doc_idx")
     bigger = sizes[sizes["size"] > sizes["body"]].copy()
-    if bigger.empty:
-        return pd.DataFrame({"doc_idx": pd.Series(dtype=np.int64),
-                             "size": pd.Series(dtype=np.float64),
-                             "level": pd.Series(dtype=np.int64)})
     bigger["level"] = (
         bigger.groupby("doc_idx")["size"]
         .rank(ascending=False, method="dense").astype(np.int64)
@@ -634,20 +629,18 @@ def _reassemble_arrow(flat: pd.DataFrame, docs: pd.DataFrame,
 _CHUNK_SPANS = 1 << 15
 
 
-def _split_at_docs(
-        batch: "pa.RecordBatch") -> Iterator[tuple["pa.RecordBatch", int]]:
-    """(piece, span count) slices of ``batch`` at doc boundaries, each of
-    at most ``_CHUNK_SPANS`` spans unless it is a single larger document;
-    a batch within the budget is one piece."""
-    lengths = (batch.column("spans").value_lengths().fill_null(0)
-               .to_numpy(zero_copy_only=False))
+def cut_runs(sizes: list[int],
+             budget: int) -> Iterator[tuple[int, int, int]]:
+    """(start, stop, total) runs of ``sizes`` in order, each closed before
+    it would pass ``budget``; a unit is never split, so only a one-unit run
+    passes it. Cuts kernel batches at docs and giants at pages (skew.py)."""
     start = acc = 0
-    for i, n in enumerate(lengths.tolist()):
-        if acc and acc + n > _CHUNK_SPANS:
-            yield batch.slice(start, i - start), acc
+    for i, n in enumerate(sizes):
+        if acc and acc + n > budget:
+            yield start, i, acc
             start, acc = i, 0
         acc += n
-    yield batch.slice(start), acc
+    yield start, len(sizes), acc
 
 
 def _coalesce_batches(
@@ -657,9 +650,10 @@ def _coalesce_batches(
     for b in batches:
         if b.num_rows == 0:
             continue
-        for piece, piece_spans in _split_at_docs(b):
-            pending.append(piece)
-            n_docs += piece.num_rows
+        lengths = b.column("spans").value_lengths().fill_null(0).to_pylist()
+        for start, stop, piece_spans in cut_runs(lengths, _CHUNK_SPANS):
+            pending.append(b.slice(start, stop - start))
+            n_docs += stop - start
             n_spans += piece_spans
             if n_spans >= _CHUNK_SPANS:
                 yield pa.Table.from_batches(pending).combine_chunks().to_batches(
@@ -684,7 +678,8 @@ def extract_iter_arrow(
             flat = flat[~flat["doc_idx"].isin(failed_docs)]
 
         flat = parse_attrs(flat)
-        # one combined boilerplate+dedup take (see extract_batch)
+        # boilerplate and media duplicates leave in one take: the stages
+        # before it read the `ok` mask instead of a filtered copy
         ok = ~flat["base"].isin(C.BOILERPLATE_KINDS).to_numpy()
         headings = heading_levels(flat, ok)
         sheet_dims = _sheet_ctx(flat, ok)  # sheet geometry is pre-dedup

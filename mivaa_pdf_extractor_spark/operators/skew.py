@@ -7,24 +7,24 @@ takes longer); the north rule requires it explicitly. One size,
 - documents with ``size(spans) <= T``, and failed documents (any NULL kind)
   of any size, run whole through the normal ``mapInArrow`` kernel
   (operators/extract.py);
-- a larger healthy document is **salted by page bucket** into
-  ``ceil(n/T) >= 2`` contiguous page ranges. The salted path keeps only the
-  doc-global work a page bucket cannot do alone, computed with *native*
-  expressions after a ``posexplode``: media dedup (I5) as a window, the
-  heading sizes (M1) and the page range as one aggregation, and the sheet
-  context (L1–L3) as one aggregation plus a running window. Each
+- a larger healthy document is **salted by page bucket**. One eager job
+  counts its spans per page and text/title size (the kernel's attr parse);
+  the driver cuts its pages by the kernel's chunk rule (``cut_runs``) at
+  ``n / ceil(n/T)`` spans, so at most T unless one page is larger, and
+  feeds the size counts to the kernel's heading rule (M1). Media dedup
+  (I5, a window) and the sheet context (L1–L3, one aggregation plus a
+  running window) are *native*. Each
   ``(doc_id, bucket)`` group is then a one-document batch for the kernel's
   own Arrow stages (``applyInArrow``: flatten, attr parse, boilerplate
   filter, spread remap, ``process_flat``, reassembly), which return one
-  finished row with bucket-local offsets. The ~n/T bucket rows are joined
+  finished row with bucket-local offsets. The bucket rows are joined
   **natively**: a window sum of the earlier buckets' characters shifts the
   offsets, and one ``groupBy`` concatenates the span arrays in bucket order
   (SURVEY.md §7.2 step 8's "one subtle shuffle").
 
-Work is split only when a document is too big for one task: at cluster
-scale one 10^6-span document spreads across ~n/T tasks, and no task
-materializes the whole document until the final (columnar, JVM-side)
-concatenation.
+Work is split only when a document is too big for one task: one 10^6-span
+document extracts over at least n/T tasks (only its page count reads all
+its kinds in one task) until the final, JVM-side concatenation.
 
 The giant subset (the DOC rows routed here) is persisted through
 ``core.cache.track`` and probed once, eagerly, before any salted
@@ -47,6 +47,8 @@ and with the folded sheet aggregation it still added six pipeline jobs.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -57,8 +59,9 @@ from ..core import constants as C
 from ..core.cache import track
 from ..core.kinds import attr_regex
 from .extract import (ATTRS, OUTPUT_SCHEMA, SHEET_CTX_COLS, _flatten_arrow,
-                      _reassemble_arrow, auto_partition_target, parse_attrs,
-                      process_flat, remap_spreads, run_extract)
+                      _reassemble_arrow, auto_partition_target, cut_runs,
+                      levels_from_counts, parse_attrs, process_flat,
+                      remap_spreads, run_extract)
 
 _BUCKET_SCHEMA = T.StructType(
     OUTPUT_SCHEMA.fields + [T.StructField("bucket", T.LongType())])
@@ -79,22 +82,38 @@ def _attr(key: str):
         return v
     return v.cast("long" if isinstance(default, int) else "double")
 
-# salted buckets hold about skew_threshold spans (whole pages, so more or
-# less when page densities differ); perfbench sizes its two-bucket giant
-# against this name
+# salted buckets hold at most skew_threshold spans unless one page is
+# larger; perfbench sizes its two-bucket giant against this name
 DEFAULT_SPANS_PER_BUCKET = C.DEFAULT_SKEW_THRESHOLD
 
 
-def _extract_bucket(table: pa.Table) -> pa.Table:
+def _page_counts(batches: Iterator[pa.RecordBatch]
+                 ) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel over (doc_id, kinds) giant rows: spans per
+    (doc_id, page, text/title size or NULL), by the kernel's attr parse."""
+    for b in batches:
+        n = b.column("kinds").value_lengths().to_numpy(zero_copy_only=False)
+        flat = parse_attrs(pd.DataFrame({
+            "doc_id": np.repeat(b.column("doc_id").to_pylist(), n),
+            "kind": b.column("kinds").flatten().to_pandas()}))
+        flat["size"] = flat["size"].where(flat["base"].isin(["text", "title"]))
+        yield pa.RecordBatch.from_pandas(
+            flat.groupby(["doc_id", "page", "size"], dropna=False).size()
+            .reset_index(name="cnt"), preserve_index=False)
+
+
+def _extract_bucket(table: pa.Table, headings: pd.DataFrame) -> pa.Table:
     """applyInArrow kernel: one (doc_id, bucket) group of a giant document,
     run as a one-document batch through the normal kernel's own stages.
 
-    The rows carry the doc-global heading context as ``heading_sizes`` (the
-    sizes above the body, descending: level = index + 1) and, when any giant
-    is sheet-addressed, the per-page sheet context columns; media duplicates
-    were already removed upstream. Returns one finished output row (offsets
-    local to the bucket) plus its bucket id."""
+    ``headings`` holds every giant's heading levels, keyed by the doc_id
+    in ``doc_idx``. Sheet-addressed giants' rows carry the per-page sheet
+    context; media duplicates were removed upstream. Returns one finished
+    output row (offsets local to the bucket) plus its bucket id."""
     batch = table.sort_by("pos").combine_chunks().to_batches()[0]
+    doc_id = batch.column("doc_id")[0].as_py()
+    if not batch.column("bucket")[0].is_valid:  # see the left join
+        raise RuntimeError(f"{doc_id!r}: a page is not in its page table")
     spans = pa.StructArray.from_arrays(
         [batch.column("kind"), batch.column("text"), batch.column("ref")],
         names=["kind", "text", "media_ref"])
@@ -118,39 +137,54 @@ def _extract_bucket(table: pa.Table) -> pa.Table:
                 .drop_duplicates("page"))
     flat = remap_spreads(flat, dims)
 
-    sizes = np.array(batch.column("heading_sizes")[0].as_py() or [],
-                     dtype=np.float64)
-    headings = pd.DataFrame({
-        "doc_idx": np.zeros(len(sizes), dtype=np.int64),
-        "size": sizes,
-        "level": np.minimum(np.arange(1, len(sizes) + 1, dtype=np.int64),
-                            C.MAX_HEADING_LEVEL),
-    })
-
-    out = _reassemble_arrow(process_flat(flat, headings), docs, set())
+    out = _reassemble_arrow(process_flat(flat, headings[
+        headings["doc_idx"] == doc_id].assign(doc_idx=0)), docs, set())
     return pa.Table.from_batches([out.append_column(
         "bucket", batch.column("bucket").slice(0, 1))])
 
 
-def _salted_spans(giant: DataFrame, skew_threshold: int,
-                  has_sheets: bool) -> DataFrame:
-    """The giant's span rows with their doc-global context and page
-    bucket: the input of the per-bucket kernel (see ``_extract_giant``)."""
+def _salted_spans(giant: DataFrame, skew_threshold: int, has_sheets: bool
+                  ) -> tuple[DataFrame, pd.DataFrame]:
+    """The giants' span rows with their doc-global context and page
+    bucket, and their heading levels keyed by doc_id: the inputs of the
+    per-bucket kernel (see ``_extract_giant``). Runs one eager job."""
     # the *exploded* form is NOT persisted: a span-level InMemoryRelation
     # measured 2x slower at 32 threads (cache build + block-manager
     # contention + GC) than re-exploding the cached doc rows
     rows = (
-        giant.select("doc_id", F.size("spans").alias("n_doc_spans"),
-                     F.posexplode("spans").alias("pos", "span"))
-        .select(
-            "doc_id", "n_doc_spans", "pos",
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("ref"),
-        )
+        giant.select("doc_id", F.posexplode("spans").alias("pos", "span"))
+        .select("doc_id", "pos", "span.kind", "span.text",
+                F.col("span.media_ref").alias("ref"))
         .withColumn("base", F.split(F.col("kind"), ";").getItem(0))
         .withColumn("page_hint", _attr("page"))
     )
+
+    # the giants' page table (one row per page and size, so small),
+    # collected. One job over the persisted rows, parallel across their
+    # partitions: at local[4], eight 100k-span giants counted in 1.34 s
+    # (2.68 s natively in one task), one 390k-span giant in 1.50 s (1.13 s)
+    pages = pd.DataFrame(
+        giant.select("doc_id", F.col("spans.kind").alias("kinds"))
+        .mapInArrow(_page_counts, "doc_id string, page long, size double, "
+                    "cnt long").collect(),
+        columns=["doc_id", "page_hint", "size", "cnt"])
+
+    # buckets: each giant's pages in (reading) order, cut by the kernel's
+    # chunk rule at an even share n/ceil(n/T) (whole pages: a small last
+    # bucket may follow); built from pandas, its broadcast runs no job
+    per_page = pages.groupby(["doc_id", "page_hint"], as_index=False).cnt.sum()
+    bucket = []
+    for _, n in per_page.groupby("doc_id")["cnt"]:
+        share = -(-n.sum() // -(-n.sum() // skew_threshold))
+        bucket += [b for b, (i, j, _) in enumerate(cut_runs(n.tolist(), share))
+                   for _ in range(i, j)]
+    buckets = giant.sparkSession.createDataFrame(
+        per_page.drop(columns="cnt").assign(bucket=bucket))
+
+    # heading levels (M1) by the kernel's rule; doc_idx holds the doc_id
+    tt = pages[pages["size"].notna()].rename(columns={"doc_id": "doc_idx"})
+    headings = levels_from_counts(
+        tt.groupby(["doc_idx", "size"], as_index=False)["cnt"].sum())
 
     # media dedup (I5) as a window filter over the (small) media subset:
     # keep the first (page, y, x, pos) occurrence per (doc, layer, phash)
@@ -162,33 +196,16 @@ def _salted_spans(giant: DataFrame, skew_threshold: int,
                  .orderBy("page_hint", _attr("y"), _attr("x"), "pos")))
              .filter(F.col("rn") == 1).drop("rn"))
     rest = rows.filter(~(is_media & (phash != "")))
-    deduped = rest.unionByName(media)
-
-    # doc-global context in one aggregation. Heading context (M1): the body
-    # is the most frequent text/title size (deterministic mode breaks ties
-    # toward the smaller size, as the kernel does), and every distinct size
-    # above it is a heading, level = rank by size descending; the set of
-    # distinct font sizes is tiny at any document size. Page range: the
-    # bucket bounds below.
-    tt_size = F.when(F.col("base").isin("text", "title"), _attr("size"))
-    doc_ctx = (
-        rows.groupBy("doc_id")
-        .agg(F.mode(tt_size, deterministic=True).alias("body"),
-             F.collect_set(tt_size).alias("sizes"),
-             F.min("page_hint").alias("p0"), F.max("page_hint").alias("p1"))
-        .select("doc_id", "p0", "p1", F.sort_array(
-            F.filter("sizes", lambda s: s > F.col("body")), asc=False)
-            .alias("heading_sizes")))
-
-    with_ctx = deduped.join(F.broadcast(doc_ctx), "doc_id")
-    ctx_cols = ["heading_sizes"]
+    # left: a span off the collected table fails its bucket, not vanishes
+    with_ctx = rest.unionByName(media).join(F.broadcast(buckets),
+                                            ["doc_id", "page_hint"], "left")
 
     # doc-global sheet context (L1–L3: per-sheet dims, the L2 full-spread
     # gate, the physical-page counter) from the PRE-dedup, non-boilerplate
     # rows — sheet geometry is a property of the sheet (reference:
     # page.rect / page images), and sourcing from `rows` keeps the
     # expensive dedup-window subplan computed exactly once. Every (doc,
-    # sheet) with a non-boilerplate row of `deduped` has a row here.
+    # sheet) with a non-boilerplate row of `with_ctx` has a row here.
     # Built only when the probe found a ';sw=' attr (see the module doc).
     if has_sheets:
         wdoc = Window.partitionBy("doc_id")
@@ -215,31 +232,16 @@ def _salted_spans(giant: DataFrame, skew_threshold: int,
             .select("doc_id", "page_hint", *SHEET_CTX_COLS))
         with_ctx = with_ctx.join(F.broadcast(sheet_dims),
                                  ["doc_id", "page_hint"], "left")
-        ctx_cols += SHEET_CTX_COLS
-
-    # Salt count ADAPTS to document size (~skew_threshold spans per
-    # bucket): a fixed salt count either shreds medium giants into
-    # thousands of tiny groups (per-group Python overhead dominates) or
-    # under-splits the truly huge ones. A 10^6-span document still spreads
-    # across ~n/skew_threshold tasks, so task size stays bounded by bucket,
-    # not by document. Every document here has more than skew_threshold
-    # spans, so it gets at least two buckets. Buckets are contiguous page
-    # ranges of [p0, p1] (monotone in the page), so bucket order is reading
-    # order and the bucket outputs concatenate.
-    n_buckets = F.ceil(F.col("n_doc_spans") / F.lit(skew_threshold))
-    bucket = F.floor((F.col("page_hint") - F.col("p0")) * n_buckets
-                     / (F.col("p1") - F.col("p0") + 1))
 
     # ship the kernel only what it consumes: base/page_hint are re-derived
     # by the kernel's own attr parse
-    return with_ctx.select("doc_id", "pos", "kind", "text", "ref",
-                           bucket.alias("bucket"), *ctx_cols)
+    return with_ctx.drop("base", "page_hint"), headings
 
 
 def _extract_giant(giant: DataFrame, skew_threshold: int,
                    has_sheets: bool) -> DataFrame:
     """Per-page-bucket salted extraction of healthy documents above the
-    threshold, ``ceil(n_spans / skew_threshold)`` buckets per document.
+    threshold (the bucket rule: see the module doc).
 
     ``giant`` is the non-empty, already-persisted giant subset and
     ``has_sheets`` the probe's answer to "does any giant carry ``;sw=``"
@@ -248,14 +250,14 @@ def _extract_giant(giant: DataFrame, skew_threshold: int,
     Only three kinds of work happen here. Each line after the explode is
     one shuffle at most:
       explode -> doc-global context a page bucket cannot compute alone:
+                 - page table: one eager count per giant row, collected;
+                   the driver's buckets are broadcast-joined (left)
                  - media dedup as a window *filter* on media rows only,
                    unioned back with the narrow non-media rows
-                 - heading sizes and page range: one per-doc aggregation,
-                   broadcast-joined
                  - sheet context (only when the probe finds sheets): one
                    per-(doc, sheet) aggregation plus a running window,
                    broadcast-joined
-              -> one full shuffle into (doc_id, page-range bucket) groups
+              -> one full shuffle into (doc_id, bucket) groups
               -> applyInArrow kernel: one finished row per bucket
               -> window offset shift + groupBy concatenation (same key: one
                  shuffle) over the bucket rows
@@ -270,11 +272,12 @@ def _extract_giant(giant: DataFrame, skew_threshold: int,
     # and a single wave of slot-sized tasks lets one straggler extend the
     # whole stage
     n_parts = 3 * spark.sparkContext.defaultParallelism
+    spans, headings = _salted_spans(giant, skew_threshold, has_sheets)
     buckets = (
-        _salted_spans(giant, skew_threshold, has_sheets)
-        .repartition(n_parts, "doc_id", "bucket")
+        spans.repartition(n_parts, "doc_id", "bucket")
         .groupBy("doc_id", "bucket")
-        .applyInArrow(_extract_bucket, schema=_BUCKET_SCHEMA)
+        .applyInArrow(lambda t: _extract_bucket(t, headings),
+                      schema=_BUCKET_SCHEMA)
     )
 
     # ordered concatenation, fully native: each bucket's offsets shift by
@@ -310,7 +313,7 @@ def run_extract_skewed(
 ) -> DataFrame:
     """Full extraction plan with skew salting: documents of at most
     ``skew_threshold`` spans run whole through the Arrow kernel, larger ones
-    per page bucket of about ``skew_threshold`` spans; one unioned output.
+    per page bucket (see the module doc); one unioned output.
 
     A failed document (any NULL kind) of any size also runs in the kernel,
     which marks it ``failed`` and drops its rows right after flatten, so it
@@ -318,10 +321,11 @@ def run_extract_skewed(
     NULL-kind check only runs for documents above the threshold.
 
     The giant subset is persisted and probed with one eager job before any
-    salted expression is built. When it is empty, the whole input runs the
-    kernel plan alone: no filter, no union, no salted subplan. Dropping the
-    filter is safe, since every document then fits the kernel, and a giant
-    that appears in the source after the probe still gets its row.
+    salted expression is built (a giant adds the page-table job). When it
+    is empty, the whole input runs the kernel plan alone: no filter, no
+    union, no salted subplan. Dropping the filter is safe, since every
+    document then fits the kernel, and a giant that appears in the source
+    after the probe still gets its row.
 
     ``num_partitions`` None probes the raw source once; >0 pins a
     repartition of the normal documents (see ``run_extract``)."""

@@ -6,9 +6,10 @@ stages them to parquet, and runs ``run_extract_skewed`` to a ``noop`` sink
 at T=8192 (the giant is salted into page buckets) and at T=2^20 (the whole
 corpus runs in the Arrow kernel), the two routes interleaved after one
 untimed warm-up each. Prints one JSON line per route with the min, median
-and spread ((max - min) / median) of the wall, the salted route's smallest
-and largest bucket in input spans, and asserts that the giant's output is
-equal on both routes.
+and spread ((max - min) / median) of the wall, and for the salted route
+the smallest and largest bucket and the giant's largest page, in input
+spans. Asserts that the giant's output is equal on both routes and that
+no bucket holds more than max(T, largest page) spans.
 
 Usage:
     python scripts/giant_route.py --spans 97000 [--repeats 5]
@@ -25,6 +26,7 @@ import statistics
 import sys
 import tempfile
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -63,13 +65,17 @@ def giant_doc(n_spans: int, seed: int) -> dict:
     return {"doc_id": GIANT_ID, "spans": spans[:n_spans]}
 
 
-def stage(path: str, n_spans: int, seed: int, parts: int) -> None:
-    docs = gen_corpus(2000, seed=seed, giants=0) + [giant_doc(n_spans, seed)]
+def stage(path: str, n_spans: int, seed: int, parts: int) -> int:
+    """Writes the corpus; returns the giant's largest page in spans."""
+    giant = giant_doc(n_spans, seed)
+    docs = gen_corpus(2000, seed=seed, giants=0) + [giant]
     table = pa.Table.from_pylist(docs, schema=_INPUT)
     per = -(-table.num_rows // parts)
     os.makedirs(path, exist_ok=True)
     for i in range(0, table.num_rows, per):
         pq.write_table(table.slice(i, per), f"{path}/part-{i // per:05d}.parquet")
+    return max(Counter(_PAGE.search(s["kind"]).group(1)
+                       for s in giant["spans"]).values())
 
 
 def main() -> None:
@@ -85,7 +91,8 @@ def main() -> None:
                           extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     path = os.path.join(args.work or tempfile.mkdtemp(), "docs")
-    stage(path, args.spans, args.seed, spark.sparkContext.defaultParallelism)
+    largest_page = stage(path, args.spans, args.seed,
+                         spark.sparkContext.defaultParallelism)
     df = spark.read.parquet(path)
 
     def run(t: int) -> float:
@@ -103,9 +110,10 @@ def main() -> None:
             walls[route].append(run(t))
 
     t = ROUTES["salted"]
-    sizes = [r["count"] for r in (
-        _salted_spans(df.filter(F.size("spans") > t), t, has_sheets=False)
-        .groupBy("bucket").count().collect())]
+    spans, _ = _salted_spans(df.filter(F.size("spans") > t), t,
+                             has_sheets=False)
+    sizes = [r["count"] for r in spans.groupBy("bucket").count().collect()]
+    assert max(sizes) <= max(t, largest_page), "bucket above T and any page"
     outs = {}
     for route, t in ROUTES.items():
         row = run_extract_skewed(df, skew_threshold=t) \
@@ -123,7 +131,8 @@ def main() -> None:
                "spread": round((max(w) - min(w)) / med, 3)}
         if route == "salted":
             rec.update(buckets=len(sizes), bucket_min_spans=min(sizes),
-                       bucket_max_spans=max(sizes))
+                       bucket_max_spans=max(sizes),
+                       largest_page_spans=largest_page)
         print(json.dumps(rec), flush=True)
     spark.stop()
 

@@ -108,7 +108,8 @@ def test_fuzzed_span_equality_skew_path(spark, corpus, threshold):
     """The salted per-page-bucket plan must speak the SAME attr grammar
     (round 1's unsigned regexes diverged on negative numerics here): a
     threshold of 1 or 3 spans routes nearly every fuzzed doc through the
-    skew path, split into ceil(n/threshold) page buckets."""
+    skew path, split into page buckets of at most threshold spans unless
+    one page is larger."""
     _assert_corpus_equal(
         spark, corpus,
         lambda df: run_extract_skewed(df, skew_threshold=threshold))

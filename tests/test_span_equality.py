@@ -3,15 +3,19 @@ order) between the vectorized engine and the pure-Python oracle, over the
 full deterministic fixture corpus (north rule / BASELINE.json:15)."""
 
 import random
+import re
+from collections import Counter
 
 import pyarrow as pa
 import pytest
 
 from mivaa_pdf_extractor_spark.core import constants as C
-from mivaa_pdf_extractor_spark.core.kinds import make_kind
+from mivaa_pdf_extractor_spark.core.kinds import make_kind, parse_kind
 from mivaa_pdf_extractor_spark.operators.extract import (extract_iter_arrow,
                                                          run_extract)
-from mivaa_pdf_extractor_spark.operators.skew import run_extract_skewed
+from mivaa_pdf_extractor_spark.operators.skew import (_extract_bucket,
+                                                      _salted_spans,
+                                                      run_extract_skewed)
 from mivaa_pdf_extractor_spark.oracle import extract_document
 from mivaa_pdf_extractor_spark.sources.synthetic import (_span,
                                                           corpus_to_spark_df,
@@ -54,6 +58,72 @@ def test_spark_normal_path_equals_oracle(spark):
     assert_equal(docs, rows)
 
 
+def _sparse_pages_giant(threshold):
+    """Pages 1, 2 and 900 in turn, plus one span on page -3."""
+    return {"doc_id": "edge-sparse-pages",
+            "spans": [_span(make_kind("text", page=-3, y=40, x=50), "minus")]
+            + [_span(make_kind("text", page=(1, 2, 900)[i % 3],
+                               y=40 + i // 3, x=50), f"s{i}")
+               for i in range(threshold + 100)]}
+
+
+def _outlier_page_giant(threshold):
+    """Dense pages of 60 spans, then one span on page 10,000."""
+    return {"doc_id": "edge-outlier-page",
+            "spans": [_span(make_kind("text", page=1 + i // 60,
+                                      y=40 + i % 60, x=50), f"o{i}")
+                      for i in range(threshold + threshold // 2)]
+            + [_span(make_kind("text", page=10_000, y=40, x=50), "far")]}
+
+
+def _renumbered_giant(seed):
+    """Two gen_corpus giants end to end, the second's pages shifted past
+    the first's last page."""
+    first, second = [d["spans"] for d in gen_corpus(2, seed=seed, giants=2)]
+    shift = max(parse_kind(s["kind"]).page for s in first)
+    return {"doc_id": "edge-renumbered", "spans": first + [
+        dict(s, kind=re.sub(r"(?<=;)page=(-?\d+)",
+                            lambda m: f"page={int(m.group(1)) + shift}",
+                            s["kind"]))
+        for s in second]}
+
+
+@pytest.mark.spark
+def test_salted_buckets_hold_at_most_threshold_or_one_page(spark):
+    threshold = 2000
+    giants = [_outlier_page_giant(threshold), _sparse_pages_giant(threshold),
+              _renumbered_giant(seed=11)]
+    spans, _ = _salted_spans(corpus_to_spark_df(spark, giants), threshold,
+                             has_sheets=False)
+    buckets = {}
+    for r in spans.groupBy("doc_id", "bucket").count().collect():
+        buckets.setdefault(r["doc_id"], []).append(r["count"])
+    for g in giants:
+        pages = Counter(parse_kind(s["kind"]).page for s in g["spans"])
+        sizes = buckets[g["doc_id"]]
+        n = len(g["spans"])
+        assert sum(sizes) == n, g["doc_id"]
+        assert len(sizes) >= 2, g["doc_id"]
+        assert max(sizes) <= max(threshold, max(pages.values())), (
+            g["doc_id"], sorted(sizes))
+        # cut at an even share n/ceil(n/T), not at T
+        assert max(sizes) <= max(-(-n // -(-n // threshold)),
+                                 max(pages.values())), (
+            g["doc_id"], sorted(sizes))
+
+
+def test_salted_bucket_off_the_page_table_fails():
+    """A span whose page the collected page table does not cover reaches
+    the bucket kernel with a NULL bucket (left join) and fails it."""
+    table = pa.table({
+        "doc_id": ["d"], "pos": [0],
+        "kind": [make_kind("text", page=7, y=40, x=50)], "text": ["t"],
+        "ref": pa.array([None], pa.string()),
+        "bucket": pa.array([None], pa.int64())})
+    with pytest.raises(RuntimeError, match="page table"):
+        _extract_bucket(table, None)
+
+
 @pytest.mark.spark
 def test_spark_skew_path_equals_oracle(spark):
     threshold = 2000
@@ -79,16 +149,14 @@ def test_spark_skew_path_equals_oracle(spark):
                    for i in range(threshold + 2)]},
     ]
     # bucket edges: spans in shuffled page order, sparse page numbers with
-    # one negative page, and a single-page giant (one bucket)
+    # one negative page, one far outlying page, and a single-page giant
+    # (one bucket)
     shuffled = list(giant["spans"])
     random.Random(3).shuffle(shuffled)
     docs += [
         {"doc_id": "edge-shuffled", "spans": shuffled},
-        {"doc_id": "edge-sparse-pages",
-         "spans": [_span(make_kind("text", page=-3, y=40, x=50), "minus")]
-         + [_span(make_kind("text", page=(1, 2, 900)[i % 3],
-                            y=40 + i // 3, x=50), f"s{i}")
-            for i in range(threshold + 100)]},
+        _sparse_pages_giant(threshold),
+        _outlier_page_giant(threshold),
         {"doc_id": "edge-one-page",
          "spans": [_span(make_kind("text", page=1, y=40 + i, x=50), f"p{i}")
                    for i in range(threshold + 5)]},
