@@ -702,10 +702,11 @@ def source_partitions(df: DataFrame) -> int:
 
 # Bytes of source per extraction task when spreading a too-coarse source.
 # The kernel runs ~135 ms per source MiB. A trivial mapInArrow task costs
-# ~0.35 s of task-slot time: 48 of them at local[4] on 4 vCPU took 4.2 s
-# of wall against 0.17 s for the same JVM-only job, and plain
-# rdd.mapPartitions cost the same (median of 7, 2026-10-18). At 2 MiB/task
-# that fixed cost is comparable to the compute; resizing this is a
+# ~0.06 s of task-slot time once the worker keeps its zip directories
+# (see the package's _keep_zip_directories): scripts/task_overhead.py ran
+# 48 of them at local[4] on 4 vCPU in 0.75-0.81 s of wall against
+# 0.08-0.09 s for the same JVM-only job (min of 5, 2026-10-19). At
+# 2 MiB/task that fixed cost is ~20% of the compute; resizing this is a
 # measured perf change of its own.
 _REPART_BYTES_PER_TASK = 2 * 1024 * 1024
 

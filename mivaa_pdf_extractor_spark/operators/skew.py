@@ -270,7 +270,9 @@ def _extract_giant(giant: DataFrame, skew_threshold: int,
     # byte-coalescing the compute-heavy Python stage down to a few tasks.
     # 3x task slots: page buckets are uneven (giants differ in page count),
     # and a single wave of slot-sized tasks lets one straggler extend the
-    # whole stage
+    # whole stage. A partition that holds a bucket pays ~0.06 s of slot
+    # time as a Python task before it runs the kernel
+    # (scripts/task_overhead.py, local[4])
     n_parts = 3 * spark.sparkContext.defaultParallelism
     spans, headings = _salted_spans(giant, skew_threshold, has_sheets)
     buckets = (

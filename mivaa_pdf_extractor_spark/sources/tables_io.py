@@ -14,12 +14,13 @@ honestly:
   the new directories to the bucket lists — zero reads of existing data;
 - **upsert / replace_namespace** rewrite ONLY the buckets whose keys appear
   in the update (collected as at most B small integers), compacting each
-  touched bucket to a single directory; untouched buckets keep their files
-  byte-for-byte. An incremental batch therefore costs O(touched buckets),
-  not O(table) — the round-3 verdict's full-table-rewrite scale-killer is
-  gone (at 100 TB with B sized so a bucket is a few GB, a small batch
-  rewrites a few bucket dirs, exactly like Iceberg MERGE's affected-file
-  rewrite);
+  touched bucket to one fresh directory; untouched buckets keep their files
+  byte-for-byte. Every write clusters its rows by bucket first, so each
+  bucket gets one parquet file per generation. An incremental batch
+  therefore costs O(touched buckets), not O(table) — the round-3
+  verdict's full-table-rewrite scale-killer is gone (at 100 TB with B
+  sized so a bucket is a few GB, a small batch rewrites a few bucket
+  dirs, exactly like Iceberg MERGE's affected-file rewrite);
 - schema lives in the manifest (not re-derived from footers): reads pass it
   explicitly, so adding a column never needs a ``mergeSchema`` footer scan,
   and old files simply surface nulls for new columns (Iceberg-style
@@ -243,12 +244,22 @@ class Catalog:
 
     def _stage_buckets(self, df: DataFrame, name: str, key: str | None,
                        gen: int, num_buckets: int) -> dict[int, str]:
-        """One Spark job: write ``df`` hash-partitioned by bucket into a
-        staging dir, then rename each bucket's output into place as
-        ``b<i>_g<gen>``. Returns {bucket: dirname}."""
+        """One Spark write: cluster ``df``'s rows by bucket, write them
+        partitioned by bucket into a staging dir, then rename each bucket's
+        output into place as ``b<i>_g<gen>``. Returns {bucket: dirname}.
+
+        Clustering, as Iceberg's ``write.distribution-mode=hash`` does,
+        puts every bucket in one task, so each bucket dir holds one file
+        and the write runs in one wave of at most min(B, task slots)
+        tasks; unclustered, every task opens a file per bucket it holds.
+        Bucket b goes to task b mod n, so tasks hold equal bucket counts
+        (hashing 16 buckets into 4 tasks gave one task 6 of them)."""
         root = self._path(name)
         stage = os.path.join(root, f"_stage_g{gen}")
+        n_tasks = min(num_buckets,
+                      self.spark.sparkContext.defaultParallelism)
         (df.withColumn("__bucket", self._bucket_col(df, key, num_buckets))
+           .repartitionById(n_tasks, "__bucket")
            .write.mode("overwrite").partitionBy("__bucket").parquet(stage))
         out: dict[int, str] = {}
         for d in os.listdir(stage):
@@ -362,7 +373,7 @@ class Catalog:
     def append(self, df: DataFrame, name: str, key: str = "doc_id") -> None:
         """Blind append: stage the new rows bucketed and extend the bucket
         dir-lists — no read, no rewrite of existing data (the append-log
-        tables — lineage, checkpoint events — stay O(batch))."""
+        ``lineage`` table stays O(batch))."""
         if self.use_iceberg:
             df.writeTo(f"local.db.{name}").append()
             return
@@ -474,18 +485,18 @@ class Catalog:
                 self._commit(name, None, df, self._bucket_key(df, key),
                              df.schema, self.num_buckets)
                 return
-            # the update subtree is evaluated up to three times
-            # (touched-bucket collect, anti-join build, union write) —
-            # persist it so an expensive upstream plan (full extraction)
-            # runs once. The scope releases only what THIS call persisted:
-            # a caller's cached frame keeps its cache
+            # the update is read by the touched-bucket aggregation, the
+            # anti-join and the write — persist it so an expensive upstream
+            # plan (full extraction) runs once. The scope releases only
+            # what THIS call persisted: a caller's cached frame keeps its
+            # cache
             with cache_scope():
                 if not df.is_cached:
                     df = track(df)
-                keys = (delete_keys if delete_keys is not None
-                        else df.select(key)).select(key).distinct()
-                if delete_keys is not None and not keys.is_cached:
-                    keys = track(keys)
+                # an anti-join needs no distinct: without delete_keys its
+                # key side reads straight from the persisted update
+                keys = (df.select(key) if delete_keys is None
+                        else track(delete_keys.select(key)))
                 if m["key"] == key:
                     # bucket-pruned path: only buckets holding update keys
                     # are read and rewritten. `touched` must cover BOTH the
@@ -494,7 +505,7 @@ class Catalog:
                     # dir would otherwise replace an unread bucket's dir
                     # list (data loss); one pass over the union finds both
                     touched = self._touched_buckets(
-                        keys if delete_keys is None
+                        df if delete_keys is None
                         else keys.unionByName(df.select(key)),
                         key, m["num_buckets"])
                     if not touched:
