@@ -38,7 +38,9 @@ _FLOAT_FULL = re.compile(FLOAT_ATTR_PATTERN + r"\Z")
 
 def attr_regex(key: str, pattern: str) -> str:
     r"""Extraction regex for one ``k=v`` attr (group 1 is the value) for
-    Spark's ``regexp_extract``. It anchors on the ``;`` that starts an
+    Spark's ``regexp_extract``. Its one user is the salted path's native
+    parse of ``page``, the bucket join key (operators/skew.py); every other
+    attr is parsed by the kernel. It anchors on the ``;`` that starts an
     attribute segment, so segment 0 (the base) never matches, and the value
     must span the full segment (next ``;`` or end), so partial-numeric
     garbage like ``y=1.2.3`` is a no-match (-> default), never a prefix

@@ -20,12 +20,15 @@ scan splits (hash-repartition only when the source is coarser than the
 cluster) — which never runs per-row Python (north rule). The loop-based
 spec this must match lives in oracle/extract_one.py.
 
+``run_stages`` is the one stage chain behind both kernels: after the
+flatten, attr parse → doc-global context → filter → spread remap →
 ``process_flat`` (table assembly → column split → classify → normalize →
-sort → media gating → offsets) and the flatten / attr parse / spread remap /
-reassembly stages around it are shared with the skew path
-(operators/skew.py), which runs each page bucket of a document above the
-skew threshold through them as a one-document batch, with doc-global
-context computed outside the bucket.
+sort → media gating → offsets) → reassembly. The skew path
+(operators/skew.py) runs each page bucket of a document above the skew
+threshold through it as a one-document batch. That document's context
+(heading levels, sheet context, media duplicates) comes from the same
+``heading_levels`` / ``_sheet_ctx`` / ``mark_media_dups`` calls, run once
+over the whole document, so each doc-global rule has one implementation.
 """
 
 from __future__ import annotations
@@ -76,11 +79,11 @@ _HASH_PREFIX = np.array(["", "# ", "## ", "### ", "#### ", "##### ", "###### "],
 
 
 # The engine's attribute table, one row per parsed column: (column, key,
-# default, value pattern from core/kinds.py). Both routes read it: the
-# kernel's parse_attrs below and the salted path's native regexp_extract
-# (operators/skew.py). The oracle's parse_kind keeps its own defaults
-# (core/kinds.py SpanAttrs) as the independent reference. An int default
-# makes an int64 column, a float default a float64 one.
+# default, value pattern from core/kinds.py). The kernel's parse_attrs below
+# reads it, and so does the salted path's native parse of ``page``, its
+# bucket join key (operators/skew.py). The oracle's parse_kind keeps its own
+# defaults (core/kinds.py SpanAttrs) as the independent reference. An int
+# default makes an int64 column, a float default a float64 one.
 ATTRS = (
     # span and sheet dims feed only the L3/L5 spread remap
     ("w", "w", 0.0, FLOAT_ATTR_PATTERN),
@@ -135,21 +138,15 @@ def parse_attrs(flat: pd.DataFrame) -> pd.DataFrame:
 
 
 def heading_levels(flat: pd.DataFrame, valid: np.ndarray) -> pd.DataFrame:
-    """Per (doc_idx, size) heading level: ``levels_from_counts`` over the
-    ``valid`` text/title spans. ``valid`` (row mask) lets the caller defer
-    the boilerplate filter so the frame is copied once, not per stage."""
+    """The engine's heading rule (M1) per (doc_idx, size) over the ``valid``
+    text/title spans: body = the most frequent size (ties -> smaller size);
+    sizes > body get levels 1.. descending by size, capped at 6. ``valid``
+    (row mask) lets the caller defer the boilerplate filter so the frame is
+    copied once, not per stage. Returns columns (doc_idx, size, level)."""
     tt = flat[flat["base"].isin(("text", "title")) & valid]
-    return levels_from_counts(
-        tt.groupby(["doc_idx", "size"]).size().rename("cnt").reset_index())
-
-
-def levels_from_counts(counts: pd.DataFrame) -> pd.DataFrame:
-    """The engine's heading rule (M1) over (doc_idx, size, cnt) text/title
-    span counts: body = the most frequent size (ties -> smaller size); sizes
-    > body get levels 1.. descending by size, capped at 6. Both routes call
-    it. Returns columns (doc_idx, size, level)."""
-    counts = counts.sort_values(["doc_idx", "cnt", "size"],
-                                ascending=[True, False, True])
+    counts = (tt.groupby(["doc_idx", "size"]).size().rename("cnt")
+              .reset_index().sort_values(["doc_idx", "cnt", "size"],
+                                         ascending=[True, False, True]))
     body = counts.drop_duplicates("doc_idx")[["doc_idx", "size"]].rename(
         columns={"size": "body"})
     sizes = counts[["doc_idx", "size"]].merge(body, on="doc_idx")
@@ -239,13 +236,13 @@ def remap_spreads(flat: pd.DataFrame,
 
     Sheet geometry (dims + the L2 gate) is a property of the SHEET, so it
     is computed PRE-media-dedup (reference: page.rect / page images) —
-    pass `dims` per (doc_idx, page): `_sheet_ctx` on the pre-dedup frame,
-    or the skew path's natively computed context (None -> no
+    pass `dims` per (doc_idx, page): `_sheet_ctx` on the pre-dedup frame
+    (of the batch, or of the whole giant for a page bucket; None -> no
     sheet-addressed docs, no-op)."""
     if dims is None:
         return flat
-    # dims cover every remaining row: both callers build them from the
-    # pre-dedup rows this frame is a subset of
+    # dims cover every remaining row: they are built from the pre-dedup
+    # rows of the document this frame is a subset of
     flat = flat.merge(dims, on=["doc_idx", "page"], how="left")
 
     flat["pos"] = 2 * flat["pos"]
@@ -539,6 +536,15 @@ def process_flat(flat: pd.DataFrame, headings: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
+def span_index(lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_idx, pos) of every span of a batch whose documents hold
+    ``lengths`` spans: the document's row and the span's place in it."""
+    starts = np.zeros(len(lengths), dtype=np.int64)
+    np.cumsum(lengths[:-1], out=starts[1:])
+    doc_idx = np.repeat(np.arange(len(lengths)), lengths)
+    return doc_idx, np.arange(len(doc_idx)) - starts[doc_idx]
+
+
 def _flatten_arrow(batch: "pa.RecordBatch") -> tuple[pd.DataFrame, pd.DataFrame]:
     """Arrow-native flatten: the spans ListArray's offsets/values replace
     the per-span Python loop of ``_flatten`` (dict-per-span materialization
@@ -553,14 +559,11 @@ def _flatten_arrow(batch: "pa.RecordBatch") -> tuple[pd.DataFrame, pd.DataFrame]
         "doc_id": batch.column("doc_id").to_pandas().astype(object),
         "n_input": lengths,
     })
-    total = int(lengths.sum())
-    starts = np.zeros(len(batch), dtype=np.int64)
-    np.cumsum(lengths[:-1], out=starts[1:])
+    doc_idx, pos = span_index(lengths)
     flat = pd.DataFrame({
-        "doc_idx": np.repeat(np.arange(len(batch)), lengths),
-        "doc_id": np.repeat(docs["doc_id"].to_numpy(), lengths),
-        "pos": (np.arange(total) - np.repeat(starts, lengths)
-                if total else np.array([], dtype=np.int64)),
+        "doc_idx": doc_idx,
+        "doc_id": docs["doc_id"].to_numpy()[doc_idx],
+        "pos": pos,
         "kind": values.field("kind").to_pandas().astype(object),
         "text": values.field("text").to_pandas().astype(object),
         "ref": values.field("media_ref").to_pandas().astype(object),
@@ -664,29 +667,44 @@ def _coalesce_batches(
             max_chunksize=n_docs)[0]
 
 
+def run_stages(flat: pd.DataFrame, docs: pd.DataFrame,
+               ctx: tuple | None = None) -> "pa.RecordBatch":
+    """The one stage chain of both kernels over a flattened batch: attr
+    parse -> doc-global context -> filter -> spread remap -> ``process_flat``
+    -> reassembly. A document with a NULL kind is ``failed`` and leaves
+    before the parse.
+
+    ``ctx`` None computes the context in the batch. A giant's page bucket
+    (operators/skew.py) passes the whole giant's context instead, computed
+    by the same functions: (headings, sheet dims or None, duplicate pos)."""
+    failed_docs = set(flat.loc[flat["kind"].isna(), "doc_idx"].unique())
+    if failed_docs:  # drop, not a mask: see the take below
+        flat = flat.drop(flat.index[flat["doc_idx"].isin(failed_docs)])
+
+    flat = parse_attrs(flat)
+    # boilerplate and media duplicates leave in one take: the stages
+    # before it read the `ok` mask instead of a filtered copy. A take, not
+    # a mask: a masked copy of a frame the caller still holds warns on
+    # every column the later stages add
+    ok = ~flat["base"].isin(C.BOILERPLATE_KINDS).to_numpy()
+    if ctx is None:
+        headings = heading_levels(flat, ok)
+        sheet_dims = _sheet_ctx(flat, ok)  # sheet geometry is pre-dedup
+        dup = mark_media_dups(flat, ok).to_numpy()
+    else:
+        headings, sheet_dims, dup_pos = ctx
+        dup = np.isin(flat["pos"].to_numpy(), dup_pos)
+    flat = remap_spreads(flat.take(np.flatnonzero(ok & ~dup)), sheet_dims)
+    return _reassemble_arrow(process_flat(flat, headings), docs, failed_docs)
+
+
 def extract_iter_arrow(
         batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
     """mapInArrow entrypoint: one tokenize->classify->assemble pass per
     Arrow chunk of documents, with zero per-span Python objects at either
     boundary."""
     for batch in _coalesce_batches(batches):
-        flat, docs = _flatten_arrow(batch)
-
-        null_kind = flat["kind"].isna()
-        failed_docs = set(flat.loc[null_kind, "doc_idx"].unique())
-        if failed_docs:
-            flat = flat[~flat["doc_idx"].isin(failed_docs)]
-
-        flat = parse_attrs(flat)
-        # boilerplate and media duplicates leave in one take: the stages
-        # before it read the `ok` mask instead of a filtered copy
-        ok = ~flat["base"].isin(C.BOILERPLATE_KINDS).to_numpy()
-        headings = heading_levels(flat, ok)
-        sheet_dims = _sheet_ctx(flat, ok)  # sheet geometry is pre-dedup
-        flat = flat[ok & ~mark_media_dups(flat, ok).to_numpy()]
-        flat = remap_spreads(flat, sheet_dims)
-        flat = process_flat(flat, headings)
-        yield _reassemble_arrow(flat, docs, failed_docs)
+        yield run_stages(*_flatten_arrow(batch))
 
 
 def source_partitions(df: DataFrame) -> int:

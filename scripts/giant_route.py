@@ -110,8 +110,7 @@ def main() -> None:
             walls[route].append(run(t))
 
     t = ROUTES["salted"]
-    spans, _ = _salted_spans(df.filter(F.size("spans") > t), t,
-                             has_sheets=False)
+    spans, _ = _salted_spans(df.filter(F.size("spans") > t), t)
     sizes = [r["count"] for r in spans.groupBy("bucket").count().collect()]
     assert max(sizes) <= max(t, largest_page), "bucket above T and any page"
     outs = {}

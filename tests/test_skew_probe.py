@@ -1,6 +1,7 @@
 """The giant probe runs before the salted plan is built: a batch with no
 document above ``skew_threshold`` gets the kernel plan alone, and one
-eager job answers whether any giant exists."""
+eager job answers whether any giant exists. With a giant, one more eager
+job collects its context, and no kernel rule runs natively."""
 
 import re
 
@@ -13,7 +14,8 @@ from mivaa_pdf_extractor_spark.sources.synthetic import (_span,
                                                           corpus_to_spark_df,
                                                           gen_corpus)
 
-from .test_span_equality import assert_equal
+from .test_span_equality import (_dup_media_giant, _sheet_giant,
+                                 assert_equal)
 
 
 def _build_in_group(spark, df, group):
@@ -55,3 +57,23 @@ def test_no_giant_batch_runs_kernel_plan_alone(spark, tmp_path):
     corpus_to_spark_df(spark, docs + [giant]).write.parquet(src2)
     out = _build_in_group(spark, spark.read.parquet(src2), "one-giant")
     assert "FlatMapGroupsInArrow" in _plan_nodes(out)
+
+
+@pytest.mark.spark
+def test_giant_plan_runs_no_native_kernel_rule(spark, tmp_path):
+    """Giants with sheets and media duplicates: the plan build starts the
+    probe and the context job only, and the offset shift is the plan's
+    only Window (no native dedup or sheet-context window)."""
+    t = C.DEFAULT_SKEW_THRESHOLD
+    docs = gen_corpus(24, seed=5, giants=0) + [_dup_media_giant(t),
+                                                _sheet_giant(t)]
+    src = str(tmp_path / "docs")
+    corpus_to_spark_df(spark, docs).write.parquet(src)
+
+    out = _build_in_group(spark, spark.read.parquet(src), "giants")
+    assert len(spark.sparkContext.statusTracker()
+               .getJobIdsForGroup("giants")) <= 2
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bWindow\b", plan)) == 1
+    rows = {r["doc_id"]: r.asDict() for r in out.collect()}
+    assert_equal(docs, rows)

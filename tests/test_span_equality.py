@@ -88,13 +88,56 @@ def _renumbered_giant(seed):
         for s in second]}
 
 
+def _dup_media_giant(threshold):
+    """One phash repeated on pages that land in different buckets, in the
+    image and the figure layer, listed last page first (the kept copy is
+    the first in page order, not in input order), plus one copy on a
+    header span."""
+    shared = "ab" * 8
+    return {"doc_id": "edge-dup-media", "spans": [
+        _span(make_kind(layer, page=page, y=y, x=60, w=200, h=100, edpi=200,
+                        phash=shared))
+        for layer, page, y in (("image", 70, 300), ("image", 40, 300),
+                               ("image", 5, 300), ("image", 5, 100),
+                               ("figure", 60, 500), ("figure", 2, 500))]
+        + [_span(make_kind("header", page=1, y=5, x=50, phash=shared), "H")]
+        + [_span(make_kind("text", page=1 + i // 30, y=40 + 8 * (i % 30),
+                           x=50), f"m{i}") for i in range(threshold + 200)]}
+
+
+def _sheet_giant(threshold):
+    """Sheet-addressed giant: two spread sheets (1200x800) then one single
+    (600x800) in turn, a gutter straddler on each spread, and one
+    full-spread image (L2) on sheet 4, listed last, that keeps it one
+    physical page, so every later sheet's physical page depends on a sheet
+    in another bucket."""
+    spans = []
+    sheet = 0
+    while len(spans) < threshold + 400:
+        sheet += 1
+        spread = sheet % 3 != 0
+        sw = 1200 if spread else 600
+        spans += [_span(make_kind("text", page=sheet, sw=sw, sh=800,
+                                  y=40 + 20 * j,
+                                  x=60 + 700 * (j % 2) if spread else 50,
+                                  w=150, size=16 if j == 0 else 10),
+                        f"s{sheet}-{j}") for j in range(36)]
+        if spread:
+            spans.append(_span(make_kind("text", page=sheet, sw=sw, sh=800,
+                                         y=780, x=520, w=160, size=10),
+                               f"gutter{sheet}"))
+    spans.append(_span(make_kind("image", page=4, sw=1200, sh=800, y=0,
+                                 x=100, w=1000, h=500, edpi=250,
+                                 phash="f" * 16)))
+    return {"doc_id": "edge-sheets", "spans": spans}
+
+
 @pytest.mark.spark
 def test_salted_buckets_hold_at_most_threshold_or_one_page(spark):
     threshold = 2000
     giants = [_outlier_page_giant(threshold), _sparse_pages_giant(threshold),
               _renumbered_giant(seed=11)]
-    spans, _ = _salted_spans(corpus_to_spark_df(spark, giants), threshold,
-                             has_sheets=False)
+    spans, _ = _salted_spans(corpus_to_spark_df(spark, giants), threshold)
     buckets = {}
     for r in spans.groupBy("doc_id", "bucket").count().collect():
         buckets.setdefault(r["doc_id"], []).append(r["count"])
@@ -149,8 +192,8 @@ def test_spark_skew_path_equals_oracle(spark):
                    for i in range(threshold + 2)]},
     ]
     # bucket edges: spans in shuffled page order, sparse page numbers with
-    # one negative page, one far outlying page, and a single-page giant
-    # (one bucket)
+    # one negative page, one far outlying page, a single-page giant (one
+    # bucket), media duplicates across buckets and a sheet-addressed giant
     shuffled = list(giant["spans"])
     random.Random(3).shuffle(shuffled)
     docs += [
@@ -160,6 +203,8 @@ def test_spark_skew_path_equals_oracle(spark):
         {"doc_id": "edge-one-page",
          "spans": [_span(make_kind("text", page=1, y=40 + i, x=50), f"p{i}")
                    for i in range(threshold + 5)]},
+        _dup_media_giant(threshold),
+        _sheet_giant(threshold),
     ]
     df = corpus_to_spark_df(spark, docs)
     out = run_extract_skewed(df, skew_threshold=threshold, num_partitions=4)
@@ -170,6 +215,9 @@ def test_spark_skew_path_equals_oracle(spark):
     assert rows["edge-boilerplate"]["status"] == C.STATUS_COMPLETED_EMPTY
     tie = [s["text"] for s in rows["edge-size-tie"]["spans"]]
     assert tie[:2] == ["w0", "# w1"]
+    media = [(s["kind"], s["page"]) for s in rows["edge-dup-media"]["spans"]
+             if s["media_ref"]]
+    assert media == [("figure", 2), ("image", 5)]
 
 
 def test_skew_threshold_below_one_is_rejected(spark):
