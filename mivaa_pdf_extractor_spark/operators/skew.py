@@ -1,15 +1,19 @@
-"""Skew-aware extraction: salted per-page processing of giant documents.
+"""Per-document routing: the size gate, the kernel and salted giants.
 
-The reference has no skew handling (SURVEY.md §4 — one 200-page catalog just
-takes longer); the north rule requires it explicitly. One size,
-``skew_threshold`` (T), bounds the spans a task extracts for one document:
+The reference has no skew handling (SURVEY.md §4: one 200-page catalog just
+takes longer). ``run_extract_skewed`` routes each document one of three ways:
 
-- documents with ``size(spans) <= T``, and failed documents (any NULL kind)
-  of any size, run whole through the normal ``mapInArrow`` kernel
-  (operators/extract.py);
-- a larger healthy document is **salted by page bucket**. One eager job
-  runs the kernel's own functions over each giant's whole kind list:
-  ``parse_attrs``, then its spans per page, its heading levels
+- **oversize**: more than ``max_doc_bytes`` of span text (the reference's
+  50 MB cap, S1) gets a terminal ``oversize`` row built natively, so it
+  never enters a Python worker; the gate wins over both other routes;
+- **kernel**: documents with ``size(spans) <= T`` (``skew_threshold``, the
+  one size that bounds the spans a task extracts for one document), and
+  failed documents (any NULL kind) of any size, run whole through the
+  normal ``mapInArrow`` kernel (operators/extract.py), which marks a
+  failed one ``failed`` right after flatten;
+- **salted**: a larger healthy document is split by page bucket. One
+  eager job runs the kernel's own functions over each giant's whole kind
+  list: ``parse_attrs``, then its spans per page, its heading levels
   (``heading_levels``, M1), its sheet context (``_sheet_ctx``, L1–L3) and
   the positions of its media duplicates (``mark_media_dups``, I5). The
   driver cuts its pages by the kernel's chunk rule (``cut_runs``) at
@@ -28,18 +32,15 @@ document extracts over at least n/T tasks (only the context job reads all
 its kinds in one task, and what it returns is one row per page, heading
 size or duplicate) until the final, JVM-side concatenation.
 
-The giant subset (the DOC rows routed here) is persisted through
-``core.cache.track`` and probed once, eagerly, before any salted
-expression is built; ``run_pipeline`` and the streaming batch release the
-persist with ``cache_scope()``. Measured at local[4] on a 6k-doc normal
-corpus, the median wall was 1.75 s with the persist and 2.05 s without.
-The *exploded* span rows are NOT persisted (see ``_salted_spans``).
-
-The probe answers one question: whether any document is a giant at all. A
-batch with no giant runs the kernel plan alone, with no filter, no union
-and no salted subplan: at local[4] on the 6k-doc normal corpus (no giant)
-the plan build went from 1.04 s and two eager jobs to 0.32 s and one job,
-and the median of ten runs went from 2,563 to 3,434 docs/s.
+Every document the kernel does not take (oversize or salted) is persisted
+once through ``core.cache.track``, released by the caller's
+``cache_scope()``, and probed by one eager job before any salted
+expression is built: does any document leave the kernel, is one a giant,
+is one oversize? The oversize rows come from that persist, so only the
+kernel reads the source; a batch with neither runs the kernel plan alone
+(no filter, no union: at local[4] on a 6k-doc normal corpus, 0.32 s and
+one job to build against 1.04 s and two). The *exploded* span rows are
+NOT persisted (see ``_salted_spans``).
 """
 
 from __future__ import annotations
@@ -51,7 +52,8 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import (DataFrame, Observation, Window, functions as F,
+                         types as T)
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..core import constants as C
@@ -204,8 +206,8 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
     """Per-page-bucket salted extraction of healthy documents above the
     threshold (the bucket rule: see the module doc).
 
-    ``giant`` is the non-empty, already-persisted giant subset (see
-    ``run_extract_skewed``).
+    ``giant`` is the non-empty giant part of the persisted routed subset
+    (see ``run_extract_skewed``).
 
     Only three kinds of work happen here. Each line after the explode is
     one shuffle at most:
@@ -264,31 +266,35 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
         .otherwise(C.STATUS_COMPLETED_EMPTY))
 
 
+def doc_bytes() -> F.Column:
+    """Total input span-text bytes per document — the Spark analog of the
+    reference's on-disk file size (native fold, no UDF)."""
+    return F.aggregate(
+        "spans", F.lit(0).cast("long"),
+        lambda acc, s: acc + F.coalesce(F.octet_length(s["text"]),
+                                        F.lit(0)).cast("long"))
+
+
 def run_extract_skewed(
     df: DataFrame,
     skew_threshold: int = C.DEFAULT_SKEW_THRESHOLD,
     num_partitions: int | None = None,
+    max_doc_bytes: int = C.MAX_DOC_BYTES,
 ) -> DataFrame:
-    """Full extraction plan with skew salting: documents of at most
-    ``skew_threshold`` spans run whole through the Arrow kernel, larger ones
-    per page bucket (see the module doc); one unioned output.
+    """Full extraction plan, one unioned output: each document takes one
+    of three routes, oversize, kernel or salted (see the module doc).
 
-    A failed document (any NULL kind) of any size also runs in the kernel,
-    which marks it ``failed`` and drops its rows right after flatten, so it
-    is never parsed: a failed giant costs one flatten in one task. The
-    NULL-kind check only runs for documents above the threshold.
-
-    The giant subset is persisted and probed with one eager job before any
-    salted expression is built (a giant adds the context job). When it
-    is empty, the whole input runs the kernel plan alone: no filter, no
-    union, no salted subplan. Dropping the filter is safe, since every
-    document then fits the kernel, and a giant that appears in the source
-    after the probe still gets its row.
+    The documents the kernel does not take are persisted and probed with
+    one eager job before any salted expression is built (a giant adds the
+    context job). With none, the whole input runs the kernel plan alone:
+    no filter, no union.
 
     ``num_partitions`` None probes the raw source once; >0 pins a
-    repartition of the normal documents (see ``run_extract``)."""
+    repartition of the kernel's documents (see ``run_extract``)."""
     if skew_threshold < 1:
         raise ValueError(f"skew_threshold must be >= 1, got {skew_threshold}")
+    # S1 size gate (pdf_processor.py:223 50 MB cap); NULL spans pass
+    oversize = F.coalesce(doc_bytes() > max_doc_bytes, F.lit(False))
     # size() is -1 for NULL arrays, so they stay on the normal path; And
     # short-circuits, so the forall scan only sees documents above T
     salted = ((F.size("spans") > skew_threshold)
@@ -297,15 +303,28 @@ def run_extract_skewed(
         # probe the RAW source once (one extra plan compile total) instead
         # of letting run_extract probe the filtered subplan per call
         num_partitions = auto_partition_target(df)
-    # persist ONLY the giant subset: the size filter is not pushable
-    # (computed column), so without this the salted subplans would each
-    # re-scan the FULL corpus. The subset is the skew tail, so the cache
-    # is small by construction. One job fills it and answers the routing
-    # question: no row means no giant. Ordered, so it is one job: a bare
-    # take(1) scans the partitions in growing waves, one job each.
-    giant = track(df.filter(salted))
-    if not giant.select("doc_id").orderBy("doc_id").take(1):
-        giant.unpersist()
+    # persist ONLY the tail the kernel does not take (an oversize row
+    # keeps no spans): the route filter is not pushable, so each branch
+    # would re-scan the FULL corpus. One ordered job (a bare take(1) scans
+    # in waves, one job each) fills it, giants first, and observes whether
+    # any row is oversize: no row means no tail, an oversize one no giant.
+    routed = track(df.filter(oversize | salted).select(
+        "doc_id", F.when(~oversize, F.col("spans")).alias("spans"),
+        oversize.alias("oversize")))
+    seen = Observation()
+    first = (routed.observe(seen, F.max("oversize").alias("oversize"))
+             .select("oversize").orderBy("oversize").take(1))
+    if not first:
+        routed.unpersist()
         return run_extract(df, num_partitions)
-    return run_extract(df.filter(~salted), num_partitions).unionByName(
-        _extract_giant(giant, skew_threshold))
+    out = run_extract(df.filter(~(oversize | salted)), num_partitions)
+    if seen.get["oversize"]:
+        out = out.unionByName(routed.filter(F.col("oversize")).select(
+            "doc_id",
+            F.array().cast(OUTPUT_SCHEMA["spans"].dataType).alias("spans"),
+            F.lit(0).alias("n_spans"), F.lit(0).cast("long").alias("n_chars"),
+            F.lit(C.STATUS_OVERSIZE).alias("status")))
+    if first[0]["oversize"]:  # no giant
+        return out
+    return out.unionByName(
+        _extract_giant(routed.filter(~F.col("oversize")), skew_threshold))

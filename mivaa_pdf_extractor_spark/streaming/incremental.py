@@ -7,14 +7,15 @@ resume + bounded fan-out; the natural Spark expression is a
 
 - new files under the source path are discovered exactly once
   (checkpointLocation tracks consumed files — ingest-level resume),
-- each micro-batch runs ``run_extract_skewed`` over ALL of its documents,
-  stamps the rows with ``stamp_run`` and upserts them into ``extracted``
-  keyed on doc_id (plus, with ``index_chunks``, the batch's chunk
-  namespaces). Because ``extracted`` is the resume state, stream-written
-  rows with a terminal status count as completed for a later
-  ``run_pipeline``. The stream itself applies no anti-join, no size gate
-  and writes no ``lineage``: a re-delivered document is re-extracted and
-  replaces its row,
+- each micro-batch runs ``run_extract_skewed`` over ALL of its documents
+  (so the router's S1 size gate applies: an oversize document gets its
+  terminal ``oversize`` row, as in ``run_pipeline``), stamps the rows with
+  ``stamp_run`` and upserts them into ``extracted`` keyed on doc_id (plus,
+  with ``index_chunks``, the batch's chunk namespaces). Because
+  ``extracted`` is the resume state, stream-written rows with a terminal
+  status count as completed for a later ``run_pipeline``. The stream
+  itself applies no anti-join and writes no ``lineage``: a re-delivered
+  document is re-extracted and replaces its row,
 - watermarks/session windows are deliberately absent: the reference has no
   event-time semantics (SURVEY.md §2.10 X3).
 """
@@ -52,7 +53,7 @@ def run_incremental(
         .parquet(source_path)
     )
 
-    # each batch's persists (the giant subset, the shared extraction)
+    # each batch's persists (the routed subset, the shared extraction)
     # are released when the batch returns
     @cache_scope()
     def process_batch(batch_df, batch_id: int) -> None:
