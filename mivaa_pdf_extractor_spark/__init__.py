@@ -8,9 +8,9 @@ dedup/similarity/text-analysis operators for training-data pipelines, and a
 resumable checkpointed pipeline with per-partition lineage.
 
 Architecture: declarative DataFrame plans + an Arrow-vectorized
-``mapInArrow`` extraction kernel (giant documents: salted page buckets
-run through the same kernel's Arrow stages by ``applyInArrow``); no per-row
-Python UDFs anywhere.
+``mapInArrow`` extraction kernel (giant documents: a ``mapInArrow``
+splitter cuts them into page buckets that run through the same kernel's
+Arrow stages); no per-row Python UDFs anywhere.
 """
 
 import zipimport

@@ -7,9 +7,9 @@ from pixels into the raw ``kind`` string: ``base[;k=v;...]`` — e.g.
 
 Scalar parser here (used by the oracle and by the synthetic generator);
 the engine parses the same grammar vectorized with its own attribute table
-(operators/extract.py ``parse_attrs`` and the salted path's
-``regexp_extract`` in operators/skew.py). tests/test_attr_grammar.py and
-the property fuzz in tests/test_property_fuzz.py keep them in sync.
+(operators/extract.py ``parse_attrs``, on both routes: the salted path's
+splitter runs it too). tests/test_attr_grammar.py and the property fuzz in
+tests/test_property_fuzz.py keep the two in sync.
 """
 
 from __future__ import annotations
@@ -18,14 +18,13 @@ import re
 from dataclasses import dataclass, field
 
 # ---------------------------------------------------------------------------
-# THE attr grammar — single source of truth for every parse path (oracle
-# parse_kind, the Arrow kernel's parse_attrs, the skew path's native
-# regexp_extract). In every path segment 0 of the ';'-split kind is the
-# base, never an attribute, even when it looks like ``page=2``. A value is
-# accepted only if the WHOLE value (up to the next ';' / end of string)
-# matches; anything else keeps the default.
+# THE attr grammar — single source of truth for both parse paths (the
+# oracle's parse_kind and the engine's parse_attrs). In both, segment 0 of
+# the ';'-split kind is the base, never an attribute, even when it looks
+# like ``page=2``. A value is accepted only if the WHOLE value (up to the
+# next ';' / end of string) matches; anything else keeps the default.
 # Bounded digit counts keep int64/float64 casts exact and identical across
-# Python int()/float(), Arrow cast, and Spark's cast.
+# Python int()/float() and Arrow's cast.
 # ---------------------------------------------------------------------------
 INT_ATTR_PATTERN = r"-?\d{1,9}"
 FLOAT_ATTR_PATTERN = r"-?\d{1,9}(?:\.\d{1,9})?(?:[eE][-+]?\d{1,2})?"
@@ -34,20 +33,6 @@ ANY_ATTR_PATTERN = r"[^;]*"
 
 _INT_FULL = re.compile(INT_ATTR_PATTERN + r"\Z")
 _FLOAT_FULL = re.compile(FLOAT_ATTR_PATTERN + r"\Z")
-
-
-def attr_regex(key: str, pattern: str) -> str:
-    r"""Extraction regex for one ``k=v`` attr (group 1 is the value) for
-    Spark's ``regexp_extract``. Its one user is the salted path's native
-    parse of ``page``, the bucket join key (operators/skew.py); every other
-    attr is parsed by the kernel. It anchors on the ``;`` that starts an
-    attribute segment, so segment 0 (the base) never matches, and the value
-    must span the full segment (next ``;`` or end), so partial-numeric
-    garbage like ``y=1.2.3`` is a no-match (-> default), never a prefix
-    parse. The end is ``\z``, not ``$``: Java's ``$`` also matches before
-    a final line terminator, which would read ``page=3\n`` as 3. First
-    valid occurrence wins (the leftmost match)."""
-    return rf";{key}=({pattern})(?:;|\z)"
 
 
 @dataclass

@@ -24,11 +24,12 @@ spec this must match lives in oracle/extract_one.py.
 flatten, attr parse → doc-global context → filter → spread remap →
 ``process_flat`` (table assembly → column split → classify → normalize →
 sort → media gating → offsets) → reassembly. The skew path
-(operators/skew.py) runs each page bucket of a document above the skew
-threshold through it as a one-document batch. That document's context
-(heading levels, sheet context, media duplicates) comes from the same
-``heading_levels`` / ``_sheet_ctx`` / ``mark_media_dups`` calls, run once
-over the whole document, so each doc-global rule has one implementation.
+(operators/skew.py) runs the page buckets of a document above the skew
+threshold through it, each bucket one document of the batch. The giant's
+context (heading levels, sheet context) and its media duplicates come from
+the same ``heading_levels`` / ``_sheet_ctx`` / ``mark_media_dups`` calls,
+run once over the whole giant by the salted path's splitter, so each
+doc-global rule has one implementation.
 """
 
 from __future__ import annotations
@@ -79,11 +80,11 @@ _HASH_PREFIX = np.array(["", "# ", "## ", "### ", "#### ", "##### ", "###### "],
 
 
 # The engine's attribute table, one row per parsed column: (column, key,
-# default, value pattern from core/kinds.py). The kernel's parse_attrs below
-# reads it, and so does the salted path's native parse of ``page``, its
-# bucket join key (operators/skew.py). The oracle's parse_kind keeps its own
-# defaults (core/kinds.py SpanAttrs) as the independent reference. An int
-# default makes an int64 column, a float default a float64 one.
+# default, value pattern from core/kinds.py). Its one reader is parse_attrs
+# below, on both routes: the salted path's splitter (operators/skew.py) runs
+# it over each giant. The oracle's parse_kind keeps its own defaults
+# (core/kinds.py SpanAttrs) as the independent reference. An int default
+# makes an int64 column, a float default a float64 one.
 ATTRS = (
     # span and sheet dims feed only the L3/L5 spread remap
     ("w", "w", 0.0, FLOAT_ATTR_PATTERN),
@@ -241,14 +242,16 @@ def remap_spreads(flat: pd.DataFrame,
     sheet-addressed docs, no-op)."""
     if dims is None:
         return flat
-    # dims cover every remaining row: they are built from the pre-dedup
-    # rows of the document this frame is a subset of
+    # dims cover every remaining row of a document that has them: they are
+    # built from its pre-dedup rows (a page bucket's from its whole giant)
     flat = flat.merge(dims, on=["doc_idx", "page"], how="left")
 
     flat["pos"] = 2 * flat["pos"]
-    sheet = flat["sheet_doc"].to_numpy(dtype=bool)
-    spread = sheet & flat["is_spread"].to_numpy(dtype=bool)
-    first = flat["first_phys"].to_numpy(dtype=np.int64)
+    # a row without dims (a bucket of a sheetless giant batched with a sheet
+    # giant's) is not a sheet: eq(True), as to_numpy(bool) reads NaN as True
+    sheet = flat["sheet_doc"].eq(True).to_numpy()
+    spread = sheet & flat["is_spread"].eq(True).to_numpy()
+    first = flat["first_phys"].fillna(0).to_numpy(dtype=np.int64)
     x = flat["x"].to_numpy(dtype=np.float64)
     y = flat["y"].to_numpy(dtype=np.float64)
     x1 = x + flat["w"].to_numpy(dtype=np.float64)
@@ -674,9 +677,10 @@ def run_stages(flat: pd.DataFrame, docs: pd.DataFrame,
     -> reassembly. A document with a NULL kind is ``failed`` and leaves
     before the parse.
 
-    ``ctx`` None computes the context in the batch. A giant's page bucket
-    (operators/skew.py) passes the whole giant's context instead, computed
-    by the same functions: (headings, sheet dims or None, duplicate pos)."""
+    ``ctx`` None computes the context in the batch. The rows of a giant's
+    page buckets (operators/skew.py) already passed the boilerplate and
+    duplicate masks over the whole giant, and pass its context instead,
+    computed by the same functions: (headings, sheet dims or None)."""
     failed_docs = set(flat.loc[flat["kind"].isna(), "doc_idx"].unique())
     if failed_docs:  # drop, not a mask: see the take below
         flat = flat.drop(flat.index[flat["doc_idx"].isin(failed_docs)])
@@ -690,11 +694,10 @@ def run_stages(flat: pd.DataFrame, docs: pd.DataFrame,
     if ctx is None:
         headings = heading_levels(flat, ok)
         sheet_dims = _sheet_ctx(flat, ok)  # sheet geometry is pre-dedup
-        dup = mark_media_dups(flat, ok).to_numpy()
+        ok &= ~mark_media_dups(flat, ok).to_numpy()
     else:
-        headings, sheet_dims, dup_pos = ctx
-        dup = np.isin(flat["pos"].to_numpy(), dup_pos)
-    flat = remap_spreads(flat.take(np.flatnonzero(ok & ~dup)), sheet_dims)
+        headings, sheet_dims = ctx
+    flat = remap_spreads(flat.take(np.flatnonzero(ok)), sheet_dims)
     return _reassemble_arrow(process_flat(flat, headings), docs, failed_docs)
 
 

@@ -11,36 +11,38 @@ takes longer). ``run_extract_skewed`` routes each document one of three ways:
   failed documents (any NULL kind) of any size, run whole through the
   normal ``mapInArrow`` kernel (operators/extract.py), which marks a
   failed one ``failed`` right after flatten;
-- **salted**: a larger healthy document is split by page bucket. One
-  eager job runs the kernel's own functions over each giant's whole kind
-  list: ``parse_attrs``, then its spans per page, its heading levels
-  (``heading_levels``, M1), its sheet context (``_sheet_ctx``, L1–L3) and
-  the positions of its media duplicates (``mark_media_dups``, I5). The
-  driver cuts its pages by the kernel's chunk rule (``cut_runs``) at
-  ``n / ceil(n/T)`` spans, so at most T unless one page is larger. Each
-  ``(doc_id, bucket)`` group is then a one-document batch for the kernel's
-  own stage chain (``run_stages`` through ``applyInArrow``), with the
-  giant's context shipped in the closure, and returns one finished row
-  with bucket-local offsets. The bucket rows are joined **natively**: a
-  window sum of the earlier buckets' characters shifts the offsets, and
-  one ``groupBy`` concatenates the span arrays in bucket order (SURVEY.md
-  §7.2 step 8's "one subtle shuffle"). No kernel rule has a native copy:
-  the only attribute parsed natively is ``page``, the bucket join key.
+- **salted**: a larger healthy document is split by page bucket in one
+  pass. A ``mapInArrow`` splitter (``_split_giants``) reads each giant row
+  once and runs the kernel's own functions over its whole span list:
+  ``parse_attrs``, its heading levels (``heading_levels``, M1), its sheet
+  context (``_sheet_ctx``, L1–L3) and its media duplicates
+  (``mark_media_dups``, I5). It cuts the pages by the kernel's chunk rule
+  (``cut_runs``) at ``n / ceil(n/T)`` spans, so at most T unless one page
+  is larger, and emits one row per ``(doc_id, bucket)``: the bucket's
+  spans that pass the boilerplate and duplicate masks, in giant order, the
+  giant's heading levels and the bucket's own sheet rows. The bucket
+  kernel (``_extract_buckets``) runs those rows through the kernel's own
+  stage chain (``run_stages``) with that context and returns one finished
+  row per bucket with bucket-local offsets. The bucket rows are joined
+  **natively**: a window sum of the earlier buckets' characters shifts the
+  offsets, and one ``groupBy`` concatenates the span arrays in bucket order
+  (SURVEY.md §7.2 step 8's "one subtle shuffle"). No kernel rule has a
+  native copy, and no attribute is parsed natively.
 
 Work is split only when a document is too big for one task: one 10^6-span
-document extracts over at least n/T tasks (only the context job reads all
-its kinds in one task, and what it returns is one row per page, heading
-size or duplicate) until the final, JVM-side concatenation.
+document extracts over at least n/T tasks (only the splitter reads all its
+spans in one task, to run the doc-global rules and the cut) until the
+final, JVM-side concatenation.
 
 Every document the kernel does not take (oversize or salted) is persisted
 once through ``core.cache.track``, released by the caller's
 ``cache_scope()``, and probed by one eager job before any salted
 expression is built: does any document leave the kernel, is one a giant,
-is one oversize? The oversize rows come from that persist, so only the
-kernel reads the source; a batch with neither runs the kernel plan alone
-(no filter, no union: at local[4] on a 6k-doc normal corpus, 0.32 s and
-one job to build against 1.04 s and two). The *exploded* span rows are
-NOT persisted (see ``_salted_spans``).
+is one oversize? The oversize rows and the splitter's input come from that
+persist, so only the kernel reads the source; a batch with neither runs
+the kernel plan alone (no filter, no union: at local[4] on a 6k-doc normal
+corpus, 0.32 s and one job to build against 1.04 s and two). The probe is
+the salted plan's only eager job.
 """
 
 from __future__ import annotations
@@ -50,17 +52,15 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import (DataFrame, Observation, Window, functions as F,
                          types as T)
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from ..core import constants as C
 from ..core.cache import track
-from ..core.kinds import attr_regex
-from .extract import (ATTRS, OUTPUT_SCHEMA, SHEET_CTX_COLS, _flatten_arrow,
-                      _sheet_ctx, auto_partition_target, cut_runs,
+from .extract import (INPUT_SCHEMA, OUTPUT_SCHEMA, _coalesce_batches,
+                      _flatten_arrow, _sheet_ctx, auto_partition_target, cut_runs,
                       heading_levels, mark_media_dups, parse_attrs,
                       run_extract, run_stages, span_index)
 
@@ -71,135 +71,103 @@ _BUCKET_SCHEMA = T.StructType(
 # larger; perfbench sizes its two-bucket giant against this name
 DEFAULT_SPANS_PER_BUCKET = C.DEFAULT_SKEW_THRESHOLD
 
-# The context job's one output table holds four parts. A row belongs to
-# the part whose own column it sets (the others are NULL): spans per page
-# (cnt), heading levels (level), sheet context (first_phys) and media
-# duplicates (pos). doc_idx holds the doc_id.
-_CTX_SCHEMA = pa.schema([
-    ("doc_idx", pa.string()), ("page", pa.int64()), ("cnt", pa.int64()),
-    ("size", pa.float64()), ("level", pa.int64()),
-    ("sheet_doc", pa.bool_()), ("is_spread", pa.bool_()),
-    ("first_phys", pa.int64()), ("sheet_w", pa.float64()),
-    ("sheet_h", pa.float64()), ("pos", pa.int64())])
+# A split row: one page bucket of a giant with the context the bucket
+# cannot compute alone, the giant's heading levels and the bucket's own
+# sheet rows (see _split_giants)
+_HEADING = pa.struct([("size", pa.float64()), ("level", pa.int64())])
+_SHEET = pa.struct([("page", pa.int64()), ("sheet_doc", pa.bool_()),
+                    ("is_spread", pa.bool_()), ("first_phys", pa.int64()),
+                    ("sheet_w", pa.float64()), ("sheet_h", pa.float64())])
+_SPLIT_SCHEMA = pa.schema([
+    ("doc_id", pa.string()), ("bucket", pa.int64()),
+    ("spans", to_arrow_type(INPUT_SCHEMA["spans"].dataType)),
+    ("headings", pa.list_(_HEADING)), ("sheets", pa.list_(_SHEET))])
 
 
-def _page_hint():
-    """Native parse of the ``page`` attr, the bucket join key, by the
-    kernel's table row (``ATTRS``): the first value that fully matches the
-    pattern in a segment after the base, else the default."""
-    _col, key, default, pattern = next(a for a in ATTRS if a[1] == "page")
-    v = F.regexp_extract("kind", attr_regex(key, pattern), 1)
-    return F.coalesce(F.nullif(v, F.lit("")), F.lit(str(default))).cast("long")
+def _lists(values: pa.Array, owner: np.ndarray, n: int) -> pa.ListArray:
+    """``n`` lists of ``values``, each value in the list its ``owner``
+    (non-decreasing) names."""
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(np.bincount(owner, minlength=n), out=offsets[1:])
+    return pa.ListArray.from_arrays(pa.array(offsets), values)
 
 
-def _doc_context(batches: Iterator[pa.RecordBatch]
-                 ) -> Iterator[pa.RecordBatch]:
-    """mapInArrow kernel over (doc_id, kinds) giant rows: each giant's
-    spans per page and its doc-global context, by the kernel's own
-    functions over its whole kind list (``_CTX_SCHEMA`` rows)."""
+def _struct(frame: pd.DataFrame, type_: pa.StructType) -> pa.StructArray:
+    return pa.StructArray.from_arrays(
+        [pa.array(frame[f.name].to_numpy(), f.type) for f in type_],
+        fields=list(type_))
+
+
+def _split(giant: pa.RecordBatch, skew_threshold: int) -> pa.RecordBatch:
+    """One giant row's split rows (``_SPLIT_SCHEMA``), one per bucket."""
+    spans = giant.column("spans").flatten()
+    n = len(spans)
+    flat = parse_attrs(pd.DataFrame({
+        "doc_idx": np.zeros(n, dtype=np.int64), "pos": np.arange(n),
+        "kind": spans.field("kind").to_pandas()}))
+    ok = ~flat["base"].isin(C.BOILERPLATE_KINDS).to_numpy()
+    headings = heading_levels(flat, ok)
+    sheets = _sheet_ctx(flat, ok)  # sheet geometry is pre-dedup
+    keep = np.flatnonzero(ok & ~mark_media_dups(flat, ok).to_numpy())
+
+    # the pages in (reading) order, cut by the kernel's chunk rule at an
+    # even share n/ceil(n/T) of all spans (whole pages: a small last bucket
+    # may follow)
+    pages, page_idx, counts = np.unique(flat["page"].to_numpy(),
+                                        return_inverse=True,
+                                        return_counts=True)
+    runs = [j - i for i, j, _ in
+            cut_runs(counts.tolist(), -(-n // -(-n // skew_threshold)))]
+    n_b = len(runs)
+    page_bucket = np.repeat(np.arange(n_b), runs)
+    owner = page_bucket[page_idx[keep]]
+    order = np.argsort(owner, kind="stable")  # giant order within a bucket
+    h = len(headings)
+    if sheets is None:
+        sheets = pd.DataFrame({f.name: [] for f in _SHEET})
+    return pa.RecordBatch.from_arrays([
+        giant.column("doc_id").take(np.zeros(n_b, dtype=np.int64)),
+        pa.array(np.arange(n_b), pa.int64()),
+        _lists(spans.take(keep[order]), owner[order], n_b),
+        # every bucket gets the giant's heading levels
+        _lists(_struct(headings, _HEADING).take(np.tile(np.arange(h), n_b)),
+               np.repeat(np.arange(n_b), h), n_b),
+        _lists(_struct(sheets, _SHEET), page_bucket[np.searchsorted(
+            pages, sheets["page"].to_numpy())], n_b),
+    ], schema=_SPLIT_SCHEMA)
+
+
+def _split_giants(batches: Iterator[pa.RecordBatch], skew_threshold: int
+                  ) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel over persisted (doc_id, spans) giant rows: each
+    giant, read once and whole, becomes one row per page bucket (the bucket
+    rule and the row: see the module doc). Every bucket keeps its row even
+    when none of its spans survive, so every giant keeps its output row."""
     for b in batches:
-        kinds = b.column("kinds")
-        doc_idx, pos = span_index(
-            kinds.value_lengths().to_numpy(zero_copy_only=False))
-        flat = parse_attrs(pd.DataFrame({
-            "doc_idx": doc_idx, "pos": pos,
-            "kind": kinds.flatten().to_pandas()}))
-        ok = ~flat["base"].isin(C.BOILERPLATE_KINDS).to_numpy()
-        parts = [flat.groupby(["doc_idx", "page"]).size().rename("cnt")
-                 .reset_index(),
-                 heading_levels(flat, ok), _sheet_ctx(flat, ok),
-                 flat.loc[mark_media_dups(flat, ok), ["doc_idx", "pos"]]]
-        doc_ids = np.asarray(b.column("doc_id").to_pylist(), dtype=object)
-        # the empty table first fixes every column and its type
-        yield from pa.concat_tables([_CTX_SCHEMA.empty_table()] + [
-            pa.Table.from_pandas(p.assign(doc_idx=doc_ids[p["doc_idx"]]),
-                                 preserve_index=False)
-            for p in parts if p is not None and len(p)],
-            promote_options="default").to_batches()
+        for i in range(b.num_rows):
+            yield _split(b.slice(i, 1), skew_threshold)
 
 
-def _extract_bucket(table: pa.Table, ctx: tuple) -> pa.Table:
-    """applyInArrow kernel: one (doc_id, bucket) group of a giant document,
-    run as a one-document batch through the kernel's stage chain.
-
-    ``ctx`` holds every giant's heading levels, sheet context and media
-    duplicate positions, keyed by the doc_id in ``doc_idx``. Returns one
-    finished output row (offsets local to the bucket) plus its bucket id."""
-    batch = table.sort_by("pos").combine_chunks().to_batches()[0]
-    doc_id = batch.column("doc_id")[0].as_py()
-    if not batch.column("bucket")[0].is_valid:  # see the left join
-        raise RuntimeError(f"{doc_id!r}: a page is not in its page table")
-    spans = pa.StructArray.from_arrays(
-        [batch.column("kind"), batch.column("text"), batch.column("ref")],
-        names=["kind", "text", "media_ref"])
-    flat, docs = _flatten_arrow(pa.RecordBatch.from_arrays(
-        [batch.column("doc_id").slice(0, 1),
-         pa.ListArray.from_arrays(pa.array([0, len(spans)], pa.int32()),
-                                  spans)],
-        names=["doc_id", "spans"]))
-    # _flatten_arrow numbers the bucket's spans from 0; the duplicate
-    # positions name the giant's own
-    flat["pos"] = batch.column("pos").to_numpy().astype(np.int64)
-
-    # a bucket holds whole pages (sheets), so the giant's context applies
-    # to it unchanged
-    headings, dims, dups = (f[f["doc_idx"] == doc_id].assign(doc_idx=0)
-                            for f in ctx)
-    out = run_stages(flat, docs, (headings, dims if len(dims) else None,
-                                  dups["pos"].to_numpy()))
-    return pa.Table.from_batches([out.append_column(
-        "bucket", batch.column("bucket").slice(0, 1))])
+def _ctx_frame(col: pa.ListArray) -> pd.DataFrame:
+    """A list column of split rows as one frame, its row in ``doc_idx``."""
+    doc_idx, _ = span_index(col.value_lengths().to_numpy(zero_copy_only=False))
+    values = col.flatten()
+    return pd.DataFrame({"doc_idx": doc_idx, **{
+        f.name: values.field(f.name).to_numpy(zero_copy_only=False)
+        for f in values.type}})
 
 
-def _salted_spans(giant: DataFrame, skew_threshold: int
-                  ) -> tuple[DataFrame, tuple]:
-    """The giants' span rows with their page bucket, and their doc-global
-    context (headings, sheet context, duplicate positions) keyed by doc_id:
-    the inputs of the per-bucket kernel (see ``_extract_giant``). Runs one
-    eager job."""
-    # the *exploded* form is NOT persisted: a span-level InMemoryRelation
-    # measured 2x slower at 32 threads (cache build + block-manager
-    # contention + GC) than re-exploding the cached doc rows
-    rows = (
-        giant.select("doc_id", F.posexplode("spans").alias("pos", "span"))
-        .select("doc_id", "pos", "span.kind", "span.text",
-                F.col("span.media_ref").alias("ref"))
-        .withColumn("page_hint", _page_hint())
-    )
-
-    # the giants' page table and context (one row per page, heading size
-    # or duplicate, so small), collected. One job over the persisted rows,
-    # shipping only the kinds, parallel across their partitions: when it
-    # only counted pages, at local[4], eight 100k-span giants counted in
-    # 1.34 s (2.68 s natively in one task), one 390k-span giant in 1.50 s
-    # (1.13 s)
-    t = (giant.select("doc_id", F.col("spans.kind").alias("kinds"))
-         .mapInArrow(_doc_context, from_arrow_schema(_CTX_SCHEMA)).toArrow())
-
-    def part(key: str, *cols: str) -> pd.DataFrame:
-        return t.filter(pc.is_valid(t[key])).select(
-            ["doc_idx", *cols]).to_pandas()
-
-    # buckets: each giant's pages in (reading) order, cut by the kernel's
-    # chunk rule at an even share n/ceil(n/T) (whole pages: a small last
-    # bucket may follow); built from pandas, its broadcast runs no job
-    pages = part("cnt", "page", "cnt").sort_values(["doc_idx", "page"],
-                                                   ignore_index=True)
-    bucket = []
-    for _, n in pages.groupby("doc_idx")["cnt"]:
-        share = -(-n.sum() // -(-n.sum() // skew_threshold))
-        bucket += [b for b, (i, j, _) in enumerate(cut_runs(n.tolist(), share))
-                   for _ in range(i, j)]
-    buckets = giant.sparkSession.createDataFrame(pages.drop(columns="cnt")
-        .rename(columns={"doc_idx": "doc_id", "page": "page_hint"})
-        .assign(bucket=bucket))
-
-    # left: a span off the collected table fails its bucket, not vanishes;
-    # page_hint is re-derived by the kernel's own attr parse
-    spans = rows.join(F.broadcast(buckets), ["doc_id", "page_hint"], "left")
-    return spans.drop("page_hint"), (
-        part("level", "size", "level"),
-        part("first_phys", "page", *SHEET_CTX_COLS), part("pos", "pos"))
+def _extract_buckets(batches: Iterator[pa.RecordBatch]
+                     ) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel over split rows: each row is one document of the
+    kernel's stage chain, with its giant's heading levels and its own sheet
+    rows as the context. Returns one finished row per bucket (offsets local
+    to the bucket) plus its bucket id."""
+    for b in _coalesce_batches(batches):
+        sheets = _ctx_frame(b.column("sheets"))
+        out = run_stages(*_flatten_arrow(b), (
+            _ctx_frame(b.column("headings")), sheets if len(sheets) else None))
+        yield out.append_column("bucket", b.column("bucket"))
 
 
 def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
@@ -209,35 +177,30 @@ def _extract_giant(giant: DataFrame, skew_threshold: int) -> DataFrame:
     ``giant`` is the non-empty giant part of the persisted routed subset
     (see ``run_extract_skewed``).
 
-    Only three kinds of work happen here. Each line after the explode is
-    one shuffle at most:
-      explode -> the driver's page buckets, broadcast-joined (left) on the
-                 native ``page`` parse; they and the doc-global context
-                 come from one eager job over the giant rows, and the
-                 context rides the kernel's closure
-              -> one full shuffle into (doc_id, bucket) groups
-              -> applyInArrow kernel: one finished row per bucket
+    Only three kinds of work happen here. Each line is one shuffle at most:
+      mapInArrow splitter: one row per (doc_id, bucket) with its context,
+                 each giant read once
+              -> one full shuffle on (doc_id, bucket)
+              -> mapInArrow bucket kernel: one finished row per bucket
               -> window offset shift + groupBy concatenation (same key: one
                  shuffle) over the bucket rows
-    The kernel drops boilerplate itself, so every giant keeps at least one
-    bucket row and therefore its output row.
+    The splitter emits every bucket, so every giant keeps its output row.
     """
     spark = giant.sparkSession
-    # explicit repartition on the exact grouping keys: the groupBy reuses
-    # this hash partitioning, and the fixed partition count keeps AQE from
-    # byte-coalescing the compute-heavy Python stage down to a few tasks.
-    # 3x task slots: page buckets are uneven (giants differ in page count),
-    # and a single wave of slot-sized tasks lets one straggler extend the
-    # whole stage. A partition that holds a bucket pays ~0.06 s of slot
-    # time as a Python task before it runs the kernel
+    # explicit repartition on the bucket key, at a fixed partition count
+    # that keeps AQE from byte-coalescing the compute-heavy Python stage
+    # down to a few tasks. 3x task slots: page buckets are uneven (giants
+    # differ in page count), and a single wave of slot-sized tasks lets one
+    # straggler extend the whole stage. A partition that holds a bucket
+    # pays ~0.06 s of slot time as a Python task before it runs the kernel
     # (scripts/task_overhead.py, local[4])
     n_parts = 3 * spark.sparkContext.defaultParallelism
-    spans, ctx = _salted_spans(giant, skew_threshold)
     buckets = (
-        spans.repartition(n_parts, "doc_id", "bucket")
-        .groupBy("doc_id", "bucket")
-        .applyInArrow(lambda t: _extract_bucket(t, ctx),
-                      schema=_BUCKET_SCHEMA)
+        giant.select("doc_id", "spans")
+        .mapInArrow(lambda it: _split_giants(it, skew_threshold),
+                    from_arrow_schema(_SPLIT_SCHEMA))
+        .repartition(n_parts, "doc_id", "bucket")
+        .mapInArrow(_extract_buckets, _BUCKET_SCHEMA)
     )
 
     # ordered concatenation, fully native: each bucket's offsets shift by
@@ -285,9 +248,9 @@ def run_extract_skewed(
     of three routes, oversize, kernel or salted (see the module doc).
 
     The documents the kernel does not take are persisted and probed with
-    one eager job before any salted expression is built (a giant adds the
-    context job). With none, the whole input runs the kernel plan alone:
-    no filter, no union.
+    one eager job, the plan build's only one, before any salted expression
+    is built. With none, the whole input runs the kernel plan alone: no
+    filter, no union.
 
     ``num_partitions`` None probes the raw source once; >0 pins a
     repartition of the kernel's documents (see ``run_extract``)."""

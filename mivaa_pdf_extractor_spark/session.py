@@ -85,9 +85,9 @@ def build_session(
         # vs 21.1s at 1024; 4096 was equal within noise). Normal-path docs
         # are bounded by the skew threshold (8,192 spans), so a batch is at
         # most ~8.4M spans, and the kernel cuts such a batch at doc
-        # boundaries into span-budget chunks; larger healthy docs never
-        # cross this boundary whole (their salted page buckets do, through
-        # applyInArrow).
+        # boundaries into span-budget chunks; a larger healthy doc crosses
+        # it whole only into the salted path's splitter, one row at a time,
+        # and its page buckets into the bucket kernel.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # compress the JVM<->Python Arrow IPC stream: this workload is
         # memory-bandwidth-bound at high parallelism (span text crosses the

@@ -8,8 +8,10 @@ corpus runs in the Arrow kernel), the two routes interleaved after one
 untimed warm-up each. Prints one JSON line per route with the min, median
 and spread ((max - min) / median) of the wall, and for the salted route
 the smallest and largest bucket and the giant's largest page, in input
-spans. Asserts that the giant's output is equal on both routes and that
-no bucket holds more than max(T, largest page) spans.
+spans (the buckets are the salted splitter's rows for the giant, each the
+sum of its whole pages), then one line with the salted route's median over
+the kernel route's. Asserts that the giant's output is equal on both routes
+and that no bucket holds more than max(T, largest page) spans.
 
 Usage:
     python scripts/giant_route.py --spans 97000 [--repeats 5]
@@ -35,7 +37,7 @@ import pyarrow.parquet as pq  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from mivaa_pdf_extractor_spark.operators.skew import (  # noqa: E402
-    _salted_spans, run_extract_skewed)
+    _split_giants, run_extract_skewed)
 from mivaa_pdf_extractor_spark.session import build_session  # noqa: E402
 from mivaa_pdf_extractor_spark.sources.synthetic import gen_corpus  # noqa: E402
 
@@ -65,8 +67,8 @@ def giant_doc(n_spans: int, seed: int) -> dict:
     return {"doc_id": GIANT_ID, "spans": spans[:n_spans]}
 
 
-def stage(path: str, n_spans: int, seed: int, parts: int) -> int:
-    """Writes the corpus; returns the giant's largest page in spans."""
+def stage(path: str, n_spans: int, seed: int, parts: int) -> dict:
+    """Writes the corpus; returns the giant."""
     giant = giant_doc(n_spans, seed)
     docs = gen_corpus(2000, seed=seed, giants=0) + [giant]
     table = pa.Table.from_pylist(docs, schema=_INPUT)
@@ -74,8 +76,17 @@ def stage(path: str, n_spans: int, seed: int, parts: int) -> int:
     os.makedirs(path, exist_ok=True)
     for i in range(0, table.num_rows, per):
         pq.write_table(table.slice(i, per), f"{path}/part-{i // per:05d}.parquet")
-    return max(Counter(_PAGE.search(s["kind"]).group(1)
-                       for s in giant["spans"]).values())
+    return giant
+
+
+def bucket_sizes(giant: dict, pages: Counter, t: int) -> list[int]:
+    """The giant's salted buckets in input spans: the splitter's rows, each
+    the sum of the pages its spans are on (a bucket holds whole pages)."""
+    batch = pa.RecordBatch.from_pylist([giant], schema=_INPUT)
+    return [sum(pages[p] for p in {_PAGE.search(s["kind"]).group(1)
+                                   for s in spans})
+            for b in _split_giants(iter([batch]), t)
+            for spans in b.column("spans").to_pylist()]
 
 
 def main() -> None:
@@ -91,8 +102,10 @@ def main() -> None:
                           extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     path = os.path.join(args.work or tempfile.mkdtemp(), "docs")
-    largest_page = stage(path, args.spans, args.seed,
-                         spark.sparkContext.defaultParallelism)
+    giant = stage(path, args.spans, args.seed,
+                  spark.sparkContext.defaultParallelism)
+    pages = Counter(_PAGE.search(s["kind"]).group(1) for s in giant["spans"])
+    largest_page = max(pages.values())
     df = spark.read.parquet(path)
 
     def run(t: int) -> float:
@@ -110,8 +123,7 @@ def main() -> None:
             walls[route].append(run(t))
 
     t = ROUTES["salted"]
-    spans, _ = _salted_spans(df.filter(F.size("spans") > t), t)
-    sizes = [r["count"] for r in spans.groupBy("bucket").count().collect()]
+    sizes = bucket_sizes(giant, pages, t)
     assert max(sizes) <= max(t, largest_page), "bucket above T and any page"
     outs = {}
     for route, t in ROUTES.items():
@@ -133,6 +145,9 @@ def main() -> None:
                        bucket_max_spans=max(sizes),
                        largest_page_spans=largest_page)
         print(json.dumps(rec), flush=True)
+    print(json.dumps({"salted_over_kernel_median": round(
+        statistics.median(walls["salted"])
+        / statistics.median(walls["kernel"]), 3)}), flush=True)
     spark.stop()
 
 

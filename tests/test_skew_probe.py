@@ -1,10 +1,10 @@
 """The router's probe runs before the salted plan is built: a batch with no
 document above ``skew_threshold`` or ``max_doc_bytes`` gets the kernel plan
 alone, and one eager job answers whether any document leaves the kernel,
-whether one is a giant and whether one is oversize. With a giant, one more
-eager job collects its context, and no kernel rule runs natively. Oversize
-documents come from the probed subset, so the source is scanned once
-outside it."""
+whether one is a giant and whether one is oversize. With a giant, the
+probe is still the only eager job (the splitter is lazy), and no kernel
+rule runs natively. Oversize documents come from the probed subset, so the
+source is scanned once outside it."""
 
 import re
 
@@ -33,7 +33,9 @@ def _build_in_group(spark, df, group, **kw):
 
 
 def _plan_nodes(df):
-    return set(re.findall(r"\b(FlatMapGroupsInArrow|Union)\b",
+    """The salted plan's marker (its offset-shift ``Window``) and ``Union``
+    in the optimized plan."""
+    return set(re.findall(r"\b(Window|Union)\b",
                           df._jdf.queryExecution().optimizedPlan().toString()))
 
 
@@ -71,14 +73,14 @@ def test_no_giant_batch_runs_kernel_plan_alone(spark, tmp_path):
     src2 = str(tmp_path / "docs_giant")
     corpus_to_spark_df(spark, docs + [_giant("giant-t1")]).write.parquet(src2)
     out = _build_in_group(spark, spark.read.parquet(src2), "one-giant")
-    assert "FlatMapGroupsInArrow" in _plan_nodes(out)
+    assert "Window" in _plan_nodes(out)
 
 
 @pytest.mark.spark
 def test_giant_plan_runs_no_native_kernel_rule(spark, tmp_path):
     """Giants with sheets and media duplicates: the plan build starts the
-    probe and the context job only, and the offset shift is the plan's
-    only Window (no native dedup or sheet-context window)."""
+    probe only, and the offset shift is the plan's only Window (no native
+    dedup or sheet-context window)."""
     t = C.DEFAULT_SKEW_THRESHOLD
     docs = gen_corpus(24, seed=5, giants=0) + [_dup_media_giant(t),
                                                 _sheet_giant(t)]
@@ -86,7 +88,7 @@ def test_giant_plan_runs_no_native_kernel_rule(spark, tmp_path):
     corpus_to_spark_df(spark, docs).write.parquet(src)
 
     out = _build_in_group(spark, spark.read.parquet(src), "giants")
-    assert _job_count(spark, "giants") <= 2
+    assert _job_count(spark, "giants") <= 1
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert len(re.findall(r"\bWindow\b", plan)) == 1
     rows = {r["doc_id"]: r.asDict() for r in out.collect()}
@@ -105,7 +107,7 @@ def test_oversize_only_batch_builds_with_probe_alone(spark, tmp_path):
     out = _build_in_group(spark, spark.read.parquet(src), "oversize-only",
                           max_doc_bytes=cap)
     assert _job_count(spark, "oversize-only") <= 1
-    assert "FlatMapGroupsInArrow" not in _plan_nodes(out)
+    assert "Window" not in _plan_nodes(out)
     rows = {r["doc_id"]: r.asDict() for r in out.collect()}
     assert len(rows) == len(docs) + 1
     assert rows.pop("big") == {"doc_id": "big", "spans": [], "n_spans": 0,
@@ -136,7 +138,7 @@ def test_gate_wins_over_every_route(spark, tmp_path):
     out = _build_in_group(spark, spark.read.parquet(src), "all-routes",
                           max_doc_bytes=cap)
     assert _job_count(spark, "all-routes") <= 2
-    assert "FlatMapGroupsInArrow" in _plan_nodes(out)
+    assert "Window" in _plan_nodes(out)
     leaves = out._jdf.queryExecution().sparkPlan().collectLeaves()
     assert [leaves.apply(i).getClass().getSimpleName()
             for i in range(leaves.size())].count("FileSourceScanExec") == 1

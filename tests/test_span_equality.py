@@ -11,10 +11,13 @@ import pytest
 
 from mivaa_pdf_extractor_spark.core import constants as C
 from mivaa_pdf_extractor_spark.core.kinds import make_kind, parse_kind
-from mivaa_pdf_extractor_spark.operators.extract import (extract_iter_arrow,
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from mivaa_pdf_extractor_spark.operators.extract import (INPUT_SCHEMA,
+                                                         extract_iter_arrow,
                                                          run_extract)
-from mivaa_pdf_extractor_spark.operators.skew import (_extract_bucket,
-                                                      _salted_spans,
+from mivaa_pdf_extractor_spark.operators.skew import (_extract_buckets,
+                                                      _split_giants,
                                                       run_extract_skewed)
 from mivaa_pdf_extractor_spark.oracle import extract_document
 from mivaa_pdf_extractor_spark.sources.synthetic import (_span,
@@ -132,20 +135,51 @@ def _sheet_giant(threshold):
     return {"doc_id": "edge-sheets", "spans": spans}
 
 
-@pytest.mark.spark
-def test_salted_buckets_hold_at_most_threshold_or_one_page(spark):
+def _split_rows(giants, threshold):
+    """The splitter's rows for ``giants``, as one Arrow batch."""
+    batch = pa.RecordBatch.from_pylist(giants,
+                                       schema=to_arrow_schema(INPUT_SCHEMA))
+    return pa.Table.from_batches(list(_split_giants(iter([batch]),
+                                                    threshold))
+                                 ).combine_chunks().to_batches()[0]
+
+
+def _join_buckets(rows):
+    """The salted plan's native join of bucket rows, in Python: offsets
+    shift by the earlier buckets' characters, spans concatenate in bucket
+    order, and the status follows the kernel's rule."""
+    docs = {}
+    for r in sorted(rows, key=lambda r: (r["doc_id"], r["bucket"])):
+        d = docs.setdefault(r["doc_id"], {"spans": [], "n_spans": 0,
+                                          "n_chars": 0})
+        d["spans"] += [dict(s, offset=s["offset"] + d["n_chars"])
+                       for s in r["spans"]]
+        d["n_spans"] += r["n_spans"]
+        d["n_chars"] += r["n_chars"]
+    for d in docs.values():
+        d["status"] = (C.STATUS_COMPLETED if d["n_chars"]
+                       else C.STATUS_NO_TEXT if d["n_spans"]
+                       else C.STATUS_COMPLETED_EMPTY)
+    return docs
+
+
+def test_salted_buckets_hold_at_most_threshold_or_one_page():
+    """A bucket holds whole pages in page order, so its size in input
+    spans is the sum of its pages'."""
     threshold = 2000
     giants = [_outlier_page_giant(threshold), _sparse_pages_giant(threshold),
               _renumbered_giant(seed=11)]
-    spans, _ = _salted_spans(corpus_to_spark_df(spark, giants), threshold)
-    buckets = {}
-    for r in spans.groupBy("doc_id", "bucket").count().collect():
-        buckets.setdefault(r["doc_id"], []).append(r["count"])
+    rows = _split_rows(giants, threshold).to_pylist()
     for g in giants:
         pages = Counter(parse_kind(s["kind"]).page for s in g["spans"])
-        sizes = buckets[g["doc_id"]]
+        own = [r for r in rows if r["doc_id"] == g["doc_id"]]
+        assert [r["bucket"] for r in own] == list(range(len(own)))
+        bucket_pages = [sorted({parse_kind(s["kind"]).page
+                                for s in r["spans"]}) for r in own]
+        in_order = [p for ps in bucket_pages for p in ps]
+        assert in_order == sorted(pages), g["doc_id"]
+        sizes = [sum(pages[p] for p in ps) for ps in bucket_pages]
         n = len(g["spans"])
-        assert sum(sizes) == n, g["doc_id"]
         assert len(sizes) >= 2, g["doc_id"]
         assert max(sizes) <= max(threshold, max(pages.values())), (
             g["doc_id"], sorted(sizes))
@@ -155,16 +189,17 @@ def test_salted_buckets_hold_at_most_threshold_or_one_page(spark):
             g["doc_id"], sorted(sizes))
 
 
-def test_salted_bucket_off_the_page_table_fails():
-    """A span whose page the collected page table does not cover reaches
-    the bucket kernel with a NULL bucket (left join) and fails it."""
-    table = pa.table({
-        "doc_id": ["d"], "pos": [0],
-        "kind": [make_kind("text", page=7, y=40, x=50)], "text": ["t"],
-        "ref": pa.array([None], pa.string()),
-        "bucket": pa.array([None], pa.int64())})
-    with pytest.raises(RuntimeError, match="page table"):
-        _extract_bucket(table, None)
+def test_mixed_giant_bucket_chunk_equals_oracle():
+    """Buckets of a sheet giant and of a sheetless one in one kernel
+    chunk: the sheetless buckets have no sheet rows, and stay off the
+    spread remap."""
+    threshold = 2000
+    giants = [_sheet_giant(threshold), _dup_media_giant(threshold)]
+    split = _split_rows(giants, threshold)
+    out = list(_extract_buckets(iter([split])))
+    assert len(out) == 1 and out[0].num_rows == split.num_rows
+    assert_equal(giants, _join_buckets(pa.Table.from_batches(out)
+                                       .to_pylist()))
 
 
 @pytest.mark.spark
